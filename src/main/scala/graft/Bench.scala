@@ -29,47 +29,6 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Two EXPECTED warning classes are silenced BY MESSAGE PATTERN — not
-    // by package level, so a genuinely NEW window- or RDD-layer warning
-    // in a future query stays visible in the bench log (round-11 ADVICE;
-    // the earlier package-wide ERROR level suppressed everything):
-    // (1) WindowExec's "No Partition Defined" — fired by the two audited
-    //     bounded global windows (Vocab.rankVocab over the Heaps-bounded
-    //     vocab, Sketches.histQuantiles over nBins cells); PlanAudit's
-    //     global-window gate pins that those windows sit above an
-    //     aggregation/top-k boundary, so the warning carries no signal
-    //     here — a REAL unbounded global window would fail the audit.
-    // (2) the RDD-layer locally-checkpointed-unpersist notice from the
-    //     iterative loops' two-frame localCheckpoint discipline
-    //     (unpersisting a superseded generation is deliberate).
-    try {
-      import org.apache.logging.log4j.core.{Filter, LoggerContext}
-      import org.apache.logging.log4j.core.config.LoggerConfig
-      import org.apache.logging.log4j.core.filter.RegexFilter
-      val ctx = org.apache.logging.log4j.LogManager
-        .getContext(false).asInstanceOf[LoggerContext]
-      val cfg = ctx.getConfiguration
-      Seq(
-        "org.apache.spark.sql.execution.window" ->
-          ".*No Partition Defined for Window operation.*",
-        "org.apache.spark.rdd" ->
-          ".*was locally checkpointed.*").foreach { case (logger, pattern) =>
-        val lc = new LoggerConfig(logger, org.apache.logging.log4j.Level.WARN, true)
-        lc.addFilter(RegexFilter.createFilter(
-          pattern, null, java.lang.Boolean.FALSE,
-          Filter.Result.DENY, Filter.Result.NEUTRAL))
-        cfg.addLogger(logger, lc)
-      }
-      ctx.updateLoggers()
-    } catch {
-      // filter construction is best-effort: losing it costs log noise,
-      // never correctness — fall back to the old package-level silence
-      case e: Exception =>
-        System.err.println(s"[bench] log filter setup failed ($e); package-level fallback")
-        Seq("org.apache.spark.sql.execution.window", "org.apache.spark.rdd")
-          .foreach(l => org.apache.logging.log4j.core.config.Configurator
-            .setLevel(l, org.apache.logging.log4j.Level.ERROR))
-    }
     // Warm the session (JVM JIT, codegen, parquet footer cache) with one
     // tiny untimed job so the alphabetically-first query doesn't absorb
     // startup cost and distort per-query numbers.

@@ -10,10 +10,14 @@ import org.apache.spark.sql.functions._
   * `/forecast/` flagship entry point (main.py:187-338).
   *
   * The reference serves ONE branch per HTTP request with ~16 Postgres
-  * round-trips (SURVEY.md §3.1). The engine computes the identical result for
-  * EVERY branch in one DataFrame DAG — a single request is a `filter` on the
-  * output; at 100 TB the percentage table stays bounded
-  * (|branches| x |move types| x 366) so every lookup join broadcasts.
+  * round-trips (SURVEY.md §3.1). [[dailyForecast]] and [[summarize]] compute
+  * the identical result for EVERY branch in one DataFrame DAG (the batch and
+  * oracle form); at 100 TB the percentage table stays bounded
+  * (|branches| x |move types| x 366) so every lookup join broadcasts. A
+  * single request ([[graft.api.Api.forecast]]) reads only its branch's
+  * bounded slice, runs the fallback chain on the driver
+  * ([[fallbackPctLocal]]) and shares the per-row column math
+  * ([[dailyColumns]], [[summaryColumns]]) with the set-oriented form.
   *
   * Determinism deviations (FIXTURES.md §4, intentional and documented):
   *   - `today` is an explicit parameter, not `datetime.now()` (main.py:215);
@@ -130,6 +134,22 @@ object Forecast {
           .otherwise("default"))
   }
 
+  /** Driver-side twin of [[fallbackPct]] for ONE (branch, move type):
+    * `slice` holds that pair's non-null (month, day, avg_percentage) rows
+    * for WHOLE months — the monthly level averages every row of a month
+    * it holds, exactly as [[Percentages.monthlyAvg]] does over the table.
+    * A date whose month the slice does not hold falls through to
+    * [[DefaultPct]].
+    */
+  def fallbackPctLocal(slice: Seq[(Int, Int, Double)]): LocalDate => Double = {
+    val dayLevel = slice.map { case (m, d, p) => (m, d) -> p }.toMap
+    val monthLevel = slice.groupMapReduce(_._1)(r => (r._3, 1))((a, b) => (a._1 + b._1, a._2 + b._2))
+      .map { case (m, (sum, n)) => m -> sum / n }
+    date => dayLevel.get((date.getMonthValue, date.getDayOfMonth))
+      .orElse(monthLevel.get(date.getMonthValue))
+      .getOrElse(DefaultPct)
+  }
+
   // -------------------------------------------------------------------
   // O25/O26: validation. Branch validity = membership in the model store
   // (main.py:200-201); move-type validity = membership in the percentages
@@ -242,6 +262,37 @@ object Forecast {
       moveType: Option[String],
       inputDate: LocalDate,
       today: LocalDate): DataFrame = {
+    val current = windowRows(model, inputDate, today)
+    val looked = moveType match {
+      case None =>
+        current
+          .withColumn("input_pct", lit(NoMoveTypePct))
+          .withColumn("hist_avg", lit(null).cast("double"))
+      case Some(mt) =>
+        // the INPUT-date percentage scales ALL days (main.py:239-243, :254);
+        // the PER-DAY percentage only feeds the comment (main.py:264) —
+        // the reference's subtlest serving quirk, preserved.
+        val inputReq = current
+          .withColumn("move_type", lit(mt))
+          .withColumn("month", lit(inputDate.getMonthValue.toLong))
+          .withColumn("day", lit(inputDate.getDayOfMonth.toLong))
+        val withInputPct = fallbackPct(inputReq, pct)
+          .withColumnRenamed("effective_pct", "input_pct")
+          .drop("day_pct", "month_pct", "fallback_level", "month", "day")
+        val dayReq = withInputPct
+          .withColumn("month", month(col("ds")).cast("long"))
+          .withColumn("day", dayofmonth(col("ds")).cast("long"))
+        fallbackPct(dayReq, pct)
+          .withColumnRenamed("effective_pct", "hist_avg")
+          .drop("day_pct", "month_pct", "fallback_level", "month", "day")
+    }
+    dailyColumns(looked, moveType)
+  }
+
+  /** The model rows of the clamped window around `inputDate`: a per-day
+    * model is filtered to the window, a flat one is exploded over it.
+    */
+  def windowRows(model: DataFrame, inputDate: LocalDate, today: LocalDate): DataFrame = {
     val (start, end) = windowClamp(inputDate, today)
     val perDay =
       if (model.columns.contains("ds"))
@@ -254,42 +305,34 @@ object Forecast {
           lit(java.sql.Date.valueOf(end)))
     // O12 (main.py:234): drop days before today — vacuous by clamp
     // construction (start >= today always) but kept for fidelity.
-    val current = perDay.filter(col("ds") >= lit(java.sql.Date.valueOf(today)))
-    // O13/O14 (main.py:235-236)
-    val counted = current.withColumn("branch_forecast", clipRoundCount(col("yhat_upper")))
+    perDay.filter(col("ds") >= lit(java.sql.Date.valueOf(today)))
+  }
 
+  /** The per-row daily columns (O13/O14, O40-O44), shared by the
+    * set-oriented [[dailyForecast]] and the single-branch driver path of
+    * [[graft.api.Api.forecast]]. `looked` carries (branch, ds, yhat_upper)
+    * plus the looked-up `input_pct` (the input date's percentage; 100 with
+    * no move type) and `hist_avg` (the day's percentage; null with no move
+    * type). Adds branch_forecast, predicted_moves, implied_pct, pct_diff,
+    * comment_class, phrase_id and comment. Every column is a per-row
+    * expression, so over a local relation Catalyst evaluates them on the
+    * driver without a job.
+    */
+  def dailyColumns(looked: DataFrame, moveType: Option[String]): DataFrame = {
+    // O13/O14 (main.py:235-236)
+    val scaled = looked
+      .withColumn("branch_forecast", clipRoundCount(col("yhat_upper")))
+      .withColumn("predicted_moves", pyRoundAgg(col("input_pct") / 100.0 * col("branch_forecast")))
+      .withColumn("implied_pct", safeSharePct(col("predicted_moves"), col("branch_forecast")))
     moveType match {
       case None =>
-        counted
-          .withColumn("input_pct", lit(NoMoveTypePct))
-          .withColumn("predicted_moves", pyRoundAgg(col("input_pct") / 100.0 * col("branch_forecast")))
-          .withColumn("hist_avg", lit(null).cast("double"))
-          .withColumn("implied_pct", safeSharePct(col("predicted_moves"), col("branch_forecast")))
+        scaled
           .withColumn("pct_diff", lit(null).cast("double"))
           .withColumn("comment_class", lit("no_move_type"))
           .withColumn("phrase_id", lit(0L))
           .withColumn("comment", lit(NoMoveTypePhrase))
       case Some(mt) =>
-        // the INPUT-date percentage scales ALL days (main.py:239-243, :254);
-        // the PER-DAY percentage only feeds the comment (main.py:264) —
-        // the reference's subtlest serving quirk, preserved.
-        val inputReq = counted
-          .withColumn("move_type", lit(mt))
-          .withColumn("month", lit(inputDate.getMonthValue.toLong))
-          .withColumn("day", lit(inputDate.getDayOfMonth.toLong))
-        val withInputPct = fallbackPct(inputReq, pct)
-          .withColumnRenamed("effective_pct", "input_pct")
-          .drop("day_pct", "month_pct", "fallback_level", "month", "day")
-        val scaled = withInputPct
-          .withColumn("predicted_moves", pyRoundAgg(col("input_pct") / 100.0 * col("branch_forecast")))
-        val dayReq = scaled
-          .withColumn("month", month(col("ds")).cast("long"))
-          .withColumn("day", dayofmonth(col("ds")).cast("long"))
-        val withHist = fallbackPct(dayReq, pct)
-          .withColumnRenamed("effective_pct", "hist_avg")
-          .drop("day_pct", "month_pct", "fallback_level", "month", "day")
-        withHist
-          .withColumn("implied_pct", safeSharePct(col("predicted_moves"), col("branch_forecast")))
+        scaled
           .withColumn("pct_diff", col("implied_pct") - col("hist_avg"))
           .withColumn("comment_class", classifyDiff(col("pct_diff")))
           .withColumn("phrase_id", phraseId(col("branch"), col("ds")))
@@ -341,15 +384,25 @@ object Forecast {
   /** O36/O37 + summary classification (main.py:290-319): per-branch totals,
     * average daily moves, period share vs historical period average.
     */
-  def summarize(daily: DataFrame, moveType: Option[String]): DataFrame = {
-    val agg = daily
-      .groupBy(col("branch"))
-      .agg(
-        sum(col("predicted_moves")).as("total_predicted_moves"),
-        sum(col("branch_forecast")).as("total_branch_forecast"),
-        count(lit(1)).as("n_days"),
-        avg(col("hist_avg")).as("hist_period_avg"),
-        first(col("input_pct")).as("input_pct"))
+  def summarize(daily: DataFrame, moveType: Option[String]): DataFrame =
+    summaryColumns(
+      daily
+        .groupBy(col("branch"))
+        .agg(
+          sum(col("predicted_moves")).as("total_predicted_moves"),
+          sum(col("branch_forecast")).as("total_branch_forecast"),
+          count(lit(1)).as("n_days"),
+          avg(col("hist_avg")).as("hist_period_avg"),
+          first(col("input_pct")).as("input_pct")),
+      moveType)
+
+  /** The summary's derived columns over its per-branch aggregate
+    * (total_predicted_moves, total_branch_forecast, n_days,
+    * hist_period_avg, input_pct), shared by [[summarize]] and the driver
+    * path of [[graft.api.Api.forecast]]: average_daily_moves, current_pct,
+    * period_avg, period_diff and summary_class.
+    */
+  def summaryColumns(agg: DataFrame, moveType: Option[String]): DataFrame = {
     val withAvgs = agg
       .withColumn("average_daily_moves",
         pyRound(col("total_predicted_moves") / col("n_days")))

@@ -1,21 +1,39 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+import java.time.LocalDate
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.api.{Api, ForecastInput}
-import graft.operators.{Forecast, Percentages}
-import graft.sources.Tables
+import graft.api.{Api, DailyForecast, ForecastInput, ForecastSummary}
+import graft.forecast.SeasonalModel
+import graft.operators.{CrossRound, Forecast, Percentages}
+import graft.sources.{Tables, VersionedTable}
 
 /** Typed API boundary tests: request validation semantics (ValueError
-  * analogs), silent move-type degrade, typed results.
+  * analogs), silent move-type degrade, typed results; the Spark jobs one
+  * request runs and snapshot isolation as `/forecast/` is served; and the
+  * single-branch answer against the set-oriented composition.
   */
 class ApiSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
+  import spark.implicits._
 
   val sf = "/root/testdata/sf0.001"
   def pct = Percentages.percentages(spark, sf)
   def model = Forecast.baselineUpper(Tables.forecastingData(spark, sf))
+
+  /** Bounded model state served as a local relation (the model-store posture). */
+  def local(df: DataFrame): DataFrame = spark.createDataFrame(df.collect().toSeq.asJava, df.schema)
 
   test("forecast returns typed daily and summary rows for the requested branch") {
     val (daily, summary) = Api.forecast(
@@ -35,6 +53,26 @@ class ApiSpec extends AnyFunSuite {
     assert(e.getMessage.contains("YYYY-MM-DD"))
   }
 
+  test("one-digit month and day parse as the zero-padded date, as pd.to_datetime does") {
+    def days(date: String) =
+      Api.forecast(spark, ForecastInput(date, "B7", Some("click")), model, pct, ServingQueries.Today)
+        ._1.collect().toSeq.sortBy(_.ds.toString)
+    val padded = days("2024-01-05")
+    assert(padded.nonEmpty)
+    Seq("2024-1-5", "2024-01-5", "2024-1-05").foreach(d => assert(days(d) === padded, d))
+  }
+
+  test("malformed and impossible dates raise the ValueError analog") {
+    Seq(
+      "2025/06/01", "20250601", "025-06-01", "2025-006-01", "2025-13-01", "2025-06-31",
+      "2025-02-29", " 2025-06-01", "2025-06-01 ", "2025-06-01T00:00").foreach { d =>
+      val e = intercept[IllegalArgumentException] {
+        Api.forecast(spark, ForecastInput(d, "B7", None), model, pct, ServingQueries.Today)
+      }
+      assert(e.getMessage === "Invalid date format. Use YYYY-MM-DD (e.g., '2025-06-30')", d)
+    }
+  }
+
   test("date beyond the horizon cap raises") {
     val e = intercept[IllegalArgumentException] {
       Api.forecast(spark, ForecastInput("2025-08-01", "B7", None), model, pct, ServingQueries.Today)
@@ -49,5 +87,201 @@ class ApiSpec extends AnyFunSuite {
     val days = daily.collect()
     assert(days.forall(_.comment_class == "no_move_type"))
     assert(days.forall(d => d.predicted_moves == d.branch_forecast))
+  }
+
+  // -------------------- serving: jobs per request, snapshot isolation -----
+  // The percentages read from a month-partitioned snapshot, the model as a
+  // local relation, as `/forecast/` is served.
+
+  val request = ForecastInput("2024-01-29", "B7", Some("click")) // window 2024-01-26 .. 2024-02-01
+
+  lazy val localModel: DataFrame = local(Forecast.baselineUpper(Tables.forecastingData(spark, sf)))
+
+  def newTable(): VersionedTable = {
+    val table = VersionedTable(Files.createTempDirectory("api-serving").resolve("pct").toString)
+    Percentages.upsertPercentagesSnapshot(spark, Percentages.percentages(spark, sf), table)
+    table
+  }
+
+  def pctAt(table: VersionedTable, v: Long): DataFrame =
+    table.readVersion(spark, v).withColumn("month", col("month").cast("long"))
+
+  def answer(table: VersionedTable, v: Long, input: ForecastInput = request): (Seq[String], Seq[String]) = {
+    val (daily, summary) = Api.forecast(spark, input, localModel, pctAt(table, v), ServingQueries.Today)
+    (daily.collect().map(_.toString).sorted.toSeq, summary.collect().map(_.toString).toSeq)
+  }
+
+  /** The Spark jobs `body` submits from this thread. */
+  def jobsIn[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val key = "graft.spec.jobProbe"
+    val tag = java.util.UUID.randomUUID().toString
+    val n = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(key) == tag) n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(key, tag)
+    try {
+      val out = body
+      org.apache.spark.GraftBusBridge.drain(sc)
+      (out, n.get)
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("one request with a move type runs at most 4 Spark jobs; collecting its results runs none") {
+    val table = newTable()
+    val pct = pctAt(table, 0L)
+    Seq(request, request.copy(move_type = Some("NoSuchType"))).foreach { input =>
+      answer(table, 0L, input) // warm
+      val ((daily, summary), callJobs) = jobsIn(Api.forecast(spark, input, localModel, pct, ServingQueries.Today))
+      val (_, collectJobs) = jobsIn((daily.collect(), summary.collect()))
+      assert(daily.collect().nonEmpty && summary.collect().length === 1, input)
+      assert(callJobs > 0, "the probe must see the request's reads")
+      assert(callJobs + collectJobs <= 4, s"$input ran $callJobs + $collectJobs jobs")
+      assert(collectJobs === 0, s"$input: collecting the results ran $collectJobs jobs")
+    }
+  }
+
+  test("a reader pinned to a snapshot sees it whole while an upsert publishes the next one") {
+    val table = newTable()
+    val quiet0 = answer(table, 0L)
+    val updates = Percentages.percentages(spark, sf)
+      .withColumn("avg_percentage", lit(100.0) - col("avg_percentage"))
+    val seen = Seq.newBuilder[(Long, (Seq[String], Seq[String]))]
+    seen += 0L -> answer(table, 0L)
+    val writer = Future(Percentages.upsertPercentagesSnapshot(spark, updates, table))
+    while (!writer.isCompleted) {
+      val v = table.latestVersion().get
+      seen += v -> answer(table, v)
+    }
+    val published = Await.result(writer, 5.minutes)
+    assert(published === 1L)
+    val quiet1 = answer(table, 1L)
+    assert(quiet1 !== quiet0, "the upsert must change the answer, or this spec proves nothing")
+    seen.result().foreach { case (v, got) =>
+      assert(got === (if (v == 0L) quiet0 else quiet1), s"read at version $v")
+    }
+    // a reader pinned to v keeps answering from v after v + 1 is published
+    assert(answer(table, 0L) === quiet0)
+  }
+
+  // -------------------- differential: Api vs the set-oriented composition --
+  // `Api.forecast` answers one request from its branch's bounded slice on
+  // the driver. These tests check it, typed row for typed row, against the
+  // composition that serves every branch at once (`dailyForecast` +
+  // `summarize` + `CrossRound.ra`, then the branch's rows) over the sf0.01
+  // fixture, with a flat and a per-day model.
+
+  /** The sf0.01 fixture, beside `sf`. */
+  val sf01: String = Paths.get(sf).resolveSibling("sf0.01").toString
+  val today: LocalDate = ServingQueries.Today // 2024-01-25; the fixture's events end 2024-01-30
+  val crossMonth: LocalDate = ServingQueries.InputDate // window 2024-01-28 .. 2024-02-03
+  /** At, inside and past the 3-day edges of today and of the horizon cap. */
+  val edgeDates: Seq[LocalDate] = Seq(
+    "2024-01-20", "2024-01-25", "2024-01-28", "2024-01-29", "2024-02-10",
+    "2025-07-27", "2025-07-28", "2025-07-31").map(LocalDate.parse)
+  val unknownBranch = "B999"
+
+  lazy val pct01: DataFrame = Percentages.percentagesCheckpointed(spark, sf01)
+  lazy val moveTypes: Seq[String] = pct01.select("move_type").distinct().as[String].collect().sorted.toSeq
+  lazy val branches: Seq[String] = pct01.select("branch").distinct().as[String].collect().sorted.toSeq
+
+  lazy val flat: DataFrame = local(Forecast.baselineUpper(Tables.forecastingData(spark, sf01)))
+  lazy val fitted: DataFrame = local(SeasonalModel.fit(
+    Tables.forecastingDataAll(spark, sf01).withColumnRenamed("cnt", "y"),
+    ServingQueries.FixtureModelSpec, LocalDate.parse(SparkEntry.FixtureTrainCutoff)))
+  def perDay(date: LocalDate): DataFrame = {
+    val (s, e) = Forecast.windowClamp(date, today)
+    val days = Forecast.explodeWindow(
+      fitted.select("branch"), lit(java.sql.Date.valueOf(s)), lit(java.sql.Date.valueOf(e)))
+    local(SeasonalModel.predict(fitted, days, ServingQueries.FixtureModelSpec).select("branch", "ds", "yhat_upper"))
+  }
+
+  case class Case(branch: String, date: LocalDate, moveType: Option[String])
+
+  /** Every branch (and an unknown one) on the cross-month window and on one
+    * edge date, the edge dates taken in turn so each is met by over a dozen
+    * branches; a sample of branches under every other move type, no move
+    * type and an unknown one.
+    */
+  lazy val cases: Seq[Case] = {
+    val mt = Some(ServingQueries.MoveType)
+    val byBranch = (branches :+ unknownBranch).zipWithIndex.flatMap { case (b, i) =>
+      Seq(Case(b, crossMonth, mt), Case(b, edgeDates(i % edgeDates.size), mt))
+    }
+    val types = moveTypes.map(Option(_)).filterNot(_ == mt) ++ Seq(None, Some("NoSuchType"))
+    byBranch ++ types.flatMap(t => (branches.take(3) :+ unknownBranch).map(Case(_, crossMonth, t)))
+  }
+
+  /** The set-oriented composition, grouped by branch. Filtering to one
+    * branch before `summarize` equals taking its group after: the summary
+    * groups by branch.
+    */
+  def reference(model: DataFrame, date: LocalDate, moveType: Option[String])
+      : (Map[String, Seq[DailyForecast]], Map[String, Seq[ForecastSummary]]) = {
+    val effMoveType = moveType.filter(moveTypes.contains)
+    val daily = Forecast.dailyForecast(model, pct01, effMoveType, date, today)
+    val summary = Forecast.summarize(daily, effMoveType)
+      .withColumn("current_pct", CrossRound.ra(col("current_pct"), 6))
+      .withColumn("period_avg", CrossRound.ra(col("period_avg"), 6))
+    (
+      daily.select("branch", "ds", "branch_forecast", "predicted_moves", "comment_class", "comment")
+        .as[DailyForecast].collect().toSeq.groupBy(_.branch),
+      summary.select(
+          "branch", "total_predicted_moves", "total_branch_forecast",
+          "average_daily_moves", "current_pct", "period_avg", "summary_class")
+        .as[ForecastSummary].collect().toSeq.groupBy(_.branch))
+  }
+
+  def mismatches(model: LocalDate => DataFrame): Seq[String] =
+    cases.groupBy(c => (c.date, c.moveType)).toSeq.flatMap { case ((date, mt), cs) =>
+      val m = model(date)
+      val (refDaily, refSummary) = reference(m, date, mt)
+      cs.flatMap { c =>
+        val (daily, summary) = Api.forecast(spark, ForecastInput(date.toString, c.branch, mt), m, pct01, today)
+        val got = (daily.collect().toSeq.sortBy(_.ds.getTime), summary.collect().toSeq)
+        val want = (refDaily.getOrElse(c.branch, Nil).sortBy(_.ds.getTime), refSummary.getOrElse(c.branch, Nil))
+        if (got == want) None else Some(s"$c:\n  api       $got\n  reference $want")
+      }
+    }
+
+  test("flat baselineUpper model: Api.forecast equals the set-oriented composition") {
+    val bad = mismatches(_ => flat)
+    assert(bad.isEmpty, s"${bad.size} mismatching cases, first:\n${bad.take(3).mkString("\n")}")
+  }
+
+  test("per-day SeasonalModel.predict model: Api.forecast equals the set-oriented composition") {
+    val bad = mismatches(perDay)
+    assert(bad.isEmpty, s"${bad.size} mismatching cases, first:\n${bad.take(3).mkString("\n")}")
+  }
+
+  test("the cases hit every fallback level: day, month and default") {
+    val keys = pct01.select(col("branch"), col("move_type"), col("month").cast("int"), col("day").cast("int"))
+      .as[(String, String, Int, Int)].collect()
+    val dayKeys = keys.toSet
+    val monthKeys = keys.map(k => (k._1, k._2, k._3)).toSet
+    val levels = for {
+      c <- cases if branches.contains(c.branch)
+      mt <- c.moveType.filter(moveTypes.contains).toSeq
+      (s, e) = Forecast.windowClamp(c.date, today)
+      d <- c.date +: Iterator.iterate(s)(_.plusDays(1)).takeWhile(!_.isAfter(e)).toSeq
+    } yield
+      if (dayKeys((c.branch, mt, d.getMonthValue, d.getDayOfMonth))) "day"
+      else if (monthKeys((c.branch, mt, d.getMonthValue))) "month"
+      else "default"
+    assert(levels.toSet === Set("day", "month", "default"))
+  }
+
+  test("an unknown branch returns two empty Datasets") {
+    Seq(Some(ServingQueries.MoveType), None, Some("NoSuchType")).foreach { mt =>
+      val (daily, summary) = Api.forecast(
+        spark, ForecastInput(crossMonth.toString, unknownBranch, mt), flat, pct01, today)
+      assert(daily.collect().isEmpty && summary.collect().isEmpty, s"move type $mt")
+    }
   }
 }
