@@ -1,5 +1,7 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 object Bench {
   /** One query's measurements. `warm` is the headline: the min over the
     * suite's warm reps AND (for the slowest queries) the quiesced tail
@@ -8,27 +10,21 @@ object Bench {
     * `gc` is the winning rep's GC fraction (collector time / wall);
     * `cores` its effective cores (process-CPU sec / wall sec — collapses
     * under host contention). `tail` is the quiesced re-run (−1 when the
-    * query wasn't in the tail set).
+    * query wasn't in the tail set). `compiles` / `compileMs` are the
+    * winning rep's codegen compiles and their compile time.
     */
   private final case class Timing(
       warm: Double, cold: Double, warmSlow: Double, cores: Double,
       gc: Double, reps: Int, warmSuite: Double, tail: Double,
-      coldCores: Double, coldGc: Double)
+      coldCores: Double, coldGc: Double, compiles: Long, compileMs: Double)
+  /** One rep: wall sec, effective cores, GC fraction, and the codegen
+    * compiles (count, ms) it ran.
+    */
+  private final case class Rep(wall: Double, cores: Double, gc: Double, compiles: Long, compileMs: Double)
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // INT64-micros timestamp writes (see GraftSession): INT96 carries
-      // no usable footer stats for the snapshot store's timestamp rung
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate(s"local[$cpus]", shufflePartitions = cpus.toInt)
     // Warm the session (JVM JIT, codegen, parquet footer cache) with one
     // tiny untimed job so the alphabetically-first query doesn't absorb
     // startup cost and distort per-query numbers.
@@ -96,16 +92,18 @@ object Bench {
       nameFilter.forall(_.exists(n.contains))
     }
     val fnOf = selected.toMap
-    // (wall sec, effective cores, gc fraction) for one rep of `fn`
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Double, Double) = {
+    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Rep = {
       val g0 = gcMillis()
       val c0 = procCpuSec()
+      val n0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val ns0 = CodeGenerator.compileTime
       val t0 = System.nanoTime()
       fn(spark, sfDir).count()
       val wall = (System.nanoTime() - t0) / 1e9
       val cores = if (wall > 0) (procCpuSec() - c0) / wall else 0.0
       val gcFrac = if (wall > 0) ((gcMillis() - g0) / 1000.0) / wall else 0.0
-      (wall, cores, gcFrac)
+      Rep(wall, cores, gcFrac, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - n0,
+        (CodeGenerator.compileTime - ns0) / 1e6)
     }
     // Queries that materialize intermediates (localCheckpoint /
     // persist) leave their RDDs cached forever; across a 60+-query
@@ -128,7 +126,8 @@ object Bench {
         // re-measured in-process (a re-run of a warm JVM isn't cold), so
         // the defense for cold is per-rep evidence — effective cores and
         // GC fraction — plus a run-level disclaimer (see cold_unadjudicated)
-        val (cold, coldCores, coldGc) = once(fn)
+        val coldRep = once(fn)
+        val cold = coldRep.wall
         dropCached()
         val w1 = once(fn)
         dropCached()
@@ -142,7 +141,7 @@ object Bench {
         // samples. reps ships in the detail sidecar so an adjudicator can
         // see which queries needed the extra sample.
         var reps = List(w1, w2)
-        val (hi, lo) = (math.max(w1._1, w2._1), math.min(w1._1, w2._1))
+        val (hi, lo) = (math.max(w1.wall, w2.wall), math.min(w1.wall, w2.wall))
         if (hi > 2.0 * lo && hi - lo > 0.2) {
           dropCached()
           reps = reps :+ once(fn)
@@ -154,7 +153,7 @@ object Bench {
         // wall collecting garbage, the number measures the collector,
         // not the query — force a full GC to drain the pressure and take
         // one extra rep.
-        if (reps.minBy(_._1)._3 > 0.25 && reps.minBy(_._1)._1 > 0.2) {
+        if (reps.minBy(_.wall).gc > 0.25 && reps.minBy(_.wall).wall > 0.2) {
           System.gc()
           dropCached()
           reps = reps :+ once(fn)
@@ -167,7 +166,7 @@ object Bench {
         // re-run 4.9s) and agreeing with itself proves nothing. Take up
         // to two extra reps; stop as soon as one lands back under cold.
         var extra = 0
-        while (reps.map(_._1).min > 1.5 * cold && cold > 0.5 && extra < 2) {
+        while (reps.map(_.wall).min > 1.5 * cold && cold > 0.5 && extra < 2) {
           dropCached()
           reps = reps :+ once(fn)
           extra += 1
@@ -175,14 +174,14 @@ object Bench {
         // headline = fastest warm rep; its effective-cores/gc ride along
         // as the per-query sentinels (the SLOWER reps' values would mix
         // the contention we're defending against into the number)
-        val (warm, cores, gc) = reps.minBy(_._1)
-        name -> Timing(warm, cold, reps.map(_._1).max, cores, gc, reps.length,
-          warm, -1.0, coldCores, coldGc)
+        val best = reps.minBy(_.wall)
+        name -> Timing(best.wall, cold, reps.map(_.wall).max, best.cores, best.gc, reps.length,
+          best.wall, -1.0, coldRep.cores, coldRep.gc, best.compiles, best.compileMs)
       } catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
           failed ::= name
-          name -> Timing(-1.0, -1.0, -1.0, 0.0, 0.0, 0, -1.0, -1.0, 0.0, 0.0)
+          name -> Timing(-1.0, -1.0, -1.0, 0.0, 0.0, 0, -1.0, -1.0, 0.0, 0.0, 0L, 0.0)
       } finally dropCached() // ALSO on failure: a query that dies after
       // materializing checkpoints would otherwise leak its RDDs into
       // every subsequent query's timings — the interference this
@@ -210,15 +209,13 @@ object Bench {
         try {
           System.gc(); Thread.sleep(300)
           dropCached()
-          val (tw, tc, tg) = once(fnOf(name))
+          val r = once(fnOf(name))
           dropCached()
-          val better = tw < t.warm
-          name -> t.copy(
-            warm = math.min(t.warm, tw),
-            cores = if (better) tc else t.cores,
-            gc = if (better) tg else t.gc,
-            reps = t.reps + 1,
-            tail = tw)
+          val tailed = t.copy(reps = t.reps + 1, tail = r.wall)
+          if (r.wall < t.warm)
+            name -> tailed.copy(warm = r.wall, cores = r.cores, gc = r.gc,
+              compiles = r.compiles, compileMs = r.compileMs)
+          else name -> tailed
         } catch {
           case e: Throwable => // suite numbers stand; tail stays unmarked
             System.err.println(s"[bench] tail $name failed: ${e.getMessage}")
@@ -404,7 +401,7 @@ object Bench {
     val detail = results
       .map { case (k, t) =>
         val tailStr = if (t.tail >= 0) ms(t.tail) else "null"
-        s"""    "$k": {"warm": ${ms(t.warm)}, "cold": ${ms(t.cold)}, "warm_slow": ${ms(t.warmSlow)}, "warm_suite": ${ms(t.warmSuite)}, "tail": $tailStr, "cores": ${ms(t.cores)}, "gc": ${ms(t.gc)}, "cold_cores": ${ms(t.coldCores)}, "cold_gc": ${ms(t.coldGc)}, "reps": ${t.reps}, "suspect": ${isSuspect(t)}, "cold_suspect": ${isColdSuspect(t)}}"""
+        s"""    "$k": {"warm": ${ms(t.warm)}, "cold": ${ms(t.cold)}, "warm_slow": ${ms(t.warmSlow)}, "warm_suite": ${ms(t.warmSuite)}, "tail": $tailStr, "cores": ${ms(t.cores)}, "gc": ${ms(t.gc)}, "cold_cores": ${ms(t.coldCores)}, "cold_gc": ${ms(t.coldGc)}, "reps": ${t.reps}, "compiles": ${t.compiles}, "compile_ms": ${ms(t.compileMs)}, "suspect": ${isSuspect(t)}, "cold_suspect": ${isColdSuspect(t)}}"""
       }
       .mkString(
         s"""{\n  "sf": "$sfDir",\n  "total_warm": ${ms(total)},\n  "total_cold": ${ms(coldTotal)},\n  "n": ${results.length},\n  "failed": $errs,\n""" +
