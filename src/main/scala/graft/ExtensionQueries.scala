@@ -984,12 +984,11 @@ object ExtensionQueries {
     // files whose [min, max] provably excludes the predicate, and the
     // exact filter still applies to the survivors. The Delta/Iceberg
     // min/max skipping move, completing the pruning ladder: partitions
-    // (hive dirs) → FILES (this) → row groups (x64 z-order). Round 14
-    // re-expressed the read as the NATURAL plain read().filter() — the
-    // pushed predicate reaches the SnapshotFileIndex at plan time and
-    // runs the same prune walk the old readBetween entry point did
-    // (round-13 ask #1: skipping integrated into the read path, not an
-    // API the caller must know). The fixture commits range-partitioned
+    // (hive dirs) → FILES (this) → row groups (x64 z-order). The read
+    // is a plain read().filter(): the pushed predicate reaches the
+    // SnapshotFileIndex at plan time and runs the prune walk there
+    // (skipping integrated into the read path, not an API the caller
+    // must know). The fixture commits range-partitioned
     // files (disjoint doc_id spans → stats actually prune) plus an
     // appendCommit batch, so stats carry across version directories
     // inside the hash gate; VersionedTableSpec pins that files are

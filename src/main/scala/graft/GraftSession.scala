@@ -76,9 +76,9 @@ object GraftSession {
       // Write timestamps as INT64 micros, not the deprecated INT96 Spark
       // still defaults to for Hive compat: INT96 chunks carry NO usable
       // footer statistics, which silently turns the snapshot store's
-      // timestamp file-skipping (readBetweenTimestamps and the
-      // SnapshotFileIndex's TIMESTAMP translation, both built on the
-      // INT64-micros `l` rows) into keep-everything. Micros is what
+      // timestamp file-skipping (the SnapshotFileIndex's TIMESTAMP
+      // translation, built on the INT64-micros `l` rows) into
+      // keep-everything. Micros is what
       // Delta/Iceberg write and every modern reader (and DuckDB) speaks.
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)

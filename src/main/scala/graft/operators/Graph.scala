@@ -250,13 +250,19 @@ object Graph {
     // expressions (the audited HOF-in-Filter class; the gate caught
     // this operator's first draft). The barrier is also the
     // multi-consumer fix: e feeds degrees, both orientation sides and
-    // the closing join — four consumers of one dedup shuffle.
+    // the closing join — four consumers of one dedup shuffle. It is
+    // EAGER, materialized here on the calling thread: a lazy checkpoint
+    // is written by whichever job first finishes computing it, and with
+    // a broadcast and a shuffle of this query reading e at once, the
+    // broadcast thread's checkpoint write deadlocked against the DAG
+    // scheduler's cache-location lookup (each held the lock the other
+    // wanted: RDDCheckpointData's and the RDD's own).
     val e = pairs
       .select(
         least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .distinct()
-      .localCheckpoint(false)
+      .localCheckpoint(true)
       .filter(col("a") =!= col("b") && col("a").isNotNull && col("b").isNotNull)
     val und = e.unionByName(e.select(col("b").as("a"), col("a").as("b")))
     val deg = und.groupBy(col("a").as("node")).agg(count(lit(1)).as("deg"))

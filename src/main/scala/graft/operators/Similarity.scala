@@ -1104,9 +1104,10 @@ object Similarity {
     val cellSet = routing.map(_._2).distinct.sorted.toSeq
     import spark.implicits._
     val routed = routing.toSeq.toDF("q_id", "cell")
-    // pruned read: only files whose cell range meets a probed cell are
-    // opened; the exact IN filter re-applies on the survivors
-    val idx = table.readIn(spark, "cell", cellSet)
+    // pruned read: the pushed IN reaches the snapshot's file index, so
+    // only files whose cell range meets a probed cell are opened; the
+    // exact filter re-applies on the survivors
+    val idx = table.read(spark).filter(col("cell").isin(cellSet: _*))
     val wPool = Window.partitionBy(col("q_id"))
       .orderBy(col("hamming"), col("vec_id"))
     val wRank = Window.partitionBy(col("q_id"))

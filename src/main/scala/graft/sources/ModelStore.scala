@@ -16,7 +16,9 @@ import org.apache.spark.sql.SparkSession
   * under `SPARK_GRAFT_MODEL_DIR` (default `/tmp/graft_models`). The key
   * digests the source dir PATH plus every parquet file's (name, size,
   * mtime) — a regenerated fixture therefore misses the cache and refits
-  * rather than silently serving a model trained on vanished data. Model
+  * rather than silently serving a model trained on vanished data, and
+  * the key also digests [[StoreFormat]], so a table written in an older
+  * store format is never read. Model
   * state is bounded by construction (the Similarity.trainingSample
   * argument: centroids/codebooks are c x dim driver arrays, merges and
   * weights are O(vocab)), so the load-side collect is a few KB — never
@@ -39,10 +41,17 @@ object ModelStore {
   def defaultRoot: String =
     sys.env.getOrElse("SPARK_GRAFT_MODEL_DIR", "/tmp/graft_models")
 
-  /** Digest of the source dir identity: absolute path + (name, size,
-    * mtime) of every parquet file directly inside it. Cheap (pure
-    * metadata, no Spark job) and strong enough that a regenerated
-    * fixture — same path, new bytes — changes the key.
+  /** Snapshot-store format the key commits to. Format 2 reads only
+    * snapshots that carry a `_manifest`; a model table written before
+    * that (format 1, keyed without this constant) would now fail to
+    * read, so it gets a different key and is refit instead, never read.
+    */
+  val StoreFormat: Int = 2
+
+  /** Digest of the store format and the source dir identity: absolute
+    * path + (name, size, mtime) of every parquet file directly inside
+    * it. Cheap (pure metadata, no Spark job) and strong enough that a
+    * regenerated fixture — same path, new bytes — changes the key.
     */
   def sourceKey(dir: String): String = {
     import scala.jdk.CollectionConverters._
@@ -59,7 +68,7 @@ object ModelStore {
         finally s.close()
       } else Seq.empty
     val digest = java.security.MessageDigest.getInstance("SHA-256")
-      .digest((p.toAbsolutePath.toString +: files).mkString("\n")
+      .digest((s"format=$StoreFormat" +: p.toAbsolutePath.toString +: files).mkString("\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     digest.take(8).map(b => f"${b & 0xFF}%02x").mkString
   }

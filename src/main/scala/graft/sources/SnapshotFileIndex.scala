@@ -7,15 +7,15 @@ import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory
 import org.apache.spark.sql.types._
 
 /** [[FileIndex]] over one published [[VersionedTable]] snapshot — the
-  * round-13 ask #1 integration that turns the stats/bloom file-skipping
-  * ladder from "an API the caller must know" (`readBetween`/`readIn`)
-  * into "how the table reads": Catalyst's FileSourceStrategy hands
-  * [[listFiles]] the query's PUSHED data filters, supported conjuncts
-  * translate into the SAME prune walk the dedicated entry points run —
-  * the min/max rungs, the point-set rung, the Bloom rung, composed by
-  * intersection across conjuncts — and only the surviving manifest
-  * files become scan tasks. Everything else about execution is stock
-  * Spark (ParquetFileFormat, vectorized reader, whole-stage codegen):
+  * only place the stats/bloom file-skipping ladder runs on a read, so
+  * skipping is how the table reads rather than an API the caller must
+  * know: Catalyst's FileSourceStrategy hands [[listFiles]] the query's
+  * PUSHED data filters, supported conjuncts translate into the table's
+  * `pruneFiles*` rungs — the min/max rungs, the point-set rung, the
+  * Bloom rung, the null rung, composed by intersection across
+  * conjuncts — and only the surviving manifest files become scan
+  * tasks. Everything else about execution is stock Spark
+  * (ParquetFileFormat, vectorized reader, whole-stage codegen):
   * only the LISTING is ours, exactly where Delta/Iceberg integrate
   * their data skipping (a FileIndex below the optimizer, receiving
   * pushed data filters).
@@ -127,8 +127,8 @@ final class SnapshotFileIndex(
   override def sizeInBytes: Long = statuses.map(_._2.getLen).sum
 
   /** One prunable constraint per supported conjunct, expressed through
-    * the table's existing PUBLIC prune entry points so the FileIndex and
-    * the dedicated read APIs can never disagree on what a row proves.
+    * the table's `pruneFiles*` rungs, which hold what each `_stats` tag
+    * proves; this index only maps predicates onto them.
     */
   private type Prune = () => Seq[String]
 
@@ -181,13 +181,14 @@ final class SnapshotFileIndex(
 
   private def rangeOf(col: String, lo: Option[Either[Long, String]],
       hi: Option[Either[Long, String]]): Option[Prune] = (lo, hi) match {
-    case (Some(scala.util.Left(a)), Some(scala.util.Left(b))) => Some(range(col, a, b))
     case (Some(scala.util.Left(a)), None) => Some(range(col, a, Long.MaxValue))
     case (None, Some(scala.util.Left(b))) => Some(range(col, Long.MinValue, b))
-    case (Some(scala.util.Right(a)), Some(scala.util.Right(b))) =>
-      Some(() => table.pruneFilesString(version, col, a, b)._1)
-    // one-sided STRING ranges: unsigned UTF-8 order has no expressible
-    // +/-infinity sentinel — contribute no pruning (kept superset)
+    // string bounds prune one side at a time; the two conjuncts of a
+    // string range intersect in listFiles like every other pair
+    case (Some(scala.util.Right(a)), None) =>
+      Some(() => table.pruneFilesString(version, col, Some(a), None)._1)
+    case (None, Some(scala.util.Right(b))) =>
+      Some(() => table.pruneFilesString(version, col, None, Some(b))._1)
     case _ => None
   }
 

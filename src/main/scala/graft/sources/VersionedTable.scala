@@ -35,9 +35,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     directory and an untouched table; the next commit numbers PAST the
   *     orphan (version = max over directories on disk, not the pointer)
   *     and vacuum eventually reclaims it.
-  *   - `read`: resolve `_latest`, read that one directory. In-flight
-  *     queries keep reading the snapshot they resolved even if a commit
-  *     lands mid-query, because published directories are never mutated.
+  *   - `read`: resolve `_latest`, read the files that snapshot's
+  *     `_manifest` names. In-flight queries keep reading the snapshot
+  *     they resolved even if a commit lands mid-query, because published
+  *     files are never mutated.
   *   - `vacuum(keep)`: drop all but the newest `keep` snapshots — run it
   *     only after in-flight readers of older snapshots have drained (the
   *     same contract as Delta's VACUUM retention window).
@@ -50,6 +51,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * directory listings: each snapshot carries a `_manifest` of its data
   * files (written before publish), so eventually-consistent LISTs never
   * hide a freshly-committed file and stray files are never silently read.
+  * A published version without its manifest is a corrupt table, and
+  * every read and maintenance commit fails on it by name.
+  *
+  * One read path: [[read]], [[readVersion]] and [[readAsOf]] return a
+  * relation over [[SnapshotFileIndex]], so a plain `read(spark).filter(…)`
+  * prunes files through the `_stats` sidecar (the `pruneFiles*` rungs)
+  * before any task launches; [[diffVersions]] is the change feed.
   */
 final class VersionedTable(val root: String) {
   import VersionedTable.DefaultBloomBits
@@ -165,11 +173,7 @@ final class VersionedTable(val root: String) {
       bloomBits: Int = DefaultBloomBits,
       allowEvolution: Boolean = false): Long = {
     val prevVersion = latestVersion()
-    val prev = prevVersion.map(v =>
-      manifest(v).getOrElse(throw new IllegalStateException(
-        s"appendCommit needs a manifest-bearing previous snapshot under $root " +
-          "(pre-manifest snapshots predate the append path — rewrite once with commit())")))
-      .getOrElse(Nil)
+    val prev = prevVersion.map(publishedManifest).getOrElse(Nil)
     // hive partition keys derived from the previous manifest's own paths
     // (empty for unpartitioned chains); the batch writes under the same
     // keys and the snapshot records its full schema — see the scaladoc
@@ -292,9 +296,7 @@ final class VersionedTable(val root: String) {
     import org.apache.spark.sql.functions.{coalesce, input_file_name, lit, not}
     val v = latestVersion().getOrElse(
       throw new IllegalStateException(s"deleteWhere on a never-committed table at $root"))
-    val files = manifest(v).getOrElse(throw new IllegalStateException(
-      s"deleteWhere needs a manifest-bearing snapshot under $root " +
-        "(pre-manifest snapshots predate the targeted-delete path — rewrite once with commit())"))
+    val files = publishedManifest(v)
     val partKeys = partitionKeysOf(files)
     def canon(p: String): String =
       try Paths.get(new java.net.URI(p)).toString catch { case _: Exception => p }
@@ -362,9 +364,7 @@ final class VersionedTable(val root: String) {
     require(smallBytes > 0 && targetBytes > 0, "byte thresholds must be positive")
     val v = latestVersion().getOrElse(
       throw new IllegalStateException(s"compactFiles on a never-committed table at $root"))
-    val files = manifest(v).getOrElse(throw new IllegalStateException(
-      s"compactFiles needs a manifest-bearing snapshot under $root " +
-        "(pre-manifest snapshots predate the maintenance path — rewrite once with commit())"))
+    val files = publishedManifest(v)
     val partKeys = partitionKeysOf(files)
     def canon(p: String): String =
       try Paths.get(new java.net.URI(p)).toString catch { case _: Exception => p }
@@ -465,18 +465,10 @@ final class VersionedTable(val root: String) {
     */
   def diffVersions(spark: SparkSession, v1: Long, v2: Long): DataFrame = {
     import org.apache.spark.sql.functions.lit
-    val (m1, m2) = (manifest(v1), manifest(v2))
-    val f1 = m1.getOrElse(Seq(versionDir(v1).toString))
-    val f2 = m2.getOrElse(Seq(versionDir(v2).toString))
+    val (f1, f2) = (publishedManifest(v1), publishedManifest(v2))
     // drop the files both versions share — carried-by-reference files are
-    // path-identical and delta-free — but ONLY when both file sets are
-    // manifest-proven: across a manifest/pre-manifest boundary one side is
-    // a directory path, and pruning nothing is correct (just unoptimized),
-    // whereas the old version-dir-only fallback silently LOST the carried
-    // files of the manifest side and reported their rows as deltas
-    val shared: Set[String] =
-      if (m1.isDefined && m2.isDefined) f1.toSet intersect f2.toSet
-      else Set.empty
+    // path-identical and delta-free
+    val shared = f1.toSet intersect f2.toSet
     val (only1, only2) = (f1.filterNot(shared), f2.filterNot(shared))
     // Reading EXPLICIT file paths skips hive partition inference, so a
     // partitioned snapshot compared that way would drop its partition
@@ -515,13 +507,8 @@ final class VersionedTable(val root: String) {
     // because the OTHER side failed the cover check — the column-set
     // mismatch then surfaces loudly in exceptAll, which is the point
     def schemaFor(v: Long) = unified.orElse(readSchema(v))
-    def readSide(v: Long, fs: Seq[String]): Option[DataFrame] = {
-      val dir = versionDir(v).toString
-      if (fs.isEmpty) None
-      else if (fs == Seq(dir))
-        Some(schemaFor(v).map(spark.read.schema).getOrElse(spark.read).parquet(dir))
-      else Some(readSubset(spark, schemaFor(v), fs))
-    }
+    def readSide(v: Long, fs: Seq[String]): Option[DataFrame] =
+      if (fs.isEmpty) None else Some(readSubset(spark, schemaFor(v), fs))
     (readSide(v2, only2), readSide(v1, only1)) match {
       case (None, None) =>
         // identical manifests — an empty frame in the snapshot's schema
@@ -828,7 +815,7 @@ final class VersionedTable(val root: String) {
     */
   private def schemaOf(spark: SparkSession, v: Long): org.apache.spark.sql.types.StructType =
     readSchema(v).getOrElse {
-      val files = manifest(v).getOrElse(Nil)
+      val files = publishedManifest(v)
       if (files.isEmpty) new org.apache.spark.sql.types.StructType()
       // readSubset, NOT readVersion: the indexed read path calls back
       // into schemaOf for its relation schema — going through
@@ -845,8 +832,7 @@ final class VersionedTable(val root: String) {
     * while its view is consistent; readers only need GET on the small
     * manifest) — and stray files that leak into the directory are never
     * silently read. The same manifest-over-listing move Iceberg/Delta
-    * make; `_manifest` starts with '_' so Spark's parquet reader ignores
-    * it as a metadata file on the fallback listing path.
+    * make.
     */
   /** Manifest entries are either relative to the snapshot's own directory
     * (files this version wrote) or, prefixed `~/`, relative to the table
@@ -872,8 +858,10 @@ final class VersionedTable(val root: String) {
       (carriedRel ++ rel).mkString("\n").getBytes(StandardCharsets.UTF_8))
   }
 
-  /** Data-file paths of one snapshot per its manifest (pre-manifest
-    * snapshots return None and fall back to directory listing).
+  /** Data-file paths of one snapshot per its manifest. None only for a
+    * version directory without one: the orphan of a commit that crashed
+    * before writing it, which [[vacuum]] still walks. Every published
+    * snapshot has one; readers go through [[publishedManifest]].
     */
   def manifest(v: Long): Option[Seq[String]] =
     if (!Files.exists(manifestPath(v))) None
@@ -885,6 +873,15 @@ final class VersionedTable(val root: String) {
             rootPath.resolve(rootRel.stripPrefix("~/")).toString
           case rel => versionDir(v).resolve(rel).toString
         })
+
+  /** The manifest of a snapshot every reader and maintenance commit
+    * needs. Each commit writes `_manifest` before its pointer swap, so a
+    * published version without one is a corrupt table, named as such.
+    */
+  private def publishedManifest(v: Long): Seq[String] =
+    manifest(v).getOrElse(throw new IllegalStateException(
+      s"snapshot v=$v under $root has no _manifest — table is corrupt " +
+        "(every commit writes one before publishing)"))
 
   // -------------------------------------------------------------------
   // File-level data skipping: per-file column min/max harvested from the
@@ -1211,7 +1208,7 @@ final class VersionedTable(val root: String) {
     * file count, so callers (and the spec) can SEE the pruning rate. A
     * file without a stats row for `column` is always kept.
     */
-  def pruneFiles(v: Long, column: String, lo: Long, hi: Long): (Seq[String], Int) =
+  private[graft] def pruneFiles(v: Long, column: String, lo: Long, hi: Long): (Seq[String], Int) =
     pruneBy(v, column) {
       case ("l", mn, mx) => mx.toLong >= lo && mn.toLong <= hi
       case ("d", mn, mx) => mx.toDouble >= lo && mn.toDouble <= hi
@@ -1219,12 +1216,15 @@ final class VersionedTable(val root: String) {
     }
 
   /** String-range variant of [[pruneFiles]]: keeps the files that can
-    * hold `column BETWEEN lo AND hi` under unsigned UTF-8 byte order —
+    * hold a `column` value in [lo, hi] under unsigned UTF-8 byte order —
     * the ordering Spark's own string comparison uses, see [[cmpUtf8]].
+    * An absent bound leaves that side open (this order has no top
+    * sentinel), so each conjunct of a plain-read range prunes alone.
     */
-  def pruneFilesString(v: Long, column: String, lo: String, hi: String): (Seq[String], Int) =
+  private[graft] def pruneFilesString(
+      v: Long, column: String, lo: Option[String], hi: Option[String]): (Seq[String], Int) =
     pruneBy(v, column) {
-      case ("s", mn, mx) => cmpUtf8(mx, lo) >= 0 && cmpUtf8(mn, hi) <= 0
+      case ("s", mn, mx) => lo.forall(cmpUtf8(mx, _) >= 0) && hi.forall(cmpUtf8(mn, _) <= 0)
       case _ => true // numeric-tagged stats can't serve a string range
     }
 
@@ -1234,7 +1234,7 @@ final class VersionedTable(val root: String) {
     * than a range. With the table laid out range-partitioned on
     * `column`, a handful of probed values keeps a handful of files.
     */
-  def pruneFilesIn(v: Long, column: String, values: Seq[Long]): (Seq[String], Int) =
+  private[graft] def pruneFilesIn(v: Long, column: String, values: Seq[Long]): (Seq[String], Int) =
     pruneBy(v, column) {
       case ("l", mn, mx) =>
         val (lo, hi) = (mn.toLong, mx.toLong); values.exists(x => x >= lo && x <= hi)
@@ -1253,7 +1253,8 @@ final class VersionedTable(val root: String) {
     * bound membership under unsigned UTF-8 order, string-kind bloom
     * rows probe directly; numeric hints keep (cannot serve strings).
     */
-  def pruneFilesInStrings(v: Long, column: String, values: Seq[String]): (Seq[String], Int) =
+  private[graft] def pruneFilesInStrings(
+      v: Long, column: String, values: Seq[String]): (Seq[String], Int) =
     pruneBy(v, column) {
       case ("s", mn, mx) =>
         values.exists(x => cmpUtf8(x, mn) >= 0 && cmpUtf8(x, mx) <= 0)
@@ -1268,7 +1269,7 @@ final class VersionedTable(val root: String) {
     * every filtered column, to most ordinary filters too). A file
     * without an `n` row is kept, the standing degradation contract.
     */
-  def pruneFilesNotNull(v: Long, column: String): (Seq[String], Int) =
+  private[graft] def pruneFilesNotNull(v: Long, column: String): (Seq[String], Int) =
     pruneBy(v, column) {
       case ("n", nulls, rows) => nulls.toLong < rows.toLong
       case _ => true
@@ -1279,27 +1280,11 @@ final class VersionedTable(val root: String) {
     * validation scans every quality pipeline runs) without reading the
     * files that provably contain none.
     */
-  def pruneFilesNull(v: Long, column: String): (Seq[String], Int) =
+  private[graft] def pruneFilesNull(v: Long, column: String): (Seq[String], Int) =
     pruneBy(v, column) {
       case ("n", nulls, _) => nulls.toLong > 0
       case _ => true
     }
-
-  /** [[readIn]] for string point sets — min/max and bloom hints
-    * intersect, the exact IN filter applies to the survivors.
-    */
-  def readInStrings(spark: SparkSession, column: String, values: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    readPruned(spark, col(column).isin(values: _*))(pruneFilesInStrings(_, column, values))
-  }
-
-  /** [[readBetween]]'s point-set sibling: prune via [[pruneFilesIn]],
-    * then apply the exact `column IN (values)` filter to the survivors.
-    */
-  def readIn(spark: SparkSession, column: String, values: Seq[Long]): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    readPruned(spark, col(column).isin(values: _*))(pruneFilesIn(_, column, values))
-  }
 
   /** Shared prune walk: `permits(tag, min, max)` decides survival per
     * stats row. Degradation discipline ("pruning is an optimization,
@@ -1311,8 +1296,7 @@ final class VersionedTable(val root: String) {
     */
   private def pruneBy(v: Long, column: String)(
       permits: (String, String, String) => Boolean): (Seq[String], Int) = {
-    val files = manifest(v).getOrElse(
-      throw new IllegalStateException(s"pruneFiles needs a manifest-bearing snapshot under $root"))
+    val files = publishedManifest(v)
     def dec(s: String): String = java.net.URLDecoder.decode(s, StandardCharsets.UTF_8)
     // line-level Try: a malformed sidecar line (bad %-escape, wrong field
     // count) contributes no entry, so its file is KEPT — same degradation
@@ -1335,80 +1319,6 @@ final class VersionedTable(val root: String) {
       } // no stats rows: never skip
     }
     (kept, files.size)
-  }
-
-  /** Range read with file-level data skipping: resolve the published
-    * snapshot, drop manifest files whose stats exclude
-    * `column BETWEEN lo AND hi` (inclusive), and apply the EXACT filter
-    * to the survivors — identical results to an unpruned filtered read,
-    * minus the IO for files that provably hold no match.
-    */
-  def readBetween(spark: SparkSession, column: String, lo: Long, hi: Long): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    readPruned(spark, col(column) >= lit(lo) && col(column) <= lit(hi))(
-      pruneFiles(_, column, lo, hi))
-  }
-
-  /** [[readBetween]] for string ranges — prunes on the `s` stats rows
-    * under unsigned UTF-8 order, then applies the exact string filter.
-    */
-  def readBetweenStrings(
-      spark: SparkSession, column: String, lo: String, hi: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    readPruned(spark, col(column) >= lit(lo) && col(column) <= lit(hi))(
-      pruneFilesString(_, column, lo, hi))
-  }
-
-  /** [[readBetween]] for DATE columns. No new stats machinery: parquet
-    * stores dates as INT32 days-since-epoch, so a date column already
-    * harvests as an ordinary `l` row — this entry point just speaks
-    * LocalDate at the API and prunes on epoch days.
-    */
-  def readBetweenDates(
-      spark: SparkSession,
-      column: String,
-      lo: java.time.LocalDate,
-      hi: java.time.LocalDate): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    readPruned(
-      spark,
-      col(column) >= lit(java.sql.Date.valueOf(lo)) &&
-        col(column) <= lit(java.sql.Date.valueOf(hi)))(
-      pruneFiles(_, column, lo.toEpochDay, hi.toEpochDay))
-  }
-
-  /** [[readBetween]] for TIMESTAMP columns — INT64 micros-since-epoch in
-    * parquet (GraftSession sets outputTimestampType=TIMESTAMP_MICROS;
-    * Spark's out-of-the-box INT96 default writes NO usable footer stats,
-    * so tables written under it simply stay unprunable on timestamps —
-    * degrade-to-keep, never wrong), pruned via the `l` rows.
-    */
-  def readBetweenTimestamps(
-      spark: SparkSession,
-      column: String,
-      lo: java.time.Instant,
-      hi: java.time.Instant): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    def micros(t: java.time.Instant): Long =
-      math.multiplyExact(t.getEpochSecond, 1000000L) + t.getNano / 1000L
-    readPruned(
-      spark,
-      col(column) >= lit(java.sql.Timestamp.from(lo)) &&
-        col(column) <= lit(java.sql.Timestamp.from(hi)))(
-      pruneFiles(_, column, micros(lo), micros(hi)))
-  }
-
-  /** Shared tail of every pruned read: resolve the published snapshot,
-    * prune its manifest, apply the EXACT predicate to the survivors —
-    * identical results to an unpruned filtered read by construction.
-    */
-  private def readPruned(spark: SparkSession, cond: org.apache.spark.sql.Column)(
-      prune: Long => (Seq[String], Int)): DataFrame = {
-    val v = latestVersion()
-      .getOrElse(throw new IllegalStateException(s"no published version under $root"))
-    val (kept, _) = prune(v)
-    if (kept.isEmpty) readVersion(spark, v).filter(cond).limit(0)
-    else readFiles(spark, v, kept).filter(cond)
   }
 
   // an evolved snapshot reads through its recorded unified schema —
@@ -1457,26 +1367,24 @@ final class VersionedTable(val root: String) {
   def read(spark: SparkSession): DataFrame = readVersion(spark, latestVersion()
     .getOrElse(throw new IllegalStateException(s"no published version under $root")))
 
-  /** Read one pinned snapshot — time travel over retained versions.
-    * Manifest-backed when available (no directory LIST on the read path;
-    * `basePath` keeps hive-style partition columns inferable from the
-    * explicit file paths); pre-manifest snapshots fall back to listing.
+  /** Read one pinned snapshot — time travel over retained versions — and
+    * the one read path of this table: [[read]] and [[readAsOf]] resolve a
+    * version and land here. Files come from the snapshot's manifest (no
+    * directory LIST); a published version without one fails by name
+    * ([[publishedManifest]]).
     */
-  def readVersion(spark: SparkSession, v: Long): DataFrame = manifest(v) match {
-    // manifest snapshots — partitioned or not — read through the
-    // INTEGRATED skipping relation (round-13 ask #1): a
+  def readVersion(spark: SparkSession, v: Long): DataFrame = {
+    // the INTEGRATED skipping relation (round-13 ask #1): a
     // SnapshotFileIndex under a stock parquet HadoopFsRelation, so a
     // plain read().filter() prunes files through the _stats sidecar
-    // exactly like the dedicated readBetween/readIn entry points —
-    // without the caller knowing the API — and hive partition pruning
+    // without the caller knowing any API, and hive partition pruning
     // evaluates against per-file path-parsed values in the SAME
     // listing, composing with the stats walk (one scan even when a
     // partitioned chain spans version directories). Evolution still
     // holds: the relation's dataSchema is the recorded unified schema,
     // so pre-evolution files NULL-fill.
-    case Some(files) if files.nonEmpty => readIndexed(spark, v, files)
-    case Some(files) => readFiles(spark, v, files)
-    case None => spark.read.parquet(versionDir(v).toString)
+    val files = publishedManifest(v)
+    if (files.nonEmpty) readIndexed(spark, v, files) else readFiles(spark, v, files)
   }
 
   /** The integrated-skipping relation behind [[readVersion]]: a

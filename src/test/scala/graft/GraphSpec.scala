@@ -138,6 +138,34 @@ class GraphSpec extends AnyFunSuite {
     assert(wide === Set(("a", 2L, 1L), ("b", 2L, 1L), ("c", 3L, 1L), ("d", 1L, 0L)))
   }
 
+  test("triangleStats: 40 runs at local[4] all finish within a bounded wait") {
+    // the edge list feeds a broadcast and a shuffle of one query. Built as
+    // a LAZY localCheckpoint it once deadlocked Spark: the DAG scheduler
+    // held the RDD's lock waiting for RDDCheckpointData while a
+    // broadcast-exchange thread held RDDCheckpointData checkpointing that
+    // RDD. Each run is awaited with a deadline, so a deadlock fails here
+    // (naming the deadlocked threads) instead of hanging the suite.
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val pairs = (0 until 60).flatMap(i =>
+      Seq((s"n$i", s"n${(i + 1) % 60}"), (s"n$i", s"n${(i + 7) % 60}")))
+    val expected = triOf(pairs)
+    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try (1 to 40).foreach { run =>
+      val got =
+        try Await.result(Future(triOf(pairs)), 120.seconds)
+        catch {
+          case _: java.util.concurrent.TimeoutException =>
+            val mx = java.lang.management.ManagementFactory.getThreadMXBean
+            val stuck = Option(mx.findDeadlockedThreads()).toSeq.flatten
+              .map(id => mx.getThreadInfo(id).getThreadName)
+            fail(s"run $run did not finish in 120 s; deadlocked threads: $stuck")
+        }
+      assert(got === expected, s"run $run")
+    } finally pool.shutdownNow()
+  }
+
   test("durable barriers (VersionedTable commits) produce identical ranks") {
     // the 100 TB fault-tolerance posture: every iteration barrier commits
     // a snapshot instead of localCheckpoint — results must be

@@ -90,6 +90,22 @@ class IvfBinaryIndexSpec extends AnyFunSuite {
     assert(a.nonEmpty)
   }
 
+  test("the operator's own scans skip files: one probe at nprobe = 2") {
+    val emb = corpus(120, 16, seed = 43)
+    val cents = centsOf(emb, 8)
+    val vt = tmpTable("graft_ivfbin_opscan_")
+    val v = Similarity.buildBinaryIvfIndex(emb, cents, vt)
+    val total = vt.manifest(v).get.size
+    assert(total > 2, s"degenerate layout: $total files")
+    // one probe routed to its 2 nearest cells: both index reads (the
+    // Hamming scan and the rerank fetch) open only those cells' files
+    val served = Similarity.ivfBinaryTopKIndexed(
+      probesOf(emb).filter(col("q_id") === 1L), vt, cents, k = 3, rerank = 8, nprobe = 2)
+    val counts = ScanMetrics.scanFileCounts(served)
+    assert(counts.size === 2, s"expected the two index scans, got $counts")
+    assert(counts.forall(n => n > 0 && n < total), s"no pruning: $counts of $total")
+  }
+
   test("ReadSchema pin: routed Hamming scan reads (cell, vec_id, bits) — floats only at rerank") {
     val emb = corpus(60, 16, seed = 47)
     val cents = centsOf(emb, 4)

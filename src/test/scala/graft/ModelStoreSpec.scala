@@ -108,4 +108,20 @@ class ModelStoreSpec extends AnyFunSuite {
     }
     assert(refit) // stale model is never served for changed data
   }
+
+  test("the key carries the store format: a pre-format table is never read") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_srcdir_").toString
+    val f = java.nio.file.Paths.get(dir, "data.parquet")
+    java.nio.file.Files.write(f, Array[Byte](1))
+    // the key a store without the format constant derived for this dir
+    val preFormat = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(Seq(
+        java.nio.file.Paths.get(dir).toAbsolutePath.toString,
+        s"data.parquet:${java.nio.file.Files.size(f)}:" +
+          s"${java.nio.file.Files.getLastModifiedTime(f).toMillis}").mkString("\n")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .take(8).map(b => f"${b & 0xFF}%02x").mkString
+    assert(ModelStore.sourceKey(dir) !== preFormat)
+    assert(ModelStore.tableFor("demo", dir, tmpRoot()).root.endsWith(ModelStore.sourceKey(dir)))
+  }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.ScanMetrics.scannedFiles
 import graft.operators.Percentages
 import graft.sources.VersionedTable
 
@@ -17,6 +18,13 @@ class VersionedTableSpec extends AnyFunSuite {
 
   private def freshTable(): VersionedTable =
     VersionedTable(java.nio.file.Files.createTempDirectory("graft_vt").toString + "/t")
+
+  /** The published snapshot's rows read straight from its manifest files,
+    * with no file index, so nothing is skipped: the reference a pruned
+    * plain read must match row for row.
+    */
+  private def unpruned(t: VersionedTable): org.apache.spark.sql.DataFrame =
+    spark.read.parquet(t.manifest(t.latestVersion().get).get: _*)
 
   test("commit publishes atomically; a pre-commit reader frame still serves the old snapshot") {
     val t = freshTable()
@@ -405,21 +413,35 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(d === Set((2L, "B", "delete"), (2L, "C", "insert")))
   }
 
-  test("diffVersions: manifest/pre-manifest boundary keeps the manifest side's carried files") {
-    // round-9 ADVICE: the mixed fallback read only the two VERSION DIRS,
-    // losing the manifest side's carried-by-reference files — every
-    // carried row surfaced as a spurious delete
+  test("a published snapshot without its _manifest fails reads and diffs by name") {
+    // every commit writes _manifest before its pointer swap, so a
+    // published version without one is a corrupt table: reads, diffs and
+    // maintenance commits name it instead of listing the directory
     val t = freshTable()
     import spark.implicits._
     val v0 = t.commit((1L to 5L).map(i => (i, s"u$i")).toDF("id", "s").coalesce(1))
     val v1 = t.appendCommit(Seq((6L, "u6")).toDF("id", "s").coalesce(1))
-    // erase v0's manifest to simulate a pre-manifest snapshot
-    java.nio.file.Files.delete(
-      java.nio.file.Paths.get(t.root, "v=0", "_manifest"))
+    def manifestOf(v: Long) = java.nio.file.Paths.get(t.root, s"v=$v", "_manifest")
+    def corrupt(v: Long)(body: => Any): Unit = {
+      val e = intercept[IllegalStateException](body)
+      assert(e.getMessage.contains(s"snapshot v=$v") && e.getMessage.contains("no _manifest"),
+        e.getMessage)
+    }
+    java.nio.file.Files.delete(manifestOf(v0))
     assert(t.manifest(v0).isEmpty)
-    val d = t.diffVersions(spark, v0, v1).collect()
-      .map(r => (r.getLong(0), r.getString(2))).toSet
-    assert(d === Set(6L -> "insert"))
+    corrupt(v0)(t.readVersion(spark, v0))
+    corrupt(v0)(t.diffVersions(spark, v0, v1))
+    corrupt(v0)(t.diffVersions(spark, v1, v0))
+    // the intact head still reads and diffs against itself
+    assert(t.read(spark).count() === 6)
+    assert(t.diffVersions(spark, v1, v1).count() === 0)
+    // a head without its manifest: every read and maintenance commit
+    java.nio.file.Files.delete(manifestOf(v1))
+    corrupt(v1)(t.read(spark))
+    corrupt(v1)(t.appendCommit(Seq((7L, "u7")).toDF("id", "s")))
+    corrupt(v1)(t.deleteWhere(spark, col("id") === 1L))
+    corrupt(v1)(t.compactFiles(spark))
+    assert(t.latestVersion().contains(v1))
   }
 
   test("TagCursor: incremental scan sees new tags, keeps vacuumed ones, matches committedTags") {
@@ -453,19 +475,23 @@ class VersionedTableSpec extends AnyFunSuite {
     val (kept, total) = t.pruneFiles(v0, "id", 100, 199)
     assert(total === 8)
     assert(kept.length < total, s"no file pruned: $kept")
-    val pruned = t.readBetween(spark, "id", 100, 199)
+    val inRange = col("id").between(100L, 199L)
+    assert(scannedFiles(t.read(spark).filter(inRange)) === kept.length)
+    val pruned = t.read(spark).filter(inRange)
     assert(pruned.count() === 100)
-    val full = t.read(spark).filter(col("id") >= 100 && col("id") <= 199)
+    val full = unpruned(t).filter(inRange)
     assert(pruned.exceptAll(full).isEmpty && full.exceptAll(pruned).isEmpty)
     // bounds are INCLUSIVE on both the stats compare and the filter: a
     // range that starts exactly at a file's max keeps that file
-    val idsAt = t.readBetween(spark, "id", 0, 0).collect()
+    val idsAt = t.read(spark).filter(col("id").between(0L, 0L)).collect()
     assert(idsAt.length === 1 && idsAt.head.getLong(0) === 0L)
     // the second stats column prunes independently
     val (keptV, _) = t.pruneFiles(v0, "v", 0, 50)
     assert(keptV.length < total)
     // an empty range past every max: zero rows, correct schema, no error
-    assert(t.readBetween(spark, "id", 5000, 6000).count() === 0)
+    val past = t.read(spark).filter(col("id").between(5000L, 6000L))
+    assert(scannedFiles(past) === 0)
+    assert(past.count() === 0)
   }
 
   test("stats skipping: appendCommit carries previous stats at O(batch)") {
@@ -479,7 +505,8 @@ class VersionedTableSpec extends AnyFunSuite {
     val (kept, total) = t.pruneFiles(v1, "id", 450, 499)
     assert(total === 6)
     assert(kept.length === 1, s"expected only one appended file kept: $kept")
-    assert(t.readBetween(spark, "id", 450, 499).count() === 50)
+    assert(scannedFiles(t.read(spark).filter(col("id").between(450L, 499L))) === 1)
+    assert(t.read(spark).filter(col("id").between(450L, 499L)).count() === 50)
     // a range inside the BASE span still prunes via the carried rows
     val (keptBase, _) = t.pruneFiles(v1, "id", 0, 99)
     assert(keptBase.length === 1)
@@ -498,7 +525,8 @@ class VersionedTableSpec extends AnyFunSuite {
     // relatively through the hive path, and pruning still bites
     val (kept, total) = t.pruneFiles(v0, "id", 0, 20)
     assert(total > 2 && kept.length < total, s"kept $kept of $total")
-    val got = t.readBetween(spark, "id", 0, 20)
+    assert(scannedFiles(t.read(spark).filter(col("id").between(0L, 20L))) === kept.length)
+    val got = t.read(spark).filter(col("id").between(0L, 20L))
     assert(got.count() === 21)
     // the hive partition column itself has no footprint in the files —
     // no stats rows, keep-all, still correct through the exact filter
@@ -523,8 +551,10 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(total === 16)
     assert(keptX.length < total, s"x did not prune: ${keptX.length}/$total")
     assert(keptY.length < total, s"y did not prune: ${keptY.length}/$total")
-    assert(t.readBetween(spark, "x", 0, 3).count() === 4 * 32)
-    assert(t.readBetween(spark, "y", 0, 3).count() === 4 * 32)
+    assert(scannedFiles(t.read(spark).filter(col("x").between(0L, 3L))) === keptX.length)
+    assert(scannedFiles(t.read(spark).filter(col("y").between(0L, 3L))) === keptY.length)
+    assert(t.read(spark).filter(col("x").between(0L, 3L)).count() === 4 * 32)
+    assert(t.read(spark).filter(col("y").between(0L, 3L)).count() === 4 * 32)
   }
 
   test("stats skipping: unstatted columns and cross-type ranges read unpruned, never wrong") {
@@ -549,18 +579,25 @@ class VersionedTableSpec extends AnyFunSuite {
     val df = ((0 until 200).map(i => (f"k$i%03d", i.toLong)) :+ (("éxtra", 999L)))
       .toDF("k", "v")
     val v0 = t.commit(df.repartitionByRange(8, col("k")), statsColumns = Seq("k"))
-    val (kept, total) = t.pruneFilesString(v0, "k", "k010", "k029")
+    val (kept, total) = t.pruneFilesString(v0, "k", Some("k010"), Some("k029"))
     assert(total === 8 && kept.length < total, s"kept ${kept.length}/$total")
-    val pruned = t.readBetweenStrings(spark, "k", "k010", "k029")
-    val full = t.read(spark).filter(col("k") >= "k010" && col("k") <= "k029")
+    val inRange = col("k") >= "k010" && col("k") <= "k029"
+    // the plain read's two one-sided conjuncts intersect to the same set
+    assert(scannedFiles(t.read(spark).filter(inRange)) === kept.length)
+    val pruned = t.read(spark).filter(inRange)
+    val full = unpruned(t).filter(inRange)
     assert(pruned.count() === 20)
     assert(pruned.exceptAll(full).isEmpty && full.exceptAll(pruned).isEmpty)
     // the multi-byte key is reachable and bounds are inclusive
-    assert(t.readBetweenStrings(spark, "k", "é", "éz").count() === 1)
+    assert(t.read(spark).filter(col("k") >= "é" && col("k") <= "éz").count() === 1)
+    // one open side prunes alone: everything from the multi-byte key up
+    // lives in the last file
+    assert(t.pruneFilesString(v0, "k", Some("é"), None)._1.length === 1)
+    assert(scannedFiles(t.read(spark).filter(col("k") > "é")) === 1)
     // a string range against a numeric-tagged column keeps all
     val tNum = freshTable()
     val vN = tNum.commit(df.repartitionByRange(4, col("v")), statsColumns = Seq("v"))
-    assert(tNum.pruneFilesString(vN, "v", "a", "z")._1.length === 4)
+    assert(tNum.pruneFilesString(vN, "v", Some("a"), Some("z"))._1.length === 4)
   }
 
   test("stats skipping: DATE columns prune through the INT32-days rows") {
@@ -575,10 +612,12 @@ class VersionedTableSpec extends AnyFunSuite {
       java.time.LocalDate.of(2024, 2, 1).toEpochDay,
       java.time.LocalDate.of(2024, 2, 10).toEpochDay)
     assert(total === 8 && kept.length < total)
-    val pruned = t.readBetweenDates(
-      spark, "d", java.time.LocalDate.of(2024, 2, 1), java.time.LocalDate.of(2024, 2, 10))
+    val inRange = col("d").between(
+      java.sql.Date.valueOf("2024-02-01"), java.sql.Date.valueOf("2024-02-10"))
+    assert(scannedFiles(t.read(spark).filter(inRange)) === kept.length)
+    val pruned = t.read(spark).filter(inRange)
     assert(pruned.count() === 10)
-    val full = t.read(spark)
+    val full = unpruned(t)
       .filter(col("d").between(lit("2024-02-01").cast("date"), lit("2024-02-10").cast("date")))
     assert(pruned.exceptAll(full).isEmpty && full.exceptAll(pruned).isEmpty)
   }
@@ -593,8 +632,9 @@ class VersionedTableSpec extends AnyFunSuite {
     val v1 = t.deleteWhere(spark, col("id") === 399L)
     val (kept1, total1) = t.pruneFiles(v1, "id", 0, 50)
     assert(kept1.length < total1, s"post-delete pruning dead: ${kept1.length}/$total1")
-    assert(t.readBetween(spark, "id", 0, 50).count() === 51)
-    assert(t.readBetween(spark, "id", 390, 399).count() === 9) // 399 deleted
+    assert(scannedFiles(t.read(spark).filter(col("id").between(0L, 50L))) === kept1.length)
+    assert(t.read(spark).filter(col("id").between(0L, 50L)).count() === 51)
+    assert(t.read(spark).filter(col("id").between(390L, 399L)).count() === 9) // 399 deleted
     // the SECOND stats column survives maintenance too
     assert(t.pruneFiles(v1, "v", 0, 100)._1.length < total1)
     // compaction (everything under the threshold merges to one file):
@@ -603,7 +643,7 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(v2 > v1)
     val (kept2, total2) = t.pruneFiles(v2, "id", 0, 50)
     assert(kept2.length === 1 && total2 === 1)
-    assert(t.readBetween(spark, "id", 0, 50).count() === 51)
+    assert(t.read(spark).filter(col("id").between(0L, 50L)).count() === 51)
     // and a compaction that merges only SOME files keeps carried rows:
     // append small files, compact, then both spans still prune
     val t3 = freshTable()
@@ -616,7 +656,8 @@ class VersionedTableSpec extends AnyFunSuite {
     val v3 = t3.compactFiles(spark, smallBytes = bigBytes, targetBytes = 1L << 30)
     val (kept3, total3) = t3.pruneFiles(v3, "id", 450, 460)
     assert(kept3.length < total3)
-    assert(t3.readBetween(spark, "id", 450, 460).count() === 11)
+    assert(scannedFiles(t3.read(spark).filter(col("id").between(450L, 460L))) === kept3.length)
+    assert(t3.read(spark).filter(col("id").between(450L, 460L)).count() === 11)
   }
 
   test("stats skipping: NaN bounds emit no row — the file is kept, never wrongly skipped") {
@@ -634,7 +675,8 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(total === 2)
     // A prunes (clean stats exclude it); B is kept despite having no row
     assert(kept.length === 1)
-    assert(t.readBetween(spark, "x", 1000, 1010).count() === 10)
+    assert(scannedFiles(t.read(spark).filter(col("x").between(1000.0, 1010.0))) === 1)
+    assert(t.read(spark).filter(col("x").between(1000.0, 1010.0)).count() === 10)
     // a range matching only A keeps BOTH (B unprunable without stats)
     assert(t.pruneFiles(v0, "x", 0, 9)._1.length === 2)
   }
@@ -656,7 +698,8 @@ class VersionedTableSpec extends AnyFunSuite {
     // pruning still runs: corrupt rows' files are kept, clean rows prune
     val (kept, total) = t.pruneFiles(v0, "id", 0, 10)
     assert(kept.length < total && kept.nonEmpty)
-    assert(t.readBetween(spark, "id", 0, 10).count() === 11)
+    assert(scannedFiles(t.read(spark).filter(col("id").between(0L, 10L))) === kept.length)
+    assert(t.read(spark).filter(col("id").between(0L, 10L)).count() === 11)
   }
 
   test("bloom skipping: point reads prune where min/max cannot, and never drop a match") {
@@ -680,12 +723,14 @@ class VersionedTableSpec extends AnyFunSuite {
       .select(input_file_name()).distinct().collect()
       .map(r => java.nio.file.Paths.get(new java.net.URI(r.getString(0))).toString).toSet
     assert(holding.subsetOf(kept.toSet), "bloom dropped a file holding a probed value")
-    // the pruned read is row-identical to the plain filtered read
-    val pruned = t.readIn(spark, "id", probes)
-    val full = t.read(spark).filter(col("id").isin(probes: _*))
+    // the plain IN read prunes to the same files and is row-identical to
+    // an unpruned read
+    assert(scannedFiles(t.read(spark).filter(col("id").isin(probes: _*))) === kept.length)
+    val pruned = t.read(spark).filter(col("id").isin(probes: _*))
+    val full = unpruned(t).filter(col("id").isin(probes: _*))
     assert(pruned.exceptAll(full).isEmpty && full.exceptAll(pruned).isEmpty)
     // a probe set matching nothing: zero rows, no error
-    assert(t.readIn(spark, "id", Seq(100000L)).count() === 0)
+    assert(t.read(spark).filter(col("id").isin(100000L)).count() === 0)
   }
 
   test("bloom skipping: rows carry through appendCommit and re-harvest through compaction") {
@@ -699,7 +744,8 @@ class VersionedTableSpec extends AnyFunSuite {
     // carried base rows AND fresh batch rows both serve the point prune
     val (kept1, total1) = t.pruneFilesIn(v1, "id", Seq(5L, 450L))
     assert(kept1.length < total1)
-    assert(t.readIn(spark, "id", Seq(5L, 450L)).count() === 2)
+    assert(scannedFiles(t.read(spark).filter(col("id").isin(5L, 450L))) === kept1.length)
+    assert(t.read(spark).filter(col("id").isin(5L, 450L)).count() === 2)
     // compaction rewrites the small files — propagateStats must re-harvest
     // bloom rows for the rewritten output, not silently drop the rung
     val v2 = t.compactFiles(spark)
@@ -707,8 +753,9 @@ class VersionedTableSpec extends AnyFunSuite {
     val probes2 = Seq(17L, 471L)
     val (kept2, total2) = t.pruneFilesIn(v2, "id", probes2)
     assert(total2 > 0)
-    val pruned2 = t.readIn(spark, "id", probes2)
-    val full2 = t.read(spark).filter(col("id").isin(probes2: _*))
+    assert(scannedFiles(t.read(spark).filter(col("id").isin(probes2: _*))) === kept2.length)
+    val pruned2 = t.read(spark).filter(col("id").isin(probes2: _*))
+    val full2 = unpruned(t).filter(col("id").isin(probes2: _*))
     assert(pruned2.exceptAll(full2).isEmpty && full2.exceptAll(pruned2).isEmpty)
     assert(pruned2.count() === 2)
     // the rewritten snapshot still carries `b` rows (the rung stayed ON)
@@ -819,8 +866,9 @@ class VersionedTableSpec extends AnyFunSuite {
     val (kept, total) = t.pruneFilesInStrings(v0, "s", probes)
     assert(total === 8)
     assert(kept.length < total, s"string bloom pruned nothing: $kept")
-    val pruned = t.readInStrings(spark, "s", probes)
-    val full = t.read(spark).filter(col("s").isin(probes: _*))
+    assert(scannedFiles(t.read(spark).filter(col("s").isin(probes: _*))) === kept.length)
+    val pruned = t.read(spark).filter(col("s").isin(probes: _*))
+    val full = unpruned(t).filter(col("s").isin(probes: _*))
     assert(pruned.exceptAll(full).isEmpty && full.exceptAll(pruned).isEmpty)
     assert(pruned.count() === full.count() && full.count() > 0)
     // a NUMERIC point probe against the string-kind bloom row must keep
@@ -846,9 +894,10 @@ class VersionedTableSpec extends AnyFunSuite {
     // corrupt bloom rows keep their files — the read stays correct
     val (kept, total) = t.pruneFilesIn(v0, "id", Seq(42L))
     assert(kept.length === total)
-    assert(t.readIn(spark, "id", Seq(42L)).count() === 1)
+    assert(scannedFiles(t.read(spark).filter(col("id") === 42L)) === total)
+    assert(t.read(spark).filter(col("id") === 42L).count() === 1)
     // and a RANGE read over the same column never consults b rows at all
-    assert(t.readBetween(spark, "id", 40, 44).count() === 5)
+    assert(t.read(spark).filter(col("id").between(40L, 44L)).count() === 5)
   }
 
   /** Spec-side mirror of the harvest/probe position arithmetic — used to
@@ -890,7 +939,7 @@ class VersionedTableSpec extends AnyFunSuite {
     // wrongly pruned, the round-13 ADVICE class)
     assert(t.pruneFilesIn(v0, "id", Seq(7L))._1.length === 1,
       "recorded-k probe wrongly pruned the file holding the value")
-    assert(t.readIn(spark, "id", Seq(7L)).count() === 1)
+    assert(t.read(spark).filter(col("id") === 7L).count() === 1)
     // the k=3 bloom still PRUNES genuine misses (it is a working filter)
     assert(t.pruneFilesIn(v0, "id", Seq(99999L))._1.isEmpty)
     // absent / zero / negative / unparseable k: degrade to keep, never throw
@@ -1027,7 +1076,8 @@ class VersionedTableSpec extends AnyFunSuite {
     // ...while the range DOES prune post-evolution files outside it
     assert(kept.length < total)
     // NULL never matches the range read; the rows are still in the table
-    assert(t.readBetween(spark, "n", 300, 400).count() === 34)
+    assert(scannedFiles(t.read(spark).filter(col("n").between(300L, 400L))) === kept.length)
+    assert(t.read(spark).filter(col("n").between(300L, 400L)).count() === 34)
     assert(t.read(spark).filter(col("n").isNull).count() === 100)
   }
 
@@ -1046,27 +1096,17 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(totalId === 6 && keptId.length < totalId)
     val (keptS, totalS) = t.pruneFilesInStrings(v0, "s", Seq("cat7"))
     assert(totalS === 6 && keptS.length < totalS)
-    // both pruned reads are row-identical to the plain filtered reads
-    val idPruned = t.readIn(spark, "id", Seq(11L))
-    val idFull = t.read(spark).filter(col("id") === 11L)
+    // both plain point reads prune to those files and are row-identical
+    // to unpruned reads
+    assert(scannedFiles(t.read(spark).filter(col("id") === 11L)) === keptId.length)
+    assert(scannedFiles(t.read(spark).filter(col("s") === "cat7")) === keptS.length)
+    val idPruned = t.read(spark).filter(col("id") === 11L)
+    val idFull = unpruned(t).filter(col("id") === 11L)
     assert(idPruned.exceptAll(idFull).isEmpty && idFull.exceptAll(idPruned).isEmpty)
-    val sPruned = t.readInStrings(spark, "s", Seq("cat7"))
-    val sFull = t.read(spark).filter(col("s") === "cat7")
+    val sPruned = t.read(spark).filter(col("s") === "cat7")
+    val sFull = unpruned(t).filter(col("s") === "cat7")
     assert(sPruned.exceptAll(sFull).isEmpty && sFull.exceptAll(sPruned).isEmpty)
     assert(sFull.count() > 0)
-  }
-
-  /** numFiles of the (single) parquet scan in an executed plan — the
-    * witness that the SnapshotFileIndex genuinely skipped files on the
-    * PLAIN read path, not just that results matched.
-    */
-  private def scannedFiles(df: org.apache.spark.sql.DataFrame): Long = {
-    df.collect() // populate metrics
-    val scans = df.queryExecution.executedPlan.collect {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
-    }
-    assert(scans.nonEmpty, "no FileSourceScanExec in the executed plan")
-    scans.map(_.metrics("numFiles").value).sum
   }
 
   test("integrated read path: a PLAIN read().filter() prunes files through the FileIndex") {
@@ -1083,9 +1123,6 @@ class VersionedTableSpec extends AnyFunSuite {
     val ranged = t.read(spark).filter(col("id") >= 100L && col("id") <= 249L)
     assert(scannedFiles(ranged) < 8, "plain range read scanned every file")
     assert(ranged.collect().map(_.getLong(0)).sorted === (100L to 249L).toArray)
-    // the dedicated API and the plain read agree row-for-row
-    val viaApi = t.readBetween(spark, "id", 100, 249)
-    assert(ranged.exceptAll(viaApi).isEmpty && viaApi.exceptAll(ranged).isEmpty)
     // point predicate (IN) prunes too, and never drops a match
     val points = t.read(spark).filter(col("id").isin(5L, 650L))
     assert(scannedFiles(points) < 8)
