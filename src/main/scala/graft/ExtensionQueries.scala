@@ -259,7 +259,11 @@ object ExtensionQueries {
       val digest = java.security.MessageDigest.getInstance("SHA-256")
         .digest(s"$dir#$joinType".getBytes(java.nio.charset.StandardCharsets.UTF_8))
       val sink = "graft_spairs_" + digest.take(8).map(b => f"${b & 0xFF}%02x").mkString
-      val q = out.writeStream.format("memory").queryName(sink).outputMode("append").start()
+      // an explicit checkpoint: without one Spark creates a temporary one
+      // per run and warns about it
+      val ckpt = java.nio.file.Files.createTempDirectory("graft_spairs_ckpt_")
+      val q = out.writeStream.format("memory").queryName(sink).outputMode("append")
+        .option("checkpointLocation", ckpt.toString).start()
       try {
         val rounds = 4
         def chunks[T](a: Array[T]): Seq[Seq[T]] =
@@ -277,7 +281,7 @@ object ExtensionQueries {
           memP.addData((-2L, sentinelUs, -2L, 0.0))
           q.processAllAvailable()
         }
-      } finally q.stop()
+      } finally { q.stop(); org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile) }
       val p = java.nio.file.Files.createTempDirectory("graft_spairs_").toString + "/t"
       s.table(sink).filter(col("user_id") >= 0L).write.parquet(p)
       p
@@ -338,8 +342,10 @@ object ExtensionQueries {
       val digest = java.security.MessageDigest.getInstance("SHA-256")
         .digest(s"$dir#$key".getBytes(java.nio.charset.StandardCharsets.UTF_8))
       val sink = "graft_sev_" + digest.take(8).map(b => f"${b & 0xFF}%02x").mkString
+      val ckpt = java.nio.file.Files.createTempDirectory("graft_sev_ckpt_") // see spairs
       val q = transform(streamEv).writeStream
-        .format("memory").queryName(sink).outputMode("append").start()
+        .format("memory").queryName(sink).outputMode("append")
+        .option("checkpointLocation", ckpt.toString).start()
       try {
         val rounds = 4
         rows.grouped(math.max(1, (rows.length + rounds - 1) / rounds)).foreach { chunk =>
@@ -354,7 +360,7 @@ object ExtensionQueries {
           mem.addData((-d, maxUs + d * 24L * 3600 * 1000000, -1L, "sentinel", 0.0))
           q.processAllAvailable()
         }
-      } finally q.stop()
+      } finally { q.stop(); org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile) }
       val p = java.nio.file.Files.createTempDirectory("graft_sev_").toString + "/t"
       finish(s.table(sink), maxUs).write.parquet(p)
       p
@@ -1042,7 +1048,7 @@ object ExtensionQueries {
     // Schema-evolution read (x136): the snapshot store's widened-append
     // contract under the hash gate — a base commit without `n_chars`,
     // then an opted-in appendCommit that ADDS it; the published snapshot
-    // records its unified schema in a `_schema` sidecar and every read
+    // records its unified schema in its commit record and every read
     // goes through it, so pre-evolution files fill the added column with
     // NULL deterministically (a schema-less multi-file read would seed
     // from an arbitrary file and silently drop or misplace the column —

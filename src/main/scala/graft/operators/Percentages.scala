@@ -276,7 +276,7 @@ object Percentages {
   }
 
   /** Reader-safe variant of [[upsertPercentages]]: same merge semantics,
-    * but committed as an immutable snapshot with an atomic pointer swap
+    * but committed as an immutable snapshot with one atomic commit record
     * ([[graft.sources.VersionedTable]]) instead of overwriting partitions
     * in place — concurrent readers always see a complete table, matching
     * the transactional guarantee of the reference's Postgres ON CONFLICT

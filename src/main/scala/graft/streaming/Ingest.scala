@@ -436,7 +436,7 @@ object Ingest {
   /** Start a stream that grows `corpus` with near-dup-free documents.
     *
     * Per micro-batch (checkpointed, so a restart resumes at the failed
-    * batch; appendCommit's pointer swap makes the commit itself atomic,
+    * batch; appendCommit's put-if-absent record makes the commit atomic,
     * and the batch-id tag on each snapshot makes the commit IDEMPOTENT —
     * a replay of an already-committed batch is skipped, closing the
     * crash-between-commit-and-checkpoint double-append window):
@@ -478,7 +478,7 @@ object Ingest {
       maxShingleDf: Int = 100,
       shingleIndex: Option[graft.sources.VersionedTable] = None): org.apache.spark.sql.streaming.StreamingQuery = {
     // one cursor per stream: the replay-guard tag scan reads each retained
-    // version's _tag file ONCE across the stream's lifetime instead of
+    // version's commit record ONCE across the stream's lifetime instead of
     // once per micro-batch (per-batch I/O would grow with retained
     // versions until vacuum)
     val tagCursor = corpus.tagCursor()

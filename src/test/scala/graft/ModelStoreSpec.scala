@@ -113,15 +113,20 @@ class ModelStoreSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_srcdir_").toString
     val f = java.nio.file.Paths.get(dir, "data.parquet")
     java.nio.file.Files.write(f, Array[Byte](1))
-    // the key a store without the format constant derived for this dir
-    val preFormat = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(Seq(
+    def key(prefix: Seq[String]) = java.security.MessageDigest.getInstance("SHA-256")
+      .digest((prefix ++ Seq(
         java.nio.file.Paths.get(dir).toAbsolutePath.toString,
         s"data.parquet:${java.nio.file.Files.size(f)}:" +
-          s"${java.nio.file.Files.getLastModifiedTime(f).toMillis}").mkString("\n")
+          s"${java.nio.file.Files.getLastModifiedTime(f).toMillis}")).mkString("\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       .take(8).map(b => f"${b & 0xFF}%02x").mkString
-    assert(ModelStore.sourceKey(dir) !== preFormat)
+    // the key a store without the format constant derived for this dir
+    assert(ModelStore.sourceKey(dir) !== key(Nil))
+    // format 2 (the `_latest`/`_manifest` layout) gets a different key from
+    // format 3 (the `_log` commit records), so its tables are refit, not read
+    assert(ModelStore.StoreFormat === 3)
+    assert(ModelStore.sourceKey(dir) !== key(Seq("format=2")))
+    assert(ModelStore.sourceKey(dir) === key(Seq("format=3")))
     assert(ModelStore.tableFor("demo", dir, tmpRoot()).root.endsWith(ModelStore.sourceKey(dir)))
   }
 }

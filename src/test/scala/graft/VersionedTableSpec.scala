@@ -6,11 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ScanMetrics.scannedFiles
 import graft.operators.Percentages
-import graft.sources.VersionedTable
+import graft.sources.{CrashPoint, VersionedTable}
 
-/** The snapshot-commit protocol: immutable version dirs + atomic pointer
-  * swap. Readers must never observe a torn table; the snapshot upsert must
-  * produce exactly the rows of the in-place upsert.
+/** The snapshot-commit protocol: immutable data dirs + one put-if-absent
+  * commit record per version. Readers must never observe a torn table; the
+  * snapshot upsert must produce exactly the rows of the in-place upsert.
   */
 class VersionedTableSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
@@ -25,6 +25,19 @@ class VersionedTableSpec extends AnyFunSuite {
     */
   private def unpruned(t: VersionedTable): org.apache.spark.sql.DataFrame =
     spark.read.parquet(t.manifest(t.latestVersion().get).get: _*)
+
+  private def recordPath(t: VersionedTable, v: Long): java.nio.file.Path =
+    java.nio.file.Paths.get(t.root, "_log", s"$v.json")
+
+  /** The `_stats` file snapshot `v`'s commit record names. */
+  private def statsFileOf(t: VersionedTable, v: Long): java.nio.file.Path = {
+    val rec = org.json4s.jackson.JsonMethods.parse(
+      new String(java.nio.file.Files.readAllBytes(recordPath(t, v)), "UTF-8"))
+    rec \ "stats" match {
+      case org.json4s.JString(rel) => java.nio.file.Paths.get(t.root, rel)
+      case other => fail(s"v=$v records no _stats: $other")
+    }
+  }
 
   test("commit publishes atomically; a pre-commit reader frame still serves the old snapshot") {
     val t = freshTable()
@@ -122,14 +135,20 @@ class VersionedTableSpec extends AnyFunSuite {
     val t = freshTable()
     import spark.implicits._
     t.commit(Seq((1L, "a")).toDF("id", "s")) // published v=0
-    // simulate a crash AFTER the parquet write, BEFORE the pointer swap:
-    // v=1 exists on disk but the pointer still says 0
+    // simulate a crash AFTER the parquet write, BEFORE the record's link:
+    // v=1 exists on disk but no record publishes it
     Seq((9L, "orphan")).toDF("id", "s").write.parquet(t.root + "/v=1")
     assert(t.latestVersion().contains(0L))
-    // the next commit must number past the orphan, not collide with it
+    // the next commit may reuse the orphan's version number, but writes its
+    // own directory and never reads the orphan's files
     val v = t.commit(Seq((2L, "b")).toDF("id", "s"))
-    assert(v === 2L && t.latestVersion().contains(2L))
-    assert(t.read(spark).filter(col("s") === "b").count() === 1)
+    assert(v === 1L && t.latestVersion().contains(1L))
+    assert(t.manifest(v).get.forall(f => !f.contains("/v=1/")))
+    assert(t.read(spark).select("s").as[String].collect() === Array("b"))
+    // vacuum reclaims the orphan: no record references it
+    t.vacuum(keep = 2)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(t.root, "v=1")))
+    assert(t.read(spark).select("s").as[String].collect() === Array("b"))
   }
 
   test("vacuum drops old snapshots but never the published one") {
@@ -227,6 +246,20 @@ class VersionedTableSpec extends AnyFunSuite {
     t.vacuum(keep = 2)
     assert(t.versions() === Seq(3L, 4L))
     assert(t.read(spark).select("s").as[String].collect() === Array("z"))
+  }
+
+  test("vacuum keeps a version whole: a retained version's own references survive too") {
+    val t = freshTable()
+    import spark.implicits._
+    t.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "s").coalesce(1)) // v0: file A
+    t.appendCommit(Seq((3L, "c")).toDF("id", "s").coalesce(1))       // v1: A + file B
+    t.deleteWhere(spark, col("id") === 1L)                           // v2: B + A rewritten
+    // the head reads from v=1 (file B), so v1 is retained; v1 reads from
+    // v=0 (file A), so v0 must stay too, or the retained v1 would not read
+    t.vacuum(keep = 1)
+    assert(t.versions() === Seq(0L, 1L, 2L))
+    assert(t.readVersion(spark, 1L).count() === 3)
+    assert(t.read(spark).select("s").as[String].collect().sorted === Array("b", "c"))
   }
 
   test("deleteWhere: only hit files rewrite, the rest carry by reference; time travel keeps the audit trail") {
@@ -413,30 +446,34 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(d === Set((2L, "B", "delete"), (2L, "C", "insert")))
   }
 
-  test("a published snapshot without its _manifest fails reads and diffs by name") {
-    // every commit writes _manifest before its pointer swap, so a
-    // published version without one is a corrupt table: reads, diffs and
-    // maintenance commits name it instead of listing the directory
+  test("an unparseable commit record fails reads, diffs and maintenance by name") {
+    // a record that exists but does not parse is a corrupt table: reads,
+    // diffs and maintenance commits name it instead of guessing
     val t = freshTable()
     import spark.implicits._
     val v0 = t.commit((1L to 5L).map(i => (i, s"u$i")).toDF("id", "s").coalesce(1))
     val v1 = t.appendCommit(Seq((6L, "u6")).toDF("id", "s").coalesce(1))
-    def manifestOf(v: Long) = java.nio.file.Paths.get(t.root, s"v=$v", "_manifest")
+    def tear(v: Long): Unit = {
+      val p = recordPath(t, v)
+      val whole = java.nio.file.Files.readAllBytes(p)
+      java.nio.file.Files.write(p, whole.take(whole.length / 2))
+    }
     def corrupt(v: Long)(body: => Any): Unit = {
       val e = intercept[IllegalStateException](body)
-      assert(e.getMessage.contains(s"snapshot v=$v") && e.getMessage.contains("no _manifest"),
+      assert(e.getMessage.contains(s"snapshot v=$v") && e.getMessage.contains("commit record"),
         e.getMessage)
     }
-    java.nio.file.Files.delete(manifestOf(v0))
-    assert(t.manifest(v0).isEmpty)
+    tear(v0)
+    corrupt(v0)(t.manifest(v0))
     corrupt(v0)(t.readVersion(spark, v0))
     corrupt(v0)(t.diffVersions(spark, v0, v1))
     corrupt(v0)(t.diffVersions(spark, v1, v0))
+    corrupt(v0)(t.vacuum(keep = 1))
     // the intact head still reads and diffs against itself
     assert(t.read(spark).count() === 6)
     assert(t.diffVersions(spark, v1, v1).count() === 0)
-    // a head without its manifest: every read and maintenance commit
-    java.nio.file.Files.delete(manifestOf(v1))
+    // a torn head: every read and maintenance commit
+    tear(v1)
     corrupt(v1)(t.read(spark))
     corrupt(v1)(t.appendCommit(Seq((7L, "u7")).toDF("id", "s")))
     corrupt(v1)(t.deleteWhere(spark, col("id") === 1L))
@@ -687,7 +724,7 @@ class VersionedTableSpec extends AnyFunSuite {
     val df = (0L until 100L).map(i => (i, i * 2)).toDF("id", "v")
     val v0 = t.commit(df.repartitionByRange(4, col("id")), statsColumns = Seq("id"))
     // vandalize the sidecar: numeric garbage on one line, a truncated line
-    val statsFile = java.nio.file.Paths.get(t.root, s"v=$v0", "_stats")
+    val statsFile = statsFileOf(t, v0)
     val lines = new String(java.nio.file.Files.readAllBytes(statsFile), "UTF-8").split("\n")
     val mangled = lines.zipWithIndex.map {
       case (l, 0) => l.split("\t").patch(3, Seq("not-a-number"), 1).mkString("\t")
@@ -759,7 +796,7 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(pruned2.exceptAll(full2).isEmpty && full2.exceptAll(pruned2).isEmpty)
     assert(pruned2.count() === 2)
     // the rewritten snapshot still carries `b` rows (the rung stayed ON)
-    val statsFile = java.nio.file.Paths.get(t.root, s"v=$v2", "_stats")
+    val statsFile = statsFileOf(t, v2)
     val lines = new String(java.nio.file.Files.readAllBytes(statsFile), "UTF-8").split("\n")
     assert(lines.exists(_.split("\t").lift(2).contains("b")), "compaction dropped bloom rows")
   }
@@ -884,7 +921,7 @@ class VersionedTableSpec extends AnyFunSuite {
     val v0 = t.commit(
       df.repartition(4, col("s")), statsColumns = Seq("id"), bloomColumns = Seq("id"))
     // vandalize every bloom payload: not valid base64
-    val statsFile = java.nio.file.Paths.get(t.root, s"v=$v0", "_stats")
+    val statsFile = statsFileOf(t, v0)
     val lines = new String(java.nio.file.Files.readAllBytes(statsFile), "UTF-8").split("\n")
     val mangled = lines.map { l =>
       val p = l.split("\t")
@@ -916,7 +953,9 @@ class VersionedTableSpec extends AnyFunSuite {
   test("bloom skipping: the probe honors the ROW's recorded k; a bad k degrades to keep") {
     val t = freshTable()
     import spark.implicits._
-    val v0 = t.commit(Seq((7L, "a"), (8L, "b")).toDF("id", "s").coalesce(1))
+    // committed with stats so its record names a `_stats` file to forge
+    val v0 = t.commit(Seq((7L, "a"), (8L, "b")).toDF("id", "s").coalesce(1),
+      statsColumns = Seq("id"))
     val rel = java.nio.file.Paths.get(t.root)
       .relativize(java.nio.file.Paths.get(t.manifest(v0).get.head)).toString
     val bits = 1 << 16
@@ -930,7 +969,7 @@ class VersionedTableSpec extends AnyFunSuite {
     val b64 = java.util.Base64.getEncoder.encodeToString(bs.toByteArray)
     def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
     def writeRow(params: String): Unit = java.nio.file.Files.write(
-      java.nio.file.Paths.get(t.root, s"v=$v0", "_stats"),
+      statsFileOf(t, v0),
       s"$rel\tid\tb\t${enc(b64)}\t${enc(params)}".getBytes("UTF-8"))
     writeRow(s"$bits:3:l")
     // probing value 7 with the ROW's k=3 admits the file; a probe that
@@ -954,90 +993,51 @@ class VersionedTableSpec extends AnyFunSuite {
     val t = freshTable()
     import spark.implicits._
     t.commit(Seq((1L, "a")).toDF("id", "s"))
-    t.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "s"))
-    // simulate a crash between _commit_ts and the pointer swap: v=1 sits
-    // on disk bearing a commit timestamp but the published pointer is v0
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(t.root, "_latest"), "0".getBytes("UTF-8"))
+    // a crash after v1's record is written, before it is linked: v=1 sits
+    // on disk with a timestamped temp record, and v0 is the head
+    CrashPoint.crashAfter(t, "record")(t.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "s")))
     assert(t.latestVersion().contains(0L))
-    // timestamp time travel resolves over PUBLISHED versions only — the
-    // orphan's _commit_ts must not leak a never-published snapshot
+    // timestamp time travel resolves over PUBLISHED versions only
     assert(t.readAsOf(spark, java.time.Instant.now()).count() === 1)
   }
 
   test("readAsOf never serves an orphan sitting BELOW a later published head") {
-    // the round-14 ADVICE medium: a crash between the _commit_ts write and
-    // the pointer swap, FOLLOWED by a later successful commit (which
-    // numbers past the orphan), leaves the timestamped orphan below the
-    // head — the cap-at-latestVersion guard alone no longer excludes it.
-    // Publication is recorded in _history strictly AFTER the swap, so the
-    // orphan (whose swap never happened) must stay invisible to timestamp
-    // time travel while the real versions resolve normally.
+    // a crashed attempt at v1, FOLLOWED by a later successful commit, leaves
+    // the orphan's timestamped data at or below the head: only records
+    // publish, so the orphan stays invisible to timestamp time travel
     val t = freshTable()
     import spark.implicits._
     t.commit(Seq((1L, "a")).toDF("id", "s")) // v0, published
     Thread.sleep(5)
-    t.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "s")) // v1, for now published
-    // rewrite history: strip v1's publication record and point back at v0 —
-    // exactly the on-disk state of a crash after v1's _commit_ts write
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(t.root, "_history"), "0\n".getBytes("UTF-8"))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(t.root, "_latest"), "0".getBytes("UTF-8"))
+    CrashPoint.crashAfter(t, "record")(t.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "s")))
+    val orphanTs = System.currentTimeMillis()
     Thread.sleep(5)
-    // the NEXT commit numbers past the orphan and publishes head v2
-    t.commit(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "s")) // v2
-    assert(t.latestVersion().contains(2L))
-    // now: readAsOf(now) = v2; readAsOf at a cutoff between v1's orphan
-    // timestamp and v2's publish must serve v0, never the orphan v1
+    // the NEXT commit publishes v1 from its own directory
+    t.commit(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "s"))
+    assert(t.latestVersion().contains(1L))
     assert(t.readAsOf(spark, java.time.Instant.now()).count() === 3)
     val v1Ts = t.commitTimestamp(1L).get
-    val v2Ts = t.commitTimestamp(2L).get
-    assert(v1Ts < v2Ts, "fixture needs distinct clocks; raise the sleeps")
-    val mid = java.time.Instant.ofEpochMilli(v2Ts - 1)
+    assert(orphanTs < v1Ts, "fixture needs distinct clocks; raise the sleeps")
+    // a cutoff between the orphan's record time and v1's publish serves v0
+    val mid = java.time.Instant.ofEpochMilli(v1Ts - 1)
     assert(t.readAsOf(spark, mid).count() === 1,
-      "timestamp time travel served the never-published orphan v1")
+      "timestamp time travel served the never-published orphan")
   }
 
   test("readAsOf never serves a FIRST-commit orphan below the first history record") {
-    // the round-15 ADVICE residual: v0 crashes between its _commit_ts
-    // write and the swap, so _history is empty but _history_base=0; the
-    // next successful commit publishes v1 (history={1}). Inferring the
-    // legacy boundary from h.min would wave orphan v0 through (0 < 1);
-    // the base marker pins history support at 0, so v0 must prove
-    // membership and cannot.
+    // the first commit crashes after its record is written; the next
+    // successful commit publishes v0: no cutoff before it may serve the
+    // orphan
     val t = freshTable()
     import spark.implicits._
-    t.commit(Seq((1L, "a")).toDF("id", "s")) // v0
+    CrashPoint.crashAfter(t, "record")(t.commit(Seq((1L, "a")).toDF("id", "s")))
+    val orphanTs = System.currentTimeMillis()
     Thread.sleep(5)
-    t.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "s")) // v1
-    // rewrite to the crash state: v0's swap never happened
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(t.root, "_history"), "1\n".getBytes("UTF-8"))
-    assert(t.readAsOf(spark, java.time.Instant.now()).count() === 2) // v1 fine
-    val v1Ts = t.commitTimestamp(1L).get
-    val mid = java.time.Instant.ofEpochMilli(v1Ts - 1)
-    assert(t.commitTimestamp(0L).get < v1Ts, "fixture needs distinct clocks")
-    intercept[IllegalStateException](t.readAsOf(spark, mid)) // never orphan v0
-  }
-
-  test("readAsOf survives a torn _history line and degrades without one") {
-    val t = freshTable()
-    import spark.implicits._
-    t.commit(Seq((1L, "a")).toDF("id", "s"))
-    t.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "s"))
-    // a torn/corrupt trailing line must not turn every readAsOf into a
-    // NumberFormatException (round-15 ADVICE low) — parseable records win
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(t.root, "_history"),
-      "0\n1\n42garbage\n".getBytes("UTF-8"))
+    t.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "s")) // v0
     assert(t.readAsOf(spark, java.time.Instant.now()).count() === 2)
-    // legacy shape: _history empty AND no base marker proves nothing —
-    // fall back to the cap-at-head guard instead of rejecting everything
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(t.root, "_history"), Array.emptyByteArray)
-    java.nio.file.Files.delete(java.nio.file.Paths.get(t.root, "_history_base"))
-    assert(t.readAsOf(spark, java.time.Instant.now()).count() === 2)
+    val v0Ts = t.commitTimestamp(0L).get
+    assert(orphanTs < v0Ts, "fixture needs distinct clocks")
+    intercept[IllegalStateException](t.readAsOf(spark, java.time.Instant.ofEpochMilli(v0Ts - 1)))
   }
 
   test("diffVersions: a later full commit with NEW columns never reads through an older _schema") {
@@ -1046,9 +1046,9 @@ class VersionedTableSpec extends AnyFunSuite {
     t.commit(Seq((1L, "a")).toDF("id", "s"))
     val v1 = t.appendCommit(
       Seq((2L, "b", 20L)).toDF("id", "s", "v"), allowEvolution = true)
-    // a FULL commit (never writes _schema) whose rows match v1 exactly in
+    // a FULL commit (never records a schema) whose rows match v1 exactly in
     // (id, s, v) but add column w — pre-guard, the fallback read BOTH
-    // sides through v1's _schema, projected w away, and reported ZERO
+    // sides through v1's schema, projected w away, and reported ZERO
     // deltas for a version that demonstrably changed; the guard reads
     // each side through its own schema and lets the mismatch surface
     val v2 = t.commit(
@@ -1088,7 +1088,7 @@ class VersionedTableSpec extends AnyFunSuite {
     // prune) and a near-arbitrary id set (so `id` blooms prune)
     val df = (0L until 600L).map(i => (i, s"cat${(i * 7919) % 211}")).toDF("id", "s")
     val v0 = t.commit(df.repartition(6, col("s")), bloomColumns = Seq("id", "s"))
-    val statsFile = java.nio.file.Paths.get(t.root, s"v=$v0", "_stats")
+    val statsFile = statsFileOf(t, v0)
     val lines = new String(java.nio.file.Files.readAllBytes(statsFile), "UTF-8").split("\n")
     assert(lines.count(l => l.split("\t").lift(1).contains("id")) === 6)
     assert(lines.count(l => l.split("\t").lift(1).contains("s")) === 6)
@@ -1278,7 +1278,7 @@ class VersionedTableSpec extends AnyFunSuite {
     t.appendCommit((31L to 60L).map(i => (i, s"b${i % 3}")).toDF("id", "branch"))
     t.deleteWhere(spark, col("id") % 10 === 0L)
     // the chain keeps appending AFTER a maintenance rewrite: keys still
-    // derive, the _schema written by the delete still reads the carried
+    // derive, the schema recorded by the delete still reads the carried
     // files, and the new batch lands under the same hive layout
     val v = t.appendCommit((61L to 70L).map(i => (i, s"b${i % 3}")).toDF("id", "branch"))
     assert(t.read(spark).count() === 64) // 60 - 6 victims + 10
@@ -1321,15 +1321,6 @@ class VersionedTableSpec extends AnyFunSuite {
     t2.vacuumOlderThan(java.time.Instant.now().plusSeconds(3600), keep = 1)
     assert(t2.versions() === Seq(0L, 1L))
     assert(t2.read(spark).count() === 2)
-
-    // a version WITHOUT a recorded publish time (pre-_commit_ts era)
-    // counts as older than any cutoff — reclaimable once unreferenced
-    val t3 = freshTable()
-    t3.commit(Seq((1L, "a")).toDF("id", "s"))
-    t3.commit(Seq((2L, "b")).toDF("id", "s"))
-    java.nio.file.Files.delete(java.nio.file.Paths.get(t3.root, "v=0", "_commit_ts"))
-    t3.vacuumOlderThan(java.time.Instant.now().minusSeconds(3600), keep = 1)
-    assert(t3.versions() === Seq(1L))
   }
 
   test("null-count rung: IS NOT NULL / IS NULL prune through the plain read; no n row keeps") {
