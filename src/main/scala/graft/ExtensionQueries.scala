@@ -225,6 +225,18 @@ object ExtensionQueries {
   private val StreamedPairs =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
+  /** A streaming query's checkpoint directory, deleted when the JVM
+    * exits, not when the query stops: after `stop()` the state store's
+    * background maintenance may still snapshot a stopped query's state
+    * into it (and unloads the query's providers only after that), so a
+    * delete at stop races the snapshot write.
+    */
+  private def streamCheckpoint(prefix: String): java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile))
+    dir
+  }
+
   private def streamedPairsFor(
       s: SparkSession, dir: String, joinType: String): org.apache.spark.sql.DataFrame = {
     val path = StreamedPairs.computeIfAbsent(s"$dir#$joinType", _ => {
@@ -261,7 +273,7 @@ object ExtensionQueries {
       val sink = "graft_spairs_" + digest.take(8).map(b => f"${b & 0xFF}%02x").mkString
       // an explicit checkpoint: without one Spark creates a temporary one
       // per run and warns about it
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_spairs_ckpt_")
+      val ckpt = streamCheckpoint("graft_spairs_ckpt_")
       val q = out.writeStream.format("memory").queryName(sink).outputMode("append")
         .option("checkpointLocation", ckpt.toString).start()
       try {
@@ -281,7 +293,7 @@ object ExtensionQueries {
           memP.addData((-2L, sentinelUs, -2L, 0.0))
           q.processAllAvailable()
         }
-      } finally { q.stop(); org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile) }
+      } finally q.stop()
       val p = java.nio.file.Files.createTempDirectory("graft_spairs_").toString + "/t"
       s.table(sink).filter(col("user_id") >= 0L).write.parquet(p)
       p
@@ -342,7 +354,7 @@ object ExtensionQueries {
       val digest = java.security.MessageDigest.getInstance("SHA-256")
         .digest(s"$dir#$key".getBytes(java.nio.charset.StandardCharsets.UTF_8))
       val sink = "graft_sev_" + digest.take(8).map(b => f"${b & 0xFF}%02x").mkString
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_sev_ckpt_") // see spairs
+      val ckpt = streamCheckpoint("graft_sev_ckpt_") // see spairs
       val q = transform(streamEv).writeStream
         .format("memory").queryName(sink).outputMode("append")
         .option("checkpointLocation", ckpt.toString).start()
@@ -360,7 +372,7 @@ object ExtensionQueries {
           mem.addData((-d, maxUs + d * 24L * 3600 * 1000000, -1L, "sentinel", 0.0))
           q.processAllAvailable()
         }
-      } finally { q.stop(); org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile) }
+      } finally q.stop()
       val p = java.nio.file.Files.createTempDirectory("graft_sev_").toString + "/t"
       finish(s.table(sink), maxUs).write.parquet(p)
       p

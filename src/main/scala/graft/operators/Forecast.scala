@@ -286,7 +286,7 @@ object Forecast {
           .withColumnRenamed("effective_pct", "hist_avg")
           .drop("day_pct", "month_pct", "fallback_level", "month", "day")
     }
-    dailyColumns(looked, moveType)
+    dailyColumns(looked, moveType.map(lit))
   }
 
   /** The model rows of the clamped window around `inputDate`: a per-day
@@ -313,12 +313,15 @@ object Forecast {
     * [[graft.api.Api.forecast]]. `looked` carries (branch, ds, yhat_upper)
     * plus the looked-up `input_pct` (the input date's percentage; 100 with
     * no move type) and `hist_avg` (the day's percentage; null with no move
-    * type). Adds branch_forecast, predicted_moves, implied_pct, pct_diff,
+    * type). `moveType` is the requested move type's column (None: no move
+    * type) — a literal in the set-oriented form, an input column in the
+    * API's. Adds branch_forecast, predicted_moves, implied_pct, pct_diff,
     * comment_class, phrase_id and comment. Every column is a per-row
-    * expression, so over a local relation Catalyst evaluates them on the
-    * driver without a job.
+    * expression of its input columns, with no request value baked in, so
+    * the API resolves them once per session and evaluates them on the
+    * driver for each request's rows.
     */
-  def dailyColumns(looked: DataFrame, moveType: Option[String]): DataFrame = {
+  def dailyColumns(looked: DataFrame, moveType: Option[Column]): DataFrame = {
     // O13/O14 (main.py:235-236)
     val scaled = looked
       .withColumn("branch_forecast", clipRoundCount(col("yhat_upper")))
@@ -372,7 +375,7 @@ object Forecast {
             def fmt1(c: Column): Column = bround(CrossRound.r(c, 6) * 10) / 10
             def bank(k: String): Column = element_at(
               array(DailyPhrases(k).map(p =>
-                format_string(p, lit(mt), fmt1(col("hist_avg")), fmt1(col("implied_pct")))): _*),
+                format_string(p, mt, fmt1(col("hist_avg")), fmt1(col("implied_pct")))): _*),
               (col("phrase_id") + 1).cast("int"))
             when(col("comment_class") === "consistent", bank("consistent"))
               .when(col("comment_class") === "stronger", bank("stronger"))
@@ -394,15 +397,16 @@ object Forecast {
           count(lit(1)).as("n_days"),
           avg(col("hist_avg")).as("hist_period_avg"),
           first(col("input_pct")).as("input_pct")),
-      moveType)
+      moveType.isDefined)
 
   /** The summary's derived columns over its per-branch aggregate
     * (total_predicted_moves, total_branch_forecast, n_days,
     * hist_period_avg, input_pct), shared by [[summarize]] and the driver
     * path of [[graft.api.Api.forecast]]: average_daily_moves, current_pct,
-    * period_avg, period_diff and summary_class.
+    * period_avg, period_diff and summary_class; `withMoveType` says
+    * whether the request named a (valid) move type.
     */
-  def summaryColumns(agg: DataFrame, moveType: Option[String]): DataFrame = {
+  def summaryColumns(agg: DataFrame, withMoveType: Boolean): DataFrame = {
     val withAvgs = agg
       .withColumn("average_daily_moves",
         pyRound(col("total_predicted_moves") / col("n_days")))
@@ -410,16 +414,14 @@ object Forecast {
         safeSharePct(col("total_predicted_moves"), col("total_branch_forecast")))
       // main.py:303: empty-history default falls back to the input pct
       .withColumn("period_avg", coalesce(col("hist_period_avg"), col("input_pct")))
-    moveType match {
-      case None =>
-        withAvgs
-          .withColumn("period_diff", lit(null).cast("double"))
-          .withColumn("summary_class", lit("no_move_type"))
-      case Some(_) =>
-        withAvgs
-          .withColumn("period_diff", col("current_pct") - col("period_avg"))
-          .withColumn("summary_class", classifyDiff(col("period_diff")))
-    }
+    if (withMoveType)
+      withAvgs
+        .withColumn("period_diff", col("current_pct") - col("period_avg"))
+        .withColumn("summary_class", classifyDiff(col("period_diff")))
+    else
+      withAvgs
+        .withColumn("period_diff", lit(null).cast("double"))
+        .withColumn("summary_class", lit("no_move_type"))
   }
 
   /** O46: one nested-JSON document per branch, shaped like the reference's

@@ -102,20 +102,6 @@ object Similarity {
         col("vec_id"), col("label"), col("sim"))
   }
 
-  /** Exact all-pairs above a cosine threshold (vec_a < vec_b). Quadratic
-    * within the pairing domain — use [[blockedThresholdPairs]] with a
-    * blocking key, or the LSH path, at scale.
-    */
-  def thresholdPairs(emb: DataFrame, threshold: Double): DataFrame = {
-    val a = emb.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a"))
-    val b = emb.select(col("vec_id").as("vec_b"), col("embedding").as("emb_b"))
-    a.crossJoin(b)
-      .filter(col("vec_a") < col("vec_b"))
-      .withColumn("sim", cosine(col("emb_a"), col("emb_b")))
-      .filter(col("sim") >= threshold)
-      .select("vec_a", "vec_b", "sim")
-  }
-
   /** Threshold pairs restricted to a blocking key (equi-join instead of a
     * cross join): the standard scale pattern when a cheap partition key
     * (label, language, cluster id) bounds where near-dups can live —

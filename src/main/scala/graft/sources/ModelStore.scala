@@ -41,14 +41,15 @@ object ModelStore {
   def defaultRoot: String =
     sys.env.getOrElse("SPARK_GRAFT_MODEL_DIR", "/tmp/graft_models")
 
-  /** Snapshot-store format the key commits to. Format 3 publishes each
-    * version as a commit record under `_log/`; a model table written in
-    * an older layout (format 2: a `_latest` pointer and per-version
-    * `_manifest` files; format 1, keyed without this constant) reads as
-    * never committed, and committing into it would mix the layouts, so
-    * it gets a different key and is refit instead, never read.
+  /** Snapshot-store format the key commits to. Format 4 records the read
+    * schema in every commit record under `_log/`; a model table written in
+    * an older layout (format 3: records without a schema for plain
+    * commits; format 2: a `_latest` pointer and per-version `_manifest`
+    * files; format 1, keyed without this constant) is unreadable or reads
+    * as never committed, so it gets a different key and is refit instead,
+    * never read.
     */
-  val StoreFormat: Int = 3
+  val StoreFormat: Int = 4
 
   /** Digest of the store format and the source dir identity: absolute
     * path + (name, size, mtime) of every parquet file directly inside

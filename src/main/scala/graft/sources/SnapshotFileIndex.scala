@@ -39,7 +39,7 @@ import org.apache.spark.sql.types._
   * HIVE-PARTITIONED snapshots integrate here too: each manifest file's
   * partition values are parsed from its own path segments at
   * construction (hive-unescaped, `__HIVE_DEFAULT_PARTITION__` → NULL,
-  * typed by the snapshot's recorded/inferred schema), grouped into one
+  * typed by the snapshot's recorded schema), grouped into one
   * [[PartitionDirectory]] per value tuple — so ONE relation serves
   * partition pruning (the pushed partitionFilters evaluate against each
   * group's values, the PartitioningAwareFileIndex discipline) AND

@@ -89,9 +89,7 @@ object Tables {
   def lineitem(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "orders")
   def customer(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "customer")
-  def supplier(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "supplier")
   def part(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "part")
-  def nation(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "nation")
   def region(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "region")
   def documents(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "embeddings")

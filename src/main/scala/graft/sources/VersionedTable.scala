@@ -33,9 +33,10 @@ import org.json4s.jackson.JsonMethods.{compact, parse, render}
   * The record is the version's ONLY commit state: its data files (the
   * snapshot's manifest — own-directory-relative for files it wrote, `~/`
   * root-relative for files carried from earlier versions), its publish
-  * wall time, the recorded read schema when one is needed (evolved or
-  * partitioned chains), the idempotence tag and the path of its `_stats`
-  * data-skipping index.
+  * wall time, its read schema, the idempotence tag and the path of its
+  * `_stats` data-skipping index. Every record carries its schema, so a
+  * read resolves a snapshot from its record alone: no footer or
+  * partition inference, and no Spark job.
   * Latest version, version list, time travel, tags and vacuum all derive
   * from `_log`; the directory name says nothing about which files a
   * version holds.
@@ -108,6 +109,13 @@ final class VersionedTable(val root: String) {
     * published version; throws [[CommitConflictException]] when another
     * writer published first. `partitionBy` columns keep partition pruning
     * inside the snapshot directory.
+    *
+    * The record's schema is the one a parquet read of the written files
+    * infers, derived without reading them: `df`'s data columns, then the
+    * partition columns as Spark's hive partition inference types the
+    * directory names the write produced (`month=1` reads as `int`
+    * whatever `df`'s type was). A partition column with no directory (an
+    * empty frame) keeps `df`'s type.
     */
   def commit(
       df: DataFrame,
@@ -116,14 +124,36 @@ final class VersionedTable(val root: String) {
       statsColumns: Seq[String] = Nil,
       bloomColumns: Seq[String] = Nil,
       bloomBits: Int = DefaultBloomBits): Long =
-    publish(latestVersion(), carried = Nil, schema = None, tag) { dir =>
+    publish(latestVersion(), carried = Nil, tag) { dir =>
       val writer = df.write.mode("append")
       (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
         .parquet(dir.toString)
+    } { (dir, own) =>
+      val typed = partitionTypes(df.sparkSession, dir, own)
+      StructType(df.schema.filterNot(f => partitionBy.contains(f.name)) ++
+        partitionBy.map(c => typed.find(_.name == c).getOrElse(df.schema(c))))
     } { own =>
       harvestStats(own, statsColumns.toSet) ++
         harvestBloom(df.sparkSession, own, bloomColumns.toSet, bloomBits)
     }
+
+  /** The partition columns Spark's hive partition inference reads from
+    * the paths of `files` under `dir` — the listing a parquet read would
+    * make, handed over instead of listed, so no file is opened and no
+    * job runs.
+    */
+  private def partitionTypes(spark: SparkSession, dir: Path, files: Seq[String]): StructType = {
+    import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+    import org.apache.spark.sql.execution.datasources.{NoopCache, PartitionSpec, PartitioningAwareFileIndex}
+    val statuses = files.map(f => new FileStatus(0L, false, 1, 0L, 0L, new HPath(Paths.get(f).toUri)))
+    new PartitioningAwareFileIndex(spark, Map("basePath" -> dir.toUri.toString), None, NoopCache) {
+      override val leafFiles = scala.collection.mutable.LinkedHashMap(statuses.map(s => s.getPath -> s): _*)
+      override val leafDirToChildrenFiles = statuses.toArray.groupBy(_.getPath.getParent)
+      override def rootPaths: Seq[HPath] = Seq(new HPath(dir.toUri))
+      override def refresh(): Unit = ()
+      override def partitionSpec(): PartitionSpec = inferPartitioning()
+    }.partitionSchema
+  }
 
   /** Append-only commit: write ONLY `df`'s rows as new files and publish
     * a snapshot whose manifest references them PLUS every file of the
@@ -145,11 +175,9 @@ final class VersionedTable(val root: String) {
     * hive `basePath` can span version directories: reads re-assemble
     * the snapshot as one per-directory-basePath read per owning version
     * directory, unioned under that recorded schema, so partition column
-    * TYPES are pinned by the record instead of re-inferred per read
-    * (the first partitioned append pays one inference of the base
-    * snapshot for the contract check; everything after reads the
-    * record). Partition pruning survives: each branch of the union is
-    * an ordinary hive layout under its own basePath.
+    * TYPES are pinned by the record instead of re-inferred per read.
+    * Partition pruning survives: each branch of the union is an
+    * ordinary hive layout under its own basePath.
     *
     * Schema EVOLUTION stays refused on partitioned chains (fail-fast,
     * even with `allowEvolution=true`): widening interacts with the
@@ -196,21 +224,19 @@ final class VersionedTable(val root: String) {
     // column is always refused (appended files would hole the history);
     // ADDING columns is the one legal evolution and requires the
     // explicit opt-in — the evolved snapshot then records its unified
-    // schema in its commit record, and every read of a schema-bearing
-    // snapshot goes through spark.read.schema(...), which fills the
-    // column with NULL for pre-evolution files deterministically.
-    val evolved: Option[StructType] =
-      prevSnap.flatMap { pv =>
-        val prevSchema = schemaOf(df.sparkSession, pv)
-        // a fileless previous snapshot (empty commit) contracts nothing
-        if (prevSchema.fields.isEmpty) None
-        else {
+    // schema in its commit record, and every read goes through that
+    // schema, which fills the column with NULL for pre-evolution files
+    // deterministically.
+    val schema: StructType = prevSnap.filter(_.files.nonEmpty) match {
+      // a fileless previous snapshot (empty commit) contracts nothing
+      case None => df.schema
+      case Some(pv) =>
         // catalogString, not DataType equality: nullability (top-level
         // and NESTED — ArrayType.containsNull, struct field nullability)
         // flips freely across parquet round-trips and query lineages,
         // and is not a type change; catalogString renders the type
         // without any nullability, which is exactly the contract here
-        val prevByName = prevSchema.fields.map(f => f.name -> f.dataType.catalogString).toMap
+        val prevByName = pv.schema.fields.map(f => f.name -> f.dataType.catalogString).toMap
         val batchByName = df.schema.fields.map(f => f.name -> f.dataType.catalogString).toMap
         val missing = prevByName.keySet -- batchByName.keySet
         if (missing.nonEmpty) throw new IllegalArgumentException(
@@ -232,20 +258,17 @@ final class VersionedTable(val root: String) {
         if (added.nonEmpty && !allowEvolution) throw new IllegalArgumentException(
           s"appendCommit batch adds column(s) ${added.toSeq.sorted.mkString(", ")} " +
             s"under $root — pass allowEvolution=true to widen the table schema")
-        // carry a schema forward once the chain has ever evolved — and
-        // ALWAYS on partitioned chains, whose cross-directory reads need
-        // the recorded FULL schema (data + partition columns) to pin
+        // an append that adds nothing keeps the table's schema; an evolved
+        // one records the widened batch schema, and a partitioned chain the
+        // batch's FULL schema (data + partition columns), which pins
         // partition column types across per-directory basePath reads
-        if (added.nonEmpty || partKeys.nonEmpty || pv.schema.isDefined)
-          Some(df.schema)
-        else None
-        }
-      }
-    publish(prevSnap.map(_.version), carried = prev, evolved, tag) { dir =>
+        if (added.nonEmpty || partKeys.nonEmpty) df.schema else pv.schema
+    }
+    publish(prevSnap.map(_.version), carried = prev, tag) { dir =>
       val appendWriter = df.write.mode("append")
       (if (partKeys.nonEmpty) appendWriter.partitionBy(partKeys: _*) else appendWriter)
         .parquet(dir.toString)
-    } { own =>
+    }((_, _) => schema) { own =>
       // O(batch) stats work, like the data write itself: new files'
       // footers are harvested, carried files' rows COPY from the
       // previous _stats (keys are root-relative, so they stay valid
@@ -311,17 +334,15 @@ final class VersionedTable(val root: String) {
       .collect().map(r => canon(r.getString(0))).toSet // bounded by |files|
     if (hit.isEmpty) return v.version
     val (rewrite, carry) = files.partition(f => hit.contains(canon(f)))
-    // evolution carries forward; a partitioned chain that never recorded
-    // one (a plain partitioned commit) records its full read schema NOW —
-    // the rewritten snapshot spans version directories from here on
-    val schema = v.schema.orElse(if (partKeys.nonEmpty) Some(full.schema) else None)
-    publish(Some(v.version), carried = carry, schema, tag = None) { dir =>
+    // the schema carries forward: it pins partition column types once the
+    // rewritten snapshot spans version directories
+    publish(Some(v.version), carried = carry, tag = None) { dir =>
       val delWriter = readFiles(spark, v, rewrite)
         .filter(not(coalesce(cond, lit(false))))
         .write.mode("append")
       (if (partKeys.nonEmpty) delWriter.partitionBy(partKeys: _*) else delWriter)
         .parquet(dir.toString)
-    }(own => propagateStats(spark, v, carry, own))
+    }((_, _) => v.schema)(own => propagateStats(spark, v, carry, own))
   }
 
   /** Small-file compaction — the maintenance commit every appendCommit
@@ -383,18 +404,13 @@ final class VersionedTable(val root: String) {
     // an exchange, so each output file is a pure byte-merge of inputs
     val bins = math.max(1L,
       math.ceil(small.map(_._2).sum.toDouble / targetBytes).toLong).toInt
-    // evolution carries forward; a partitioned chain records its full
-    // read schema from the first maintenance commit on (see deleteWhere)
-    // — the schema of the WHOLE snapshot, not the rewritten subset,
-    // so partition type inference sees every partition value
-    val schema = v.schema.orElse(
-      if (partKeys.nonEmpty) Some(readFiles(spark, v, files).schema) else None)
-    publish(Some(v.version), carried = carry.map(_._1), schema, tag = None) { dir =>
+    // the schema of the WHOLE snapshot carries forward (see deleteWhere)
+    publish(Some(v.version), carried = carry.map(_._1), tag = None) { dir =>
       val smallFrame = readFiles(spark, v, small.map(_._1)) // schema-aware: see deleteWhere
       val cmpWriter = smallFrame.coalesce(bins).write.mode("append")
       (if (partKeys.nonEmpty) cmpWriter.partitionBy(partKeys: _*) else cmpWriter)
         .parquet(dir.toString)
-    }(own => propagateStats(spark, v, carry.map(_._1), own))
+    }((_, _) => v.schema)(own => propagateStats(spark, v, carry.map(_._1), own))
   }
 
   /** Stats continuity for the maintenance commits: a snapshot produced
@@ -465,38 +481,23 @@ final class VersionedTable(val root: String) {
     // columns on every layout: own-dir manifests read under one basePath,
     // partitioned CROSS-directory chains (partitioned appends/maintenance)
     // read per owning directory under the recorded full schema, unioned.
-    // Across an evolution boundary BOTH sides read through the newer
-    // side's unified schema (falling back to the older side's): a
-    // pre-evolution row then carries NULL in the added column on both
-    // sides, so rows equal in their original columns produce no
-    // spurious deltas, and genuinely-new rows diff with the column
-    // attached. Without this the two sides' column sets differ and the
-    // exceptAll is a hard error.
-    // FALLBACK GUARD (round-13 ADVICE): v1's schema may only stand in
-    // for a schema-less v2 when it COVERS v2's actual file schema — a
-    // LATER full commit over an evolved v1 records no schema, and
-    // reading it through the OLDER schema would silently project away
-    // columns that exist only in v2 (rows differing only there would
-    // produce no delta — worse than the loud column-set mismatch this
-    // fallback replaced). Cover check = one footer read of v2's first
-    // file: every v2 field present in v1's schema under the same
-    // catalogString type; anything else reads plain and lets the
-    // mismatch surface in exceptAll.
-    val unified = s2.schema.orElse(s1.schema.filter { older =>
-      f2.headOption.exists { f =>
-        scala.util.Try(spark.read.parquet(f).schema).toOption.exists(_.fields.forall(fld =>
-          older.fields.exists(g =>
-            g.name == fld.name && g.dataType.catalogString == fld.dataType.catalogString)))
-      }
-    })
-    // each side falls back to its OWN recorded schema when no unified
-    // schema stands: an evolved side must never degrade to a plain
-    // mixed-schema read (the arbitrary-seed corruption class) just
-    // because the OTHER side failed the cover check — the column-set
-    // mismatch then surfaces loudly in exceptAll, which is the point
-    def readSide(v: Snapshot, fs: Seq[String]): Option[DataFrame] =
-      if (fs.isEmpty) None else Some(readSubset(spark, unified.orElse(v.schema), fs))
-    (readSide(s2, only2), readSide(s1, only1)) match {
+    // Both sides read through ONE recorded schema: v2's when it holds
+    // every column of v1's (an evolution adds columns), else v1's when it
+    // holds every column of v2's. A row then carries NULL in a column its
+    // file lacks on both sides alike, so rows equal in their shared
+    // columns produce no spurious deltas and no column is ever projected
+    // away. When neither schema holds the other, no change feed is
+    // defined, and the diff fails by name.
+    def holds(a: StructType, b: StructType): Boolean = b.fieldNames.forall(a.fieldNames.contains)
+    val unified =
+      if (holds(s2.schema, s1.schema)) s2.schema
+      else if (holds(s1.schema, s2.schema)) s1.schema
+      else throw new IllegalArgumentException(
+        s"diffVersions($v1, $v2) under $root: neither snapshot's schema holds every " +
+          s"column of the other (${s1.schema.simpleString} vs ${s2.schema.simpleString})")
+    def readSide(fs: Seq[String]): Option[DataFrame] =
+      if (fs.isEmpty) None else Some(readSubset(spark, unified, fs))
+    (readSide(only2), readSide(only1)) match {
       case (None, None) =>
         // identical manifests — an empty frame in the snapshot's schema
         val base = readVersion(spark, v2)
@@ -599,9 +600,9 @@ final class VersionedTable(val root: String) {
     * version first; the attempt's directory and temp record are then
     * removed, and nothing it wrote is referenced.
     */
-  private def publish(
-      base: Option[Long], carried: Seq[String], schema: Option[StructType], tag: Option[String])(
-      write: Path => Unit)(stats: Seq[String] => Seq[String]): Long = {
+  private def publish(base: Option[Long], carried: Seq[String], tag: Option[String])(
+      write: Path => Unit)(schema: (Path, Seq[String]) => StructType)(
+      stats: Seq[String] => Seq[String]): Long = {
     val v = base.fold(0L)(_ + 1L)
     Files.createDirectories(logDir)
     val dir = Iterator.from(0).map(k => rootPath.resolve(if (k == 0) s"v=$v" else s"v=${v}_$k"))
@@ -621,7 +622,9 @@ final class VersionedTable(val root: String) {
           .toSeq.sorted
       } finally w.close()
     }
-    val statsFile = Some(stats(own.map(dir.resolve(_).toString))).filter(_.nonEmpty).map { lines =>
+    val ownAbs = own.map(dir.resolve(_).toString)
+    val readSchema = schema(dir, ownAbs)
+    val statsFile = Some(stats(ownAbs)).filter(_.nonEmpty).map { lines =>
       Files.write(dir.resolve("_stats"), lines.sorted.mkString("\n").getBytes(StandardCharsets.UTF_8))
     }
     afterStep("stats")
@@ -633,8 +636,8 @@ final class VersionedTable(val root: String) {
       "version" -> JLong(v),
       "timestamp" -> JLong(System.currentTimeMillis()),
       "dir" -> JString(rel(dir)),
-      "files" -> JArray(files.map(JString(_)).toList)) ++
-      schema.map(s => "schema" -> parse(allNullable(s).json)) ++
+      "files" -> JArray(files.map(JString(_)).toList),
+      "schema" -> parse(allNullable(readSchema).json)) ++
       tag.map(t => "tag" -> JString(t)) ++
       statsFile.map(f => "stats" -> JString(rel(f))))
     val tmp = logDir.resolve(s"$v.json.${java.util.UUID.randomUUID()}.tmp")
@@ -683,8 +686,8 @@ final class VersionedTable(val root: String) {
           case x => throw bad("files", x)
         }
         val schema = j \ "schema" match {
-          case JNothing => None
-          case s => Some(DataType.fromJson(compact(render(s))).asInstanceOf[StructType])
+          case s: JObject => DataType.fromJson(compact(render(s))).asInstanceOf[StructType]
+          case x => throw bad("schema", x)
         }
         Snapshot(num("version"), num("timestamp"), dir, files, schema, str("tag"),
           str("stats").map(rootPath.resolve))
@@ -729,17 +732,16 @@ final class VersionedTable(val root: String) {
     readVersion(spark, v)
   }
 
-  /** Recorded schemas (evolved or partitioned chains) are forced fully
-    * NULLABLE (top-level and nested): pre-evolution files read the added
+  /** Recorded schemas are forced fully NULLABLE (top-level and nested),
+    * as a parquet read reports them: pre-evolution files read the added
     * columns as all-NULL, so a non-null marking inherited from the
     * evolving batch's lineage would hand the reader a promise the data
     * breaks. Nullability was never part of the append contract anyway
-    * (see the catalogString compare). Readers of a schema-bearing
-    * snapshot pass it as the explicit read schema: Spark's parquet source
-    * fills columns absent from a file with NULL deterministically, where
-    * a schema-less multi-file read would seed from an arbitrary file and
-    * silently drop the others' extra columns. Homogeneous snapshots
-    * record no schema.
+    * (see the catalogString compare). Readers pass the recorded schema as
+    * the explicit read schema: Spark's parquet source fills columns absent
+    * from a file with NULL deterministically, where a multi-file read
+    * without one would seed from an arbitrary file and silently drop the
+    * others' extra columns.
     */
   private def allNullable(dt: DataType): DataType = {
     import org.apache.spark.sql.types._
@@ -752,23 +754,6 @@ final class VersionedTable(val root: String) {
       case other => other
     }
   }
-
-  /** The schema snapshot `s` serves: its recorded schema when present,
-    * else the (homogeneous) schema of its first data file's footer —
-    * except hive-partitioned snapshots, whose partition columns live in
-    * paths, not footers: those pay one inferred read (the price of the
-    * FIRST partitioned append's contract check; every later snapshot in
-    * the chain records its schema).
-    */
-  private def schemaOf(spark: SparkSession, s: Snapshot): StructType =
-    s.schema.getOrElse {
-      if (s.files.isEmpty) new StructType()
-      // readSubset, NOT readVersion: the indexed read path calls back
-      // into schemaOf for its relation schema — going through
-      // readVersion here would recurse
-      else if (partitionKeysOf(s.files).nonEmpty) readSubset(spark, None, s.files).schema
-      else spark.read.parquet(s.files.head).schema
-    }
 
   /** Data-file paths of one snapshot per its commit record, or None for a
     * version that is not published (or was vacuumed). Readers resolve
@@ -1215,17 +1200,16 @@ final class VersionedTable(val root: String) {
   }
 
   // an evolved snapshot reads through its recorded unified schema —
-  // pre-evolution files fill the added columns with NULL; without it a
-  // mixed-schema read seeds from an arbitrary file (see appendCommit)
+  // pre-evolution files fill the added columns with NULL
   private def readFiles(spark: SparkSession, s: Snapshot, files: Seq[String]): DataFrame =
     readSubset(spark, s.schema, files)
 
-  /** Read an arbitrary manifest-file subset under an optional explicit
+  /** Read an arbitrary manifest-file subset under an explicit recorded
     * schema, restoring hive partition columns whatever version
     * directories the files live in: a single-owner subset reads under
-    * its owning directory's basePath (ordinary hive inference); an
-    * unpartitioned multi-directory subset reads flat (no partition
-    * columns to restore); a PARTITIONED multi-directory subset — the
+    * its owning directory's basePath (the schema types its partition
+    * columns); an unpartitioned multi-directory subset reads flat (no
+    * partition columns to restore); a PARTITIONED multi-directory subset — the
     * partitioned append/maintenance chains of round-13 ask #2 — reads
     * one per-directory basePath group at a time, unioned under the
     * snapshot's recorded full schema, which pins partition column types
@@ -1233,25 +1217,15 @@ final class VersionedTable(val root: String) {
     * Filters on partition columns still prune: each branch of the union
     * is an ordinary hive layout under its own basePath.
     */
-  private def readSubset(
-      spark: SparkSession,
-      schemaOpt: Option[StructType],
-      files: Seq[String]): DataFrame = {
-    def rd = schemaOpt.map(spark.read.schema).getOrElse(spark.read)
+  private def readSubset(spark: SparkSession, schema: StructType, files: Seq[String]): DataFrame = {
+    def rd = spark.read.schema(schema)
     val groups = files.groupBy(owningVersionDir).toSeq.sortBy(_._1)
-    if (files.isEmpty) rd.parquet(files: _*) // degenerate: same error shape as before
-    else if (groups.size == 1)
+    if (groups.size == 1)
       rd.option("basePath", groups.head._1).parquet(files: _*)
     else if (partitionKeysOf(files).isEmpty)
       rd.parquet(files: _*)
-    else {
-      val s = schemaOpt.getOrElse(throw new IllegalStateException(
-        s"partitioned file subset spans version directories under $root but no full " +
-          "schema is recorded — table corrupt (partitioned appends always record one)"))
-      groups.map { case (dir, fs) =>
-        spark.read.schema(s).option("basePath", dir).parquet(fs: _*)
-      }.reduce(_ unionByName _)
-    }
+    else
+      groups.map { case (dir, fs) => rd.option("basePath", dir).parquet(fs: _*) }.reduce(_ unionByName _)
   }
 
   /** Read the published snapshot (errors on a never-committed table, like
@@ -1274,9 +1248,9 @@ final class VersionedTable(val root: String) {
     // listing, composing with the stats walk (one scan even when a
     // partitioned chain spans version directories). Evolution still
     // holds: the relation's dataSchema is the recorded unified schema,
-    // so pre-evolution files NULL-fill.
-    val s = published(v)
-    if (s.files.nonEmpty) readIndexed(spark, s) else readFiles(spark, s, s.files)
+    // so pre-evolution files NULL-fill. The schema comes from the record,
+    // so resolving the relation opens no file and runs no job.
+    readIndexed(spark, published(v))
   }
 
   /** The integrated-skipping relation behind [[readVersion]]: a
@@ -1292,7 +1266,7 @@ final class VersionedTable(val root: String) {
     */
   private def readIndexed(spark: SparkSession, s: Snapshot): DataFrame = {
     val files = s.files
-    val fullSchema = schemaOf(spark, s)
+    val fullSchema = s.schema
     val partKeys = partitionKeysOf(files)
     val partSchema = StructType(partKeys.map(k =>
       fullSchema.fields.find(_.name == k).getOrElse(throw new IllegalStateException(
@@ -1399,7 +1373,7 @@ object VersionedTable {
     */
   private final case class Snapshot(
       version: Long, timestamp: Long, dir: Path, files: Seq[String],
-      schema: Option[StructType], tag: Option[String], stats: Option[Path])
+      schema: StructType, tag: Option[String], stats: Option[Path])
 
   private val RecordName = """(\d+)\.json""".r
   private val TempRecordName = """(\d+)\.json\.[^.]+\.tmp""".r

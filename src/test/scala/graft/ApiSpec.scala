@@ -2,14 +2,13 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.time.LocalDate
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.{Callable, Executors}
 
 import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -112,26 +111,7 @@ class ApiSpec extends AnyFunSuite {
   }
 
   /** The Spark jobs `body` submits from this thread. */
-  def jobsIn[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val key = "graft.spec.jobProbe"
-    val tag = java.util.UUID.randomUUID().toString
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty(key) == tag) n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(key, tag)
-    try {
-      val out = body
-      org.apache.spark.GraftBusBridge.drain(sc)
-      (out, n.get)
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-    }
-  }
+  def jobsIn[T](body: => T): (T, Int) = SparkJobs.in(spark)(body)
 
   test("one request with a move type runs at most 4 Spark jobs; collecting its results runs none") {
     val table = newTable()
@@ -275,6 +255,58 @@ class ApiSpec extends AnyFunSuite {
       else if (monthKeys((c.branch, mt, d.getMonthValue))) "month"
       else "default"
     assert(levels.toSet === Set("day", "month", "default"))
+  }
+
+  test("a warm request — head version, snapshot read, forecast, collect — runs at most 3 Spark jobs") {
+    // the benchmark's request shape: the per-day model predicted over the
+    // requested branch's window, the percentages read from the head snapshot
+    val table = newTable()
+    def call(): (Array[DailyForecast], Array[ForecastSummary]) = {
+      val date = LocalDate.parse(request.date)
+      val (s, e) = Forecast.windowClamp(date, today)
+      val days = Forecast.explodeWindow(
+        Seq(request.branch).toDF("branch"), lit(java.sql.Date.valueOf(s)), lit(java.sql.Date.valueOf(e)))
+      val model = SeasonalModel.predict(fitted, days, ServingQueries.FixtureModelSpec)
+        .select("branch", "ds", "yhat_upper")
+      val pct = pctAt(table, table.latestVersion().get)
+      val (daily, summary) = Api.forecast(spark, request, model, pct, today)
+      (daily.collect(), summary.collect())
+    }
+    call() // warm
+    val ((daily, summary), jobs) = jobsIn(call())
+    assert(daily.nonEmpty && daily.forall(_.comment_class != "no_move_type") && summary.length === 1)
+    assert(jobs <= 3, s"a warm request ran $jobs jobs")
+  }
+
+  test("concurrent requests answer as they do one at a time, on the same four prepared formulas") {
+    val inputs = for {
+      b <- branches.take(3) :+ unknownBranch
+      d <- Seq(crossMonth, edgeDates(5))
+      mt <- moveTypes.map(Option(_)) ++ Seq(None, Some("NoSuchType"))
+    } yield ForecastInput(d.toString, b, mt)
+    def respond(in: ForecastInput): (Seq[DailyForecast], Seq[ForecastSummary]) = {
+      val (daily, summary) = Api.forecast(spark, in, flat, pct01, today)
+      (daily.collect().toSeq.sortBy(_.ds.getTime), summary.collect().toSeq)
+    }
+    val sequential = inputs.map(respond)
+    val formulas = Api.formulasFor(spark)
+    assert(formulas.size === 4)
+    val pool = Executors.newFixedThreadPool(4)
+    try {
+      // each caller walks every request from its own starting point, so the
+      // callers interleave different branches, dates and move types
+      val callers = (0 until 4).map { c =>
+        pool.submit(new Callable[Seq[(Int, (Seq[DailyForecast], Seq[ForecastSummary]))]] {
+          def call() = inputs.indices.map(i => (i + c * inputs.size / 4) % inputs.size)
+            .map(i => i -> respond(inputs(i)))
+        })
+      }
+      callers.flatMap(_.get(5, java.util.concurrent.TimeUnit.MINUTES)).foreach { case (i, got) =>
+        assert(got === sequential(i), inputs(i))
+      }
+    } finally pool.shutdown()
+    assert(Api.formulasFor(spark) eq formulas, "a request prepared its formulas again")
+    assert(formulas.size === 4)
   }
 
   test("an unknown branch returns two empty Datasets") {

@@ -122,11 +122,14 @@ class ModelStoreSpec extends AnyFunSuite {
       .take(8).map(b => f"${b & 0xFF}%02x").mkString
     // the key a store without the format constant derived for this dir
     assert(ModelStore.sourceKey(dir) !== key(Nil))
-    // format 2 (the `_latest`/`_manifest` layout) gets a different key from
-    // format 3 (the `_log` commit records), so its tables are refit, not read
-    assert(ModelStore.StoreFormat === 3)
+    // format 2 (the `_latest`/`_manifest` layout) and format 3 (`_log`
+    // commit records without a schema for plain commits) get different
+    // keys from format 4 (every record carries its schema), so their
+    // tables are refit, not read
+    assert(ModelStore.StoreFormat === 4)
     assert(ModelStore.sourceKey(dir) !== key(Seq("format=2")))
-    assert(ModelStore.sourceKey(dir) === key(Seq("format=3")))
+    assert(ModelStore.sourceKey(dir) !== key(Seq("format=3")))
+    assert(ModelStore.sourceKey(dir) === key(Seq("format=4")))
     assert(ModelStore.tableFor("demo", dir, tmpRoot()).root.endsWith(ModelStore.sourceKey(dir)))
   }
 }

@@ -427,6 +427,30 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(rows23.toSeq === Seq(1L -> "insert"))
   }
 
+  test("every commit records its read schema; readVersion resolves it with no Spark job") {
+    import spark.implicits._
+    val df = (1L to 40L)
+      .map(i => (i, s"b${i % 3}", i % 12 + 1, java.sql.Date.valueOf(s"2024-01-${i % 28 + 1}"), i * 0.5))
+      .toDF("id", "branch", "month", "day", "x")
+      .repartition(2)
+    Seq(Nil, Seq("month"), Seq("month", "branch")).foreach { parts =>
+      val t = freshTable()
+      val v = t.commit(df, partitionBy = parts)
+      val rec = org.json4s.jackson.JsonMethods.parse(
+        new String(java.nio.file.Files.readAllBytes(recordPath(t, v)), "UTF-8"))
+      assert((rec \ "schema").isInstanceOf[org.json4s.JObject], s"$parts: the record holds no schema")
+      // the parquet read that inferred the schema from footers and paths
+      // before every record carried one
+      val inferred = spark.read.option("basePath", s"${t.root}/v=$v").parquet(t.manifest(v).get: _*)
+      val (read, jobs) = SparkJobs.in(spark)(t.readVersion(spark, v))
+      assert(jobs === 0, s"$parts: readVersion ran $jobs jobs")
+      assert(read.schema === inferred.schema, parts)
+      if (parts.nonEmpty)
+        assert(read.schema("month").dataType === org.apache.spark.sql.types.IntegerType, parts)
+      assert(read.collect().map(_.toString).sorted === inferred.collect().map(_.toString).sorted, parts)
+    }
+  }
+
   test("diffVersions: hive-partitioned snapshots keep their partition column in the compare") {
     // round-9 ADVICE: the manifest path read explicit file paths without
     // a basePath, so the partition column vanished and rows differing
@@ -1046,15 +1070,23 @@ class VersionedTableSpec extends AnyFunSuite {
     t.commit(Seq((1L, "a")).toDF("id", "s"))
     val v1 = t.appendCommit(
       Seq((2L, "b", 20L)).toDF("id", "s", "v"), allowEvolution = true)
-    // a FULL commit (never records a schema) whose rows match v1 exactly in
-    // (id, s, v) but add column w — pre-guard, the fallback read BOTH
-    // sides through v1's schema, projected w away, and reported ZERO
-    // deltas for a version that demonstrably changed; the guard reads
-    // each side through its own schema and lets the mismatch surface
+    // a FULL commit whose rows match v1 exactly in (id, s, v) but add
+    // column w — a read of BOTH sides through v1's schema would project w
+    // away and report ZERO deltas for a version that demonstrably
+    // changed. v2's recorded schema holds every column of v1's, so both
+    // sides read through it: every row changed, with w attached
     val v2 = t.commit(
       Seq((1L, "a", Option.empty[Long], 0.5), (2L, "b", Option(20L), 0.7))
         .toDF("id", "s", "v", "w"))
-    intercept[Exception](t.diffVersions(spark, v1, v2).collect())
+    val d = t.diffVersions(spark, v1, v2)
+    assert(d.columns.toSeq === Seq("id", "s", "v", "w", "change"))
+    assert(d.collect().map(r => (r.getLong(0), Option(r.get(3)), r.getString(4))).toSet === Set(
+      (1L, None, "delete"), (2L, None, "delete"), (1L, Some(0.5), "insert"), (2L, Some(0.7), "insert")))
+    // a full commit that drops v and w and adds x: neither schema holds
+    // the other, no change feed is defined, and the diff fails by name
+    val v3 = t.commit(Seq((1L, "a", 1.0)).toDF("id", "s", "x"))
+    val e = intercept[IllegalArgumentException](t.diffVersions(spark, v2, v3).collect())
+    assert(e.getMessage.contains("neither snapshot's schema holds"))
   }
 
   test("stats skipping: a prune on an evolution-added column keeps every pre-evolution file") {
