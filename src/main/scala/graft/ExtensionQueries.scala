@@ -1085,7 +1085,6 @@ object ExtensionQueries {
     // — the head (version 1) holds more rows, so a hash match here
     // gates that version selection really happened.
     "x137_sql_snapshot_read" -> ((s, dir) => {
-      GraftExtensions.register(s)
       val root = statsTableFor(s, dir).root
       s.sql(
         s"SELECT doc_id, source, n_chars FROM graft_table('$root', 0) " +
@@ -1136,7 +1135,6 @@ object ExtensionQueries {
     // the SAME oracle restatement, so a hash match gates that the SQL
     // face computes the identical feed.
     "x141_sql_cdc" -> ((s, dir) => {
-      GraftExtensions.register(s)
       val root = cdcTableFor(s, dir).root
       s.sql(
         s"SELECT change, doc_id, source, n_chars FROM graft_table_changes('$root', 0, 2) " +

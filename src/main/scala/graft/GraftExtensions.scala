@@ -8,13 +8,15 @@ import graft.functions.{BpeApplyExpr, MinHashSigExpr}
 import graft.operators.Dedup
 
 /** SparkSessionExtensions entry point: registers the engine's native
-  * functions so plain `spark.sql(...)` can use them —
+  * functions so plain `spark.sql(...)` can use them, and the [[LocalFold]]
+  * optimizer rule —
   *
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   *
-  * or `SparkSession.builder.withExtensions(new GraftExtensions)`. For an
-  * already-running session (e.g. notebooks), `GraftExtensions.register`
-  * installs the same functions directly.
+  * or `SparkSession.builder.withExtensions(new GraftExtensions)`, which
+  * [[GraftSession.builder]] applies. For an already-running session (e.g.
+  * notebooks), `GraftExtensions.register` installs the same functions
+  * directly; an optimizer rule can only be added when a session is built.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   def apply(ext: SparkSessionExtensions): Unit = {
@@ -24,6 +26,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(GraftExtensions.bpeApplyFunction)
     ext.injectTableFunction(GraftExtensions.graftTableFunction)
     ext.injectTableFunction(GraftExtensions.graftTableChangesFunction)
+    ext.injectOptimizerRule(_ => LocalFold)
   }
 }
 

@@ -32,6 +32,10 @@ import org.apache.spark.sql.SparkSession
   *    bounds keep a short tail for debugging; they also offset the heap the
   *    retained classes take.
   *
+  * The builder applies [[GraftExtensions]]: the engine's SQL functions and
+  * the [[LocalFold]] optimizer rule, which answers a query over local
+  * relations on the driver with no Spark job.
+  *
   * Caveat: the codegen cache size is a static conf read once per JVM, at
   * the first codegen, from the session active then. It must be on the
   * session before any query runs, and a second session in the same JVM
@@ -87,6 +91,7 @@ object GraftSession {
       .config("spark.ui.retainedStages", RetainedStages.toString)
       .config("spark.ui.retainedTasks", RetainedTasks.toString)
       .config("spark.sql.ui.retainedExecutions", RetainedExecutions.toString)
+      .withExtensions(new GraftExtensions)
 
   def getOrCreate(
       master: String = "local[32]",

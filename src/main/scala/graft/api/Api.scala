@@ -59,7 +59,11 @@ object Api {
     * input date (strict parse + horizon cap — ValueError analogs as
     * IllegalArgumentException), applies the invalid-move-type silent
     * degrade, and answers from the requested branch's bounded state only:
-    *   - one collect of the branch's model rows for the clamped window;
+    *   - one collect of the branch's model rows for the clamped window,
+    *     which runs no Spark job when the model is local: a model table
+    *     built from driver rows, predicted over the window (the per-day
+    *     `SeasonalModel.predict` join included), folds into one local
+    *     relation at optimization ([[graft.LocalFold]]);
     *   - with a move type, one collect of the branch's percentage rows for
     *     that type in the (at most three) months the input date and the
     *     window touch — `pct` partitioned by `month` prunes to those files;

@@ -1,7 +1,14 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Source layer: typed readers over the driver's parquet testdata plus the
   * deterministic views that map the `events` table onto the reference's two
@@ -19,6 +26,10 @@ import org.apache.spark.sql.functions._
   * 100 TB these same readers point at a partitioned table and partition
   * pruning applies unchanged. No schema inference surprises: the testdata
   * schema is pinned in FIXTURES.md §2 and we only `select` declared columns.
+  *
+  * Resolving a reader runs no Spark job: [[table]] reads the schema from
+  * one parquet footer on the driver, where `spark.read.parquet` would run
+  * a job to read that same footer.
   */
 object Tables {
 
@@ -33,8 +44,34 @@ object Tables {
   val YearLo = 2019
   val YearHi = 2024
 
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val reader = spark.read
+    footerSchema(spark, path).foreach(reader.schema)
+    reader.parquet(path)
+  }
+
+  /** The schema `spark.read.parquet(path)` infers, read on the driver from
+    * the file Spark's `ParquetUtils.inferSchema` reads: `_common_metadata`,
+    * else `_metadata`, else the first data file by path, among the files
+    * Spark lists under `path`; converted under the session's conf, as
+    * Spark's schema inference converts it. None when the listing holds no
+    * file: the reader then fails as `spark.read.parquet` fails on a
+    * missing or empty path.
+    */
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val files = new InMemoryFileIndex(spark, Seq(new Path(path)), Map.empty, None)
+      .allFiles().sortBy(_.getPath.toString)
+    val summaries = Seq(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE, ParquetFileWriter.PARQUET_METADATA_FILE)
+    summaries.flatMap(name => files.find(_.getPath.getName == name)).headOption
+      .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
+      .map { file =>
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(file, spark.sessionState.newHadoopConf()), SKIP_ROW_GROUPS)
+        ParquetFileFormat.readSchemaFromFooter(
+          new Footer(file.getPath, footer), new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      }
+  }
 
   /** O1 general form: parameterized JDBC scan (the reference's
     * `pd.read_sql_query` with a fresh connection per call, main.py:56-66,
