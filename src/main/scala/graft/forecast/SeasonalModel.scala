@@ -2,7 +2,7 @@ package graft.forecast
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
@@ -228,7 +228,9 @@ object SeasonalModel {
     * @param cutoff training cutoff (reference: 2023-12-31)
     * @return (branch, coef array<double>, n long, resid_q double) — the
     *         "model store" as a TABLE, not 110 pickles (SURVEY O4): branch
-    *         is a column, the store is join-able and broadcast-able.
+    *         is a column, the store is join-able and broadcast-able. It
+    *         persists as a snapshot through `graft.sources.ModelStore`
+    *         (`SeasModels`).
     */
   def fit(
       daily: DataFrame,
@@ -274,18 +276,6 @@ object SeasonalModel {
       .withColumn("t_start", lit(java.sql.Date.valueOf(ts.start)))
       .withColumn("t_days", lit(ts.days))
   }
-
-  /** O4, restated: the model STORE is a parquet table keyed by branch —
-    * no filename parsing (main.py:169-182), no pickles; `branch` is a
-    * column and loading is a scan. Round-trips the full model state
-    * (coefficients, residual quantile, time scale).
-    */
-  def writeModels(models: DataFrame, path: String): Unit =
-    models.write.mode("overwrite").parquet(path)
-
-  def readModels(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-      .select("branch", "coef", "n", "resid_q", "t_start", "t_days")
 
   /** Inference: pure column math over a broadcast of the model table.
     *

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{Tables, VersionedTable}
 
 /** The precompute pipeline: Spark restatement of the reference's
   * `precompute_percentages.py` batch job.
@@ -123,10 +123,11 @@ object Percentages {
     *
     * Caveat for cluster deployments: localCheckpoint blocks are NOT
     * fault-tolerant (an executor loss kills the lineage-truncated RDD).
-    * The production materialization point is the PERSISTED table —
-    * writePercentages then readPercentages — which is also this engine's
-    * serving architecture; the in-memory checkpoint is the right tool for
-    * self-contained single-job queries like the verification harness.
+    * The production materialization point is the PERSISTED snapshot —
+    * [[upsertPercentagesSnapshot]] then `VersionedTable.read` — which is
+    * also this engine's serving architecture; the in-memory checkpoint is
+    * the right tool for self-contained single-job queries like the
+    * verification harness.
     */
   def percentagesSingleScan(historical: DataFrame): DataFrame = {
     val mg  = moveGrouped(historical).localCheckpoint()
@@ -167,30 +168,6 @@ object Percentages {
       .groupBy(col("branch"), col("move_type"), col("month"))
       .agg(avg(col("avg_percentage")).as("month_avg"))
 
-  /** O5: idempotent persisted form of the percentages table. Partitioned by
-    * `month` (the reference's own PK prefix suggests the access pattern:
-    * serving always probes one (month, day) slice — partition pruning replaces
-    * the reference's composite index, precompute_percentages.py:73-74).
-    * Full overwrite-recompute is the default write mode; the reference's
-    * ON CONFLICT upsert (precompute_percentages.py:218-233) is available
-    * as [[upsertPercentages]]; the checkpoint/resume machinery (O6,
-    * precompute_percentages.py:82-91) is subsumed by deterministic
-    * recompute + Spark stage retry.
-    */
-  def writePercentages(pct: DataFrame, outPath: String): Unit =
-    pct.write.mode("overwrite").partitionBy("month").parquet(outPath)
-
-  /** O5 read side: serving reads the materialized table; `month` pruning
-    * applies when callers filter on it.
-    */
-  def readPercentages(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-      // restore column order and the partition column's type (directory
-      // encoding infers int; the logical schema is long)
-      .select(
-        col("branch"), col("move_type"), col("month").cast("long"),
-        col("day"), col("move_cnt"), col("total_cnt"), col("avg_percentage"))
-
   private val PctKey = Seq("branch", "move_type", "month", "day")
   private val PctCols =
     Seq("branch", "move_type", "month", "day", "move_cnt", "total_cnt", "avg_percentage")
@@ -198,19 +175,20 @@ object Percentages {
   /** The reference's nightly maintenance cycle
     * (precompute_percentages.py runs as a cron over the full table),
     * incrementalized: recompute the dense percentage rows for ONLY the
-    * given months and merge them into the persisted table. Percentages
-    * for a month depend on all-years history for that month's (branch,
-    * day) keys — so the fact table is re-aggregated (one shuffle over the
-    * months' partitions once the month predicate is pushed down) but the
-    * WRITE touches only the affected partitions. Composes with the
-    * streaming ingest: after streamDailyCountsToTable lands a day's
+    * given months and upsert them into the next snapshot of `table`.
+    * Percentages for a month depend on all-years history for that month's
+    * (branch, day) keys — so the fact table is re-aggregated (one shuffle
+    * over the months' rows once the month predicate is pushed down), but
+    * only the recomputed keys are replaced. Composes with the streaming
+    * ingest: after `Ingest.streamDailyCountsByTypeToTable` lands a day's
     * facts, refreshing that day's month brings serving up to date.
+    * Returns the published version.
     */
   def refreshMonths(
       spark: SparkSession,
       historical: DataFrame,
       months: Seq[Long],
-      pctPath: String): Unit = {
+      table: VersionedTable): Long = {
     // move-type domain from the FULL table: a full recompute emits
     // zero-percentage rows for move types absent from the refreshed
     // months, and the incremental path must produce identical rows
@@ -220,90 +198,35 @@ object Percentages {
     val tg = mg
       .groupBy(col("branch"), col("month"), col("day"))
       .agg(sum(col("move_cnt")).as("total_cnt"))
-    upsertPercentages(spark, denseRatio(mg, tg, mts), pctPath)
+    upsertPercentagesSnapshot(spark, denseRatio(mg, tg, mts), table)
     // NOTE upsert semantics (same as the reference's ON CONFLICT): rows
     // whose key vanishes from the recompute are NOT deleted — history
-    // shrinking under a key needs the full overwrite path.
+    // shrinking under a key needs a full recompute committed whole
   }
 
-  /** O5/O6 incremental write mode: the reference's
+  /** O5: the persisted percentages table, and the reference's
     * `ON CONFLICT (branch, move_type, month, day) DO UPDATE` upsert
-    * (precompute_percentages.py:218-233), restated as a partition-scoped
-    * MERGE over the persisted table. An update row supersedes the stored
-    * row with its key; stored rows without a matching update survive.
+    * (precompute_percentages.py:218-233) restated as one key-merge
+    * snapshot of `table` ([[VersionedTable.upsert]]): an update row
+    * supersedes the stored row with its key, stored rows without a
+    * matching update survive, and on a never-committed table it is a
+    * plain write. Each snapshot is partitioned by `month` (the reference's
+    * own PK prefix suggests the access pattern: serving probes one
+    * (month, day) slice, and partition pruning replaces the reference's
+    * composite index, precompute_percentages.py:73-74); `month` reads back
+    * as `int`, the hive partition type. Concurrent readers always see a
+    * complete table, the transactional guarantee of the reference's
+    * Postgres upsert; the checkpoint/resume machinery (O6,
+    * precompute_percentages.py:82-91) is subsumed by deterministic
+    * recompute + Spark stage retry.
     *
-    * Scale posture: only the month partitions PRESENT in `updates` are
-    * read or rewritten (dynamic partition overwrite — a daily run touches
-    * 1-2 of the 12 partitions); the touched-month row set is bounded
-    * (<= |branches| x 31 x |move types| per month) so the anti-join
-    * broadcasts and the pre-write localCheckpoint is cheap. The checkpoint
-    * is REQUIRED, not an optimization: the merged frame reads the same
-    * parquet path the write overwrites, so lineage must be cut before the
-    * commit deletes the old files.
-    */
-  def upsertPercentages(spark: SparkSession, updates: DataFrame, path: String): Unit = {
-    val months = updates.select("month").distinct().collect().map(_.getLong(0)) // <= 12 values
-    // First run against a never-written path degrades to a plain write —
-    // the reference's ON CONFLICT upsert works on an empty table too
-    // (precompute_percentages.py:218-233).
-    // match the error CONDITION, not message text: Spark 4 exposes the
-    // stable error class on AnalysisException, while wording changes
-    // across versions ("Path does not exist" in 3.x) would silently turn
-    // the first-run fallback into a hard failure
-    val existing =
-      try Some(readPercentages(spark, path))
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "PATH_NOT_FOUND" => None
-      }
-    val merged = existing match {
-      case Some(stored) =>
-        stored
-          .filter(col("month").isin(months.toIndexedSeq: _*))
-          .join(updates.select(PctKey.map(col): _*), PctKey, "left_anti")
-          .select(PctCols.map(col): _*)
-          .unionByName(updates.select(PctCols.map(col): _*))
-          // REQUIRED lineage cut: the merged frame reads the same parquet
-          // path the write below overwrites
-          .localCheckpoint()
-      case None => updates.select(PctCols.map(col): _*)
-    }
-    merged.write
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("month")
-      .parquet(path)
-  }
-
-  /** Reader-safe variant of [[upsertPercentages]]: same merge semantics,
-    * but committed as an immutable snapshot with one atomic commit record
-    * ([[graft.sources.VersionedTable]]) instead of overwriting partitions
-    * in place — concurrent readers always see a complete table, matching
-    * the transactional guarantee of the reference's Postgres ON CONFLICT
-    * upsert (precompute_percentages.py:218-233).
-    *
-    * Tradeoff vs the in-place path: each commit writes the FULL table —
-    * free here because the percentages table is bounded
+    * Tradeoff: each commit writes the FULL table — bounded here
     * (|branches| x 366 x |move types| at any input scale) — in exchange
-    * for snapshot isolation, time travel over retained versions, and no
-    * lineage hazard (the new version's directory is disjoint from the one
-    * it reads, so no localCheckpoint is needed).
+    * for snapshot isolation and time travel over retained versions.
     */
   def upsertPercentagesSnapshot(
       spark: SparkSession,
       updates: DataFrame,
-      table: graft.sources.VersionedTable): Long = {
-    val merged = table.latestVersion() match {
-      case Some(v) =>
-        table.readVersion(spark, v)
-          // restore the partition column's logical type (directory
-          // encoding infers int; the schema is long) and column order
-          .withColumn("month", col("month").cast("long"))
-          .select(PctCols.map(col): _*)
-          .join(updates.select(PctKey.map(col): _*), PctKey, "left_anti")
-          .unionByName(updates.select(PctCols.map(col): _*))
-      case None => updates.select(PctCols.map(col): _*)
-    }
-    table.commit(merged, partitionBy = Seq("month"))
-  }
+      table: VersionedTable): Long =
+    table.upsert(spark, updates.select(PctCols.map(col): _*), PctKey, Seq("month"))
 }

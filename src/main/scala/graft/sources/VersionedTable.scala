@@ -13,12 +13,13 @@ import org.json4s.jackson.JsonMethods.{compact, parse, render}
   * the Delta Lake log (Armbrust et al., PVLDB 13(12), 2020) restated on
   * plain parquet for this dependency-closed environment.
   *
-  * Why it exists: `Percentages.upsertPercentages` overwrites partitions in
-  * place, which is correct single-writer but NOT safe against concurrent
-  * readers — a reader that lists files mid-commit sees a half-deleted
-  * partition. The reference's Postgres upsert
-  * (precompute_percentages.py:218-233) is transactional; this is the
-  * engine's equivalent reader-safe write path.
+  * Why it exists: the reference's precompute cron upserts its Postgres
+  * table (precompute_percentages.py:218-233) while the API reads it, and
+  * that upsert is transactional. An in-place parquet overwrite is not: a
+  * reader that lists files mid-commit sees a half-deleted partition. This
+  * table is the engine's one persistence path for served state — the
+  * percentages ([[upsert]]), the fitted models (`ModelStore`) and the
+  * streamed counts all commit through it.
   *
   * Layout:
   * {{{
@@ -41,8 +42,8 @@ import org.json4s.jackson.JsonMethods.{compact, parse, render}
   * from `_log`; the directory name says nothing about which files a
   * version holds.
   *
-  * Protocol (every write — [[commit]], [[appendCommit]], [[deleteWhere]],
-  * [[compactFiles]]):
+  * Protocol (every write — [[commit]], [[upsert]], [[appendCommit]],
+  * [[deleteWhere]], [[compactFiles]]):
   *   1. read the head `base`; the new version is `base + 1`;
   *   2. create this attempt's own data directory (`Files.createDirectory`:
   *      `v=<v>`, or the first free `v=<v>_<k>` when a crashed or
@@ -62,9 +63,12 @@ import org.json4s.jackson.JsonMethods.{compact, parse, render}
   * When two writers commit on the same base, exactly one link succeeds;
   * the other gets a [[CommitConflictException]], publishes nothing and
   * may retry on the new head (no automatic retry — the caller decides
-  * whether its batch still applies). The check is on the base only: a
-  * caller that built `df` from an older snapshot than the head its write
-  * starts on is not told. POSIX and HDFS provide the
+  * whether its batch still applies). The check is on the base: a write
+  * that reads the table publishes on the version it read ([[upsert]] and
+  * the maintenance commits), so a commit landing between its read and its
+  * link is a conflict, never silently overwritten. [[commit]] and
+  * [[appendCommit]] take the head when they start, so a caller that built
+  * `df` from an older snapshot itself is not told. POSIX and HDFS provide the
   * put-if-absent primitive; an object store needs its own (a conditional
   * put, or a catalog compare-and-swap) — only the link step moves.
   * A record that cannot be parsed is a corrupt table, and every read and
@@ -90,6 +94,13 @@ final class VersionedTable(val root: String) {
 
   /** Published version, or None for a never-committed table. */
   def latestVersion(): Option[Long] = versions().lastOption
+
+  /** Protocol step 1: the head a write builds on and publishes on. */
+  private def base(): Option[Long] = {
+    val head = latestVersion()
+    afterStep("base")
+    head
+  }
 
   /** All published (and not yet vacuumed) versions, ascending. */
   def versions(): Seq[Long] =
@@ -124,7 +135,18 @@ final class VersionedTable(val root: String) {
       statsColumns: Seq[String] = Nil,
       bloomColumns: Seq[String] = Nil,
       bloomBits: Int = DefaultBloomBits): Long =
-    publish(latestVersion(), carried = Nil, tag) { dir =>
+    commitOn(base(), df, partitionBy, tag, statsColumns, bloomColumns, bloomBits)
+
+  /** [[commit]] published on `base`: a conflict when the head moved past it. */
+  private def commitOn(
+      base: Option[Long],
+      df: DataFrame,
+      partitionBy: Seq[String],
+      tag: Option[String] = None,
+      statsColumns: Seq[String] = Nil,
+      bloomColumns: Seq[String] = Nil,
+      bloomBits: Int = DefaultBloomBits): Long =
+    publish(base, carried = Nil, tag) { dir =>
       val writer = df.write.mode("append")
       (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
         .parquet(dir.toString)
@@ -136,6 +158,38 @@ final class VersionedTable(val root: String) {
       harvestStats(own, statsColumns.toSet) ++
         harvestBloom(df.sparkSession, own, bloomColumns.toSet, bloomBits)
     }
+
+  /** Key-merge commit — the reference's `INSERT … ON CONFLICT (key) DO
+    * UPDATE` (precompute_percentages.py:218-233) as one snapshot: a stored
+    * row whose `key` appears in `updates` is replaced, every other stored
+    * row survives, and on a never-committed table this is a plain
+    * [[commit]]. Stored columns are read in `updates`' order and cast to
+    * its types, so a hive partition column (`month` reads back as `int`)
+    * merges with a `long` update. The head is read once, and the merge
+    * publishes on it: a commit landing in between is a
+    * [[CommitConflictException]], not a lost update. Each commit writes
+    * the whole merged table into its own directory, so the read never
+    * races the write.
+    */
+  def upsert(
+      spark: SparkSession,
+      updates: DataFrame,
+      key: Seq[String],
+      partitionBy: Seq[String] = Nil): Long = {
+    import org.apache.spark.sql.functions.col
+    val head = base()
+    val merged = head.fold(updates) { v =>
+      val stored = readVersion(spark, v)
+      stored
+        .select(updates.schema.map { f =>
+          if (stored.schema(f.name).dataType == f.dataType) col(f.name)
+          else col(f.name).cast(f.dataType).as(f.name)
+        }: _*)
+        .join(updates.select(key.map(col): _*), key, "left_anti")
+        .unionByName(updates)
+    }
+    commitOn(head, merged, partitionBy)
+  }
 
   /** The partition columns Spark's hive partition inference reads from
     * the paths of `files` under `dir` — the listing a parquet read would
@@ -207,7 +261,7 @@ final class VersionedTable(val root: String) {
       bloomColumns: Seq[String] = Nil,
       bloomBits: Int = DefaultBloomBits,
       allowEvolution: Boolean = false): Long = {
-    val prevSnap = latestVersion().map(published)
+    val prevSnap = base().map(published)
     val prev = prevSnap.map(_.files).getOrElse(Nil)
     // hive partition keys derived from the previous manifest's own paths
     // (empty for unpartitioned chains); the batch writes under the same
@@ -315,7 +369,7 @@ final class VersionedTable(val root: String) {
     */
   def deleteWhere(spark: SparkSession, cond: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions.{coalesce, input_file_name, lit, not}
-    val v = published(latestVersion().getOrElse(
+    val v = published(base().getOrElse(
       throw new IllegalStateException(s"deleteWhere on a never-committed table at $root")))
     val files = v.files
     val partKeys = partitionKeysOf(files)
@@ -377,7 +431,7 @@ final class VersionedTable(val root: String) {
       smallBytes: Long = 32L << 20,
       targetBytes: Long = 128L << 20): Long = {
     require(smallBytes > 0 && targetBytes > 0, "byte thresholds must be positive")
-    val v = published(latestVersion().getOrElse(
+    val v = published(base().getOrElse(
       throw new IllegalStateException(s"compactFiles on a never-committed table at $root")))
     val files = v.files
     val partKeys = partitionKeysOf(files)
@@ -1379,12 +1433,13 @@ object VersionedTable {
   private val TempRecordName = """(\d+)\.json\.[^.]+\.tmp""".r
   private val DataDirName = """v=(\d+)(?:_\d+)?""".r
 
-  /** The commit protocol's steps, in order: the data directory is
-    * allocated, the data written, `_stats` written, the temp record
-    * written, linked as the version's record, and removed.
+  /** The commit protocol's steps, in order: the head is read as the
+    * base, the data directory is allocated, the data written, `_stats`
+    * written, the temp record written, linked as the version's record,
+    * and removed.
     */
   private[sources] val Steps: Seq[String] =
-    Seq("allocate", "data", "stats", "record", "link", "unlink")
+    Seq("base", "allocate", "data", "stats", "record", "link", "unlink")
 
   /** Default per-file Bloom width: 2^16 bits = 8 KiB per (file, column)
     * row — at 7 probes that keeps the false-positive rate under 1% to

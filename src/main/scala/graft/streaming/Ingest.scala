@@ -2,9 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
-import graft.sources.Tables
+import graft.sources.{Tables, VersionedTable}
 
 /** Streaming ingest (SURVEY.md §2.7): the reference has no streaming path —
   * new facts arrive by unspecified batch loads. The engine adds the
@@ -44,107 +44,46 @@ object Ingest {
       .select(to_date(col("w.start")).as("ds"), col("branch"), col("cnt"))
   }
 
-  /** The ingest SINK: stream daily counts into the partitioned parquet
-    * fact table the batch pipelines read. foreachBatch gives exactly-once
-    * per micro-batch via the checkpoint; each batch OVERWRITES only the
-    * partitions it touches (dynamic partition overwrite), so a late
-    * re-emit within the watermark replaces that row instead of
-    * duplicating it — the streaming analog of the reference's upsert
-    * (precompute_percentages.py:218-233).
-    *
-    * The table is partitioned by the FULL aggregation key (ds, branch),
-    * not just ds. This is what makes update-mode + dynamic overwrite
-    * correct: update mode re-emits only the (ds, branch) rows the batch
-    * changed, and each such row rewrites exactly its own partition. A
-    * ds-only layout would rewrite the whole day with only the CHANGED
-    * rows, silently deleting every unchanged branch's row for that day
-    * (round-5 review catch). The table holds bounded daily aggregates —
-    * |days| x |branches| directories — so the finer layout stays cheap,
-    * and readers prune on both columns for free.
+  /** The ingest SINK: stream daily counts into the snapshot table the
+    * batch pipelines read (`table.read(spark)`, in the forecasting_data
+    * shape with `ds` a date). Each micro-batch is one key-upsert on the
+    * aggregation key (ds, branch): update mode re-emits a key's NEW total,
+    * so the upsert replaces that key's row and leaves the day's unchanged
+    * keys alone — an append would keep both totals. The checkpoint makes
+    * the stream exactly-once per micro-batch, and a batch replayed after a
+    * crash re-upserts the same rows, so no replay tag is needed; so does a
+    * batch that lost a [[graft.sources.CommitConflictException]] to
+    * another writer, once the stream restarts. Readers see the previous
+    * snapshot or the new one, never a half-written batch — the streaming
+    * analog of the reference's upsert (precompute_percentages.py:218-233).
     */
-  /** Fail-fast partition-grain guard: dynamic overwrite into a table laid
-    * out at a DIFFERENT grain (e.g. a pre-round-5 ds-only table under a
-    * (ds, branch) stream) mixes directory depths, which breaks Spark
-    * partition discovery ("conflicting directory structures") and leaves
-    * the stale coarse-grain data undeleted. Walks the partition
-    * directories (bounded for these daily-aggregate tables: |days| x
-    * |branches| x |move types| entries — the same listing the dynamic
-    * overwrite itself pays) and throws before the stream starts rather
-    * than corrupting the layout mid-flight. Existing old-grain tables
-    * must be rewritten, or the stream pointed at a fresh path.
-    */
-  private[graft] def requireGrain(
-      spark: org.apache.spark.sql.SparkSession,
-      tablePath: String,
-      cols: Seq[String]): Unit = {
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    def walk(p: org.apache.hadoop.fs.Path, rest: Seq[String]): Unit = rest match {
-      case Nil =>
-        // leaf level must hold data FILES only: a directory here means the
-        // existing table is partitioned FINER than this stream (e.g. a
-        // (ds, branch, move_type) table under a (ds, branch) stream) —
-        // overwriting would mix file and directory entries at one depth,
-        // the same corruption as the coarser-grain case
-        fs.listStatus(p)
-          .filterNot { s =>
-            val n = s.getPath.getName
-            n.startsWith("_") || n.startsWith(".")
-          }
-          .foreach { e =>
-            if (e.isDirectory)
-              throw new IllegalStateException(
-                s"table at $tablePath is partitioned FINER than (${cols.mkString(", ")}): " +
-                  s"found partition directory '${e.getPath.getName}' where data files were " +
-                  "expected. Rewrite the table at the new grain or point the stream at a " +
-                  "fresh path.")
-          }
-      case c +: tail =>
-        fs.listStatus(p)
-          .filterNot { s =>
-            val n = s.getPath.getName
-            n.startsWith("_") || n.startsWith(".")
-          }
-          .foreach { e =>
-            val nm = e.getPath.getName
-            if (!e.isDirectory || !nm.startsWith(c + "="))
-              throw new IllegalStateException(
-                s"table at $tablePath is not partitioned by (${cols.mkString(", ")}): found " +
-                  s"'$nm' where '$c=...' directories were expected. Dynamic partition " +
-                  "overwrite into a mixed-grain layout breaks partition discovery and " +
-                  "strands stale coarse-grain data — rewrite the table at the new grain " +
-                  "or point the stream at a fresh path.")
-            walk(e.getPath, tail)
-          }
-    }
-    walk(root, cols)
-  }
-
   def streamDailyCountsToTable(
-      moves: org.apache.spark.sql.DataFrame,
-      tablePath: String,
-      checkpointPath: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    requireGrain(moves.sparkSession, tablePath, Seq("ds", "branch"))
-    dailyCounts(moves).writeStream
+      moves: DataFrame,
+      table: VersionedTable,
+      checkpointPath: String): StreamingQuery =
+    upsertEachBatch(dailyCounts(moves), table, Seq("ds", "branch"), checkpointPath)
+
+  /** The sinks' shared micro-batch body: upsert `counts`' changed rows on
+    * `key`, unpartitioned. A batch with no rows (one run only to advance
+    * the watermark) commits nothing.
+    */
+  private def upsertEachBatch(
+      counts: DataFrame,
+      table: VersionedTable,
+      key: Seq[String],
+      checkpointPath: String): StreamingQuery =
+    counts.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointPath)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write
-          .mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("ds", "branch")
-          .parquet(tablePath)
+        // the merge reads the batch twice (its keys and its rows): compute
+        // the stateful aggregation once
+        batch.persist()
+        try if (!batch.isEmpty) table.upsert(batch.sparkSession, batch, key)
+        finally batch.unpersist()
+        ()
       }
       .start()
-  }
-
-  /** Read side of the streamed table, in the forecasting_data shape. */
-  def readDailyCountsTable(
-      spark: org.apache.spark.sql.SparkSession,
-      tablePath: String): DataFrame =
-    spark.read.parquet(tablePath)
-      .select(col("ds").cast("date").as("ds"), col("branch"), col("cnt"))
 
   // -------------------------------------------------------------------
   // Custom state: gap-based sessionization via flatMapGroupsWithState —
@@ -397,31 +336,15 @@ object Ingest {
 
   /** Ingest sink in the `historical_data` (per-move-type) shape — the
     * table `Percentages.refreshMonths` re-aggregates in the nightly cycle.
-    * Same exactly-once dynamic-partition-overwrite contract as
-    * [[streamDailyCountsToTable]], and the same partition-by-the-full-
-    * aggregation-key rule: update mode emits only changed
-    * (ds, branch, move_type) rows, so each must own its partition or the
-    * overwrite deletes the day's unchanged groups. IngestSpec drives the
-    * full stream -> refresh -> serving-join loop through it and pins the
-    * cross-batch no-deletion property.
+    * Same per-batch key-upsert as [[streamDailyCountsToTable]], on the
+    * aggregation key (ds, branch, move_type). IngestSpec drives the full
+    * stream -> refresh -> serving-join loop through it.
     */
   def streamDailyCountsByTypeToTable(
-      moves: org.apache.spark.sql.DataFrame,
-      tablePath: String,
-      checkpointPath: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    requireGrain(moves.sparkSession, tablePath, Seq("ds", "branch", "move_type"))
-    dailyCountsByType(moves).writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write
-          .mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("ds", "branch", "move_type")
-          .parquet(tablePath)
-      }
-      .start()
-  }
+      moves: DataFrame,
+      table: VersionedTable,
+      checkpointPath: String): StreamingQuery =
+    upsertEachBatch(dailyCountsByType(moves), table, Seq("ds", "branch", "move_type"), checkpointPath)
 
   // -------------------------------------------------------------------
   // Streaming corpus builder: the production crawl-ingest loop — each

@@ -7,6 +7,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.VersionedTable
 import graft.streaming.Ingest
 
 /** Structured-Streaming smoke tests: the shared dailyCounts transform run
@@ -180,41 +181,47 @@ class IngestSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  private def freshTable(prefix: String): VersionedTable =
+    VersionedTable(java.nio.file.Files.createTempDirectory(prefix).toString + "/t")
+
   test("streamed daily counts land in a partitioned table the batch side reads") {
     implicit val sqlCtx = spark.sqlContext
-    val tableDir = java.nio.file.Files.createTempDirectory("graft_stream_tbl").toString
+    val table = freshTable("graft_stream_tbl")
     val ckptDir = java.nio.file.Files.createTempDirectory("graft_stream_ckpt").toString
     val mem = MemoryStream[(Timestamp, Long, String)]
     val q = Ingest.streamDailyCountsToTable(
       Ingest.eventsToMoves(mem.toDF().toDF("ts", "user_id", "event_type")),
-      tableDir, ckptDir)
+      table, ckptDir)
     try {
       mem.addData(sample: _*)
       q.processAllAvailable()
-      val table = Ingest.readDailyCountsTable(spark, tableDir)
+      val landed = table.read(spark)
       val batch = Ingest.dailyCounts(
         Ingest.eventsToMoves(sample.toDF("ts", "user_id", "event_type")))
-      assert(table.exceptAll(batch).count() === 0 && batch.exceptAll(table).count() === 0)
+      assert(landed.schema("ds").dataType === org.apache.spark.sql.types.DateType)
+      assert(landed.exceptAll(batch).count() === 0 && batch.exceptAll(landed).count() === 0)
       // second micro-batch updates the 12th's count in place (no dup rows)
       mem.addData((ts("2024-01-12 13:00:00"), 3L, "view"))
       q.processAllAvailable()
-      val day12 = Ingest.readDailyCountsTable(spark, tableDir)
+      val day12 = table.read(spark)
         .filter(col("ds") === "2024-01-12" && col("branch") === "B3")
       assert(day12.count() === 1)
       assert(day12.head().getAs[Double]("cnt") === 2.0)
+      // one snapshot per batch with rows: a batch run only to advance the
+      // watermark commits nothing
+      assert(table.versions() === Seq(0L, 1L))
     } finally q.stop()
   }
 
   test("update-mode sink: updating one branch never deletes the day's other branches") {
-    // the round-5 review catch: update mode re-emits only CHANGED rows,
-    // so the table must partition by the full aggregation key or the
-    // dynamic overwrite deletes the day's unchanged groups
+    // update mode re-emits only CHANGED rows, so each batch must replace
+    // exactly the keys it carries and keep the day's unchanged groups
     implicit val sqlCtx = spark.sqlContext
-    val tableDir = java.nio.file.Files.createTempDirectory("graft_grain_tbl").toString
+    val table = freshTable("graft_grain_tbl")
     val ckptDir = java.nio.file.Files.createTempDirectory("graft_grain_ckpt").toString
     val mem = MemoryStream[(Timestamp, Long, String)]
     val q = Ingest.streamDailyCountsToTable(
-      Ingest.eventsToMoves(mem.toDF().toDF("ts", "user_id", "event_type")), tableDir, ckptDir)
+      Ingest.eventsToMoves(mem.toDF().toDF("ts", "user_id", "event_type")), table, ckptDir)
     try {
       // batch 1: two branches on the same day
       mem.addData((ts("2024-01-10 08:00:00"), 1L, "click"), (ts("2024-01-10 09:00:00"), 2L, "view"))
@@ -222,46 +229,12 @@ class IngestSpec extends AnyFunSuite {
       // batch 2: one more event for B1 ONLY — update mode emits only B1's row
       mem.addData((ts("2024-01-10 10:00:00"), 1L, "click"))
       q.processAllAvailable()
-      val day = Ingest.readDailyCountsTable(spark, tableDir)
+      val day = table.read(spark)
         .filter(col("ds") === "2024-01-10")
         .collect().map(r => r.getAs[String]("branch") -> r.getAs[Double]("cnt")).toMap
       assert(day === Map("B1" -> 2.0, "B2" -> 1.0),
-        "the batch-2 overwrite must not delete B2's untouched row")
+        "the batch-2 upsert must not delete B2's untouched row")
     } finally q.stop()
-  }
-
-  test("grain guard: starting a stream over an old-grain table fails fast") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val tableDir = java.nio.file.Files.createTempDirectory("graft_oldgrain_tbl").toString
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft_oldgrain_ckpt").toString
-    // a pre-existing table written at the COARSER ds-only grain
-    Seq(("2024-01-10", "B1", 3.0)).toDF("ds", "branch", "cnt")
-      .write.mode("overwrite").partitionBy("ds").parquet(tableDir)
-    val mem = MemoryStream[(Timestamp, Long, String)]
-    val moves = Ingest.eventsToMoves(mem.toDF().toDF("ts", "user_id", "event_type"))
-    val ex = intercept[IllegalStateException] {
-      Ingest.streamDailyCountsToTable(moves, tableDir, ckptDir)
-    }
-    assert(ex.getMessage.contains("not partitioned by (ds, branch)"))
-    // the FINER grain must fail too: ds=/branch=/move_type= dirs under a
-    // (ds, branch) stream would leave stale move_type subdirs next to new
-    // leaf files — the review catch on the first version of this guard
-    val finerDir = java.nio.file.Files.createTempDirectory("graft_finergrain_tbl").toString
-    Seq(("2024-01-10", "B1", "local", 3.0)).toDF("ds", "branch", "move_type", "cnt")
-      .write.mode("overwrite").partitionBy("ds", "branch", "move_type").parquet(finerDir)
-    val exFiner = intercept[IllegalStateException] {
-      Ingest.streamDailyCountsToTable(
-        moves, finerDir, java.nio.file.Files.createTempDirectory("graft_finergrain_ckpt").toString)
-    }
-    assert(exFiner.getMessage.contains("partitioned FINER"))
-    // a matching-grain table (or an empty dir) starts cleanly
-    val goodDir = java.nio.file.Files.createTempDirectory("graft_goodgrain_tbl").toString
-    Seq(("2024-01-10", "B1", 3.0)).toDF("ds", "branch", "cnt")
-      .write.mode("overwrite").partitionBy("ds", "branch").parquet(goodDir)
-    val q = Ingest.streamDailyCountsToTable(
-      moves, goodDir, java.nio.file.Files.createTempDirectory("graft_goodgrain_ckpt").toString)
-    q.stop()
   }
 
   test("streaming dedup drops re-delivered event ids within the watermark") {
@@ -394,19 +367,20 @@ class IngestSpec extends AnyFunSuite {
       mt <- Seq("click", "view")
     } yield (java.sql.Date.valueOf(f"2024-01-$d%02d"), b, mt, 10.0 + d)
     val hist = histRows.toDF("ds", "branch", "move_type", "cnt")
-    val pctPath = java.nio.file.Files.createTempDirectory("graft_cycle_pct").toString
-    Percentages.writePercentages(Percentages.percentagesSingleScan(hist), pctPath)
+    val pctTable = freshTable("graft_cycle_pct")
+    Percentages.upsertPercentagesSnapshot(spark, Percentages.percentagesSingleScan(hist), pctTable)
+    def pct = pctTable.read(spark).withColumn("month", col("month").cast("long"))
 
     val request = Seq(("B1", "click", 1L, 21L)).toDF("branch", "move_type", "month", "day")
-    val before = Forecast.fallbackPct(request, Percentages.readPercentages(spark, pctPath)).head()
+    val before = Forecast.fallbackPct(request, pct).head()
     assert(before.getAs[String]("fallback_level") === "month", "day 21 must not exist yet")
 
     // day 21 lands late via the streaming ingest (user 1 -> branch B1)
-    val tableDir = java.nio.file.Files.createTempDirectory("graft_cycle_tbl").toString
+    val counts = freshTable("graft_cycle_tbl")
     val ckptDir = java.nio.file.Files.createTempDirectory("graft_cycle_ckpt").toString
     val mem = MemoryStream[(Timestamp, Long, String)]
     val q = Ingest.streamDailyCountsByTypeToTable(
-      Ingest.eventsToMoves(mem.toDF().toDF("ts", "user_id", "event_type")), tableDir, ckptDir)
+      Ingest.eventsToMoves(mem.toDF().toDF("ts", "user_id", "event_type")), counts, ckptDir)
     try {
       mem.addData(
         (ts("2024-01-21 09:00:00"), 1L, "click"),
@@ -416,11 +390,9 @@ class IngestSpec extends AnyFunSuite {
     } finally q.stop()
 
     // nightly refresh: re-aggregate January from history + the streamed table
-    val streamed = spark.read.parquet(tableDir)
-      .select(col("ds").cast("date").as("ds"), col("branch"), col("move_type"), col("cnt"))
-    Percentages.refreshMonths(spark, hist.unionByName(streamed), Seq(1L), pctPath)
+    Percentages.refreshMonths(spark, hist.unionByName(counts.read(spark)), Seq(1L), pctTable)
 
-    val after = Forecast.fallbackPct(request, Percentages.readPercentages(spark, pctPath)).head()
+    val after = Forecast.fallbackPct(request, pct).head()
     assert(after.getAs[String]("fallback_level") === "day", "refreshed day must serve at day level")
     assert(after.getAs[Double]("day_pct") > 0.0)
   }

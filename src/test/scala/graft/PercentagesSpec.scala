@@ -1,10 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Percentages
+import graft.sources.VersionedTable
 
 object SparkTestSession {
   lazy val spark: SparkSession = GraftSession.getOrCreate("local[4]")
@@ -68,11 +69,24 @@ class PercentagesSpec extends AnyFunSuite {
     assert(a.exceptAll(b).count() === 0 && b.exceptAll(a).count() === 0)
   }
 
+  private def freshTable(prefix: String): VersionedTable =
+    VersionedTable(java.nio.file.Files.createTempDirectory(prefix).toString + "/t")
+
+  /** The published snapshot in the computed frame's column order, with
+    * `month` (the hive partition column, read back as int) as long.
+    */
+  private def readBack(t: VersionedTable): DataFrame =
+    t.read(spark).withColumn("month", col("month").cast("long"))
+      .select(Seq("branch", "move_type", "month", "day", "move_cnt", "total_cnt", "avg_percentage")
+        .map(col): _*)
+
   test("O5 round-trip: write partitioned by month, read back identical") {
     val pct = Percentages.percentages(spark, sf)
-    val out = java.nio.file.Files.createTempDirectory("graft_pct").toString
-    Percentages.writePercentages(pct, out)
-    val back = Percentages.readPercentages(spark, out)
+    val t = freshTable("graft_pct")
+    assert(Percentages.upsertPercentagesSnapshot(spark, pct, t) === 0L)
+    assert(t.read(spark).schema("month").dataType === org.apache.spark.sql.types.IntegerType)
+    assert(t.manifest(0L).get.forall(_.contains("/month=")))
+    val back = readBack(t)
     assert(back.columns.toSeq === pct.columns.toSeq)
     assert(back.exceptAll(pct).count() === 0 && pct.exceptAll(back).count() === 0)
   }
@@ -86,22 +100,32 @@ class PercentagesSpec extends AnyFunSuite {
   }
 
   test("persisted percentages prune month partitions on read") {
-    val pct = Percentages.percentages(spark, sf)
-    val out = java.nio.file.Files.createTempDirectory("graft_pct_prune").toString
-    Percentages.writePercentages(pct, out)
-    val pruned = Percentages.readPercentages(spark, out).filter(col("month") === 1L)
+    // the fixture history is January only: repeat it one month later, so
+    // the snapshot holds a partition the filter must skip
+    val hist = graft.sources.Tables.historicalData(spark, sf)
+    val pct = Percentages.percentagesSingleScan(
+      hist.unionByName(hist.withColumn("ds", add_months(col("ds"), 1))))
+    val t = freshTable("graft_pct_prune")
+    Percentages.upsertPercentagesSnapshot(spark, pct, t)
+    val pruned = t.read(spark).filter(col("month") === 1)
     val plan = pruned.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters"), "no partition filters in plan")
     assert(
       plan.contains("month#") || plan.contains("(month"),
       s"month not in partition filters:\n${plan.take(1200)}")
+    // the scan opens exactly the snapshot's month=1 files
+    val files = t.manifest(0L).get
+    val jan = files.filter(_.contains("/month=1/"))
+    assert(jan.nonEmpty && jan.size < files.size)
+    assert(ScanMetrics.scannedFiles(pruned) === jan.size)
+    assert(pruned.select(input_file_name()).as[String].collect().forall(_.contains("/month=1/")))
     assert(pruned.count() > 0)
   }
 
   test("upsert: update rows supersede, siblings and untouched partitions survive") {
     val pct = Percentages.percentages(spark, sf).cache()
-    val out = java.nio.file.Files.createTempDirectory("graft_pct_upsert").toString
-    Percentages.writePercentages(pct, out)
+    val t = freshTable("graft_pct_upsert")
+    Percentages.upsertPercentagesSnapshot(spark, pct, t)
 
     // build updates inside ONE month: bump one existing row's percentage
     // and insert a brand-new key in the same month
@@ -111,9 +135,9 @@ class PercentagesSpec extends AnyFunSuite {
       lit("BX_NEW").as("branch"), col("move_type"), col("month"), col("day"),
       lit(3.0).as("move_cnt"), lit(6.0).as("total_cnt"), lit(50.0).as("avg_percentage"))
     val updates = bumped.unionByName(fresh)
-    Percentages.upsertPercentages(spark, updates, out)
+    assert(Percentages.upsertPercentagesSnapshot(spark, updates, t) === 1L)
 
-    val back = Percentages.readPercentages(spark, out).cache()
+    val back = readBack(t).cache()
     // superseded row carries the new value
     val k = janKey.select("branch", "move_type", "month", "day").head()
     val got = back.filter(
@@ -134,15 +158,18 @@ class PercentagesSpec extends AnyFunSuite {
       expected.exceptAll(untouched).count() === 0)
     // total row count: original + 1 insert
     assert(back.count() === pct.count() + 1)
+    // the previous snapshot still reads as it was published
+    assert(t.readVersion(spark, 0L).count() === pct.count())
   }
 
   test("upsert: first run against a never-written path degrades to a plain write") {
     val pct = Percentages.percentages(spark, sf)
-    val out = java.nio.file.Files.createTempDirectory("graft_pct_first").toString + "/pct"
-    // no writePercentages first — the path does not exist yet (the
-    // reference's ON CONFLICT upsert works on an empty table)
-    Percentages.upsertPercentages(spark, pct, out)
-    val back = Percentages.readPercentages(spark, out)
+    // a never-committed table (the reference's ON CONFLICT upsert works on
+    // an empty table)
+    val t = freshTable("graft_pct_first")
+    assert(t.latestVersion().isEmpty)
+    assert(Percentages.upsertPercentagesSnapshot(spark, pct, t) === 0L)
+    val back = readBack(t)
     assert(back.count() === pct.count())
     assert(back.exceptAll(pct).count() === 0 && pct.exceptAll(back).count() === 0)
   }
@@ -152,12 +179,12 @@ class PercentagesSpec extends AnyFunSuite {
     val hist = Tables.historicalData(spark, sf)
     // stale table: computed from history with some month-1 rows missing
     val staleHist = hist.filter(!(month(col("ds")) === 1 && dayofmonth(col("ds")) <= 5))
-    val out = java.nio.file.Files.createTempDirectory("graft_pct_refresh").toString
-    Percentages.writePercentages(Percentages.percentagesSingleScan(staleHist), out)
+    val t = freshTable("graft_pct_refresh")
+    Percentages.upsertPercentagesSnapshot(spark, Percentages.percentagesSingleScan(staleHist), t)
 
-    Percentages.refreshMonths(spark, hist, Seq(1L), out)
+    assert(Percentages.refreshMonths(spark, hist, Seq(1L), t) === 1L)
 
-    val back = Percentages.readPercentages(spark, out).cache()
+    val back = readBack(t).cache()
     val full = Percentages.percentagesSingleScan(hist).cache()
     // refreshed month now matches the full recompute exactly
     val m1back = back.filter(col("month") === 1L)

@@ -91,20 +91,6 @@ class SeasonalModelSpec extends AnyFunSuite {
     assert(branches === Set("pair", "many"))
   }
 
-  test("model store round-trips through parquet (O4: branch is a column, not a filename)") {
-    val models = SeasonalModel.fit(synthetic(), spec, cutoff)
-    val out = java.nio.file.Files.createTempDirectory("graft_models").toString
-    SeasonalModel.writeModels(models, out)
-    val back = SeasonalModel.readModels(spark, out)
-    assert(back.columns.toSeq === models.columns.toSeq)
-    assert(back.exceptAll(models).count() === 0 && models.exceptAll(back).count() === 0)
-    // predictions from the reloaded store are identical
-    val days = synthetic().select("branch", "ds").limit(50)
-    val a = SeasonalModel.predict(models, days, spec)
-    val b = SeasonalModel.predict(back, days, spec)
-    assert(a.exceptAll(b).count() === 0 && b.exceptAll(a).count() === 0)
-  }
-
   test("RidgeOls agrees with MLlib LinearRegression on the same design matrix") {
     // independent-implementation check: the one-shuffle normal-equations
     // aggregator must solve the SAME ridge problem as MLlib's battle-tested
@@ -188,7 +174,8 @@ class SeasonalModelSpec extends AnyFunSuite {
         m.branch, m.coef.map(java.lang.Double.doubleToRawLongBits),
         m.n, java.lang.Double.doubleToRawLongBits(m.residQ),
         m.tStart.toString, java.lang.Double.doubleToRawLongBits(m.tDays)))
-    val fitted = toSeas(SeasonalModel.fit(synthetic(), spec, cutoff))
+    val models = SeasonalModel.fit(synthetic(), spec, cutoff)
+    val fitted = toSeas(models)
     assert(fitted.nonEmpty)
     val root = java.nio.file.Files.createTempDirectory("graft_seas_ms_").toString
     var fits = 0
@@ -203,5 +190,13 @@ class SeasonalModelSpec extends AnyFunSuite {
     assert(fits === 1, "second loadOrFit must serve the committed snapshot")
     assert(bits(first) === bits(fitted))
     assert(bits(second) === bits(fitted))
+    // predictions from the reloaded model are identical (O4: branch is a
+    // column, not a filename)
+    val reloaded = second.map(m => (m.branch, m.coef, m.n, m.residQ, m.tStart, m.tDays))
+      .toDF("branch", "coef", "n", "resid_q", "t_start", "t_days")
+    val days = synthetic().select("branch", "ds").orderBy("branch", "ds").limit(50)
+    val a = SeasonalModel.predict(models, days, spec)
+    val b = SeasonalModel.predict(reloaded, days, spec)
+    assert(a.exceptAll(b).count() === 0 && b.exceptAll(a).count() === 0)
   }
 }

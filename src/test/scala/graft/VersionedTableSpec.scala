@@ -5,12 +5,11 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ScanMetrics.scannedFiles
-import graft.operators.Percentages
 import graft.sources.{CrashPoint, VersionedTable}
 
 /** The snapshot-commit protocol: immutable data dirs + one put-if-absent
-  * commit record per version. Readers must never observe a torn table; the
-  * snapshot upsert must produce exactly the rows of the in-place upsert.
+  * commit record per version. Readers must never observe a torn table; an
+  * upsert replaces exactly the keys it carries, on the snapshot it read.
   */
 class VersionedTableSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
@@ -75,30 +74,31 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(mat.filter(col("s") === "z").count() === 0)
   }
 
-  test("snapshot upsert row-matches the in-place upsert") {
-    val pct = Percentages.percentages(spark, sf).cache()
-    // same update set as PercentagesSpec's in-place test: bump one row,
-    // insert one new key
-    val janKey = pct.filter(col("month") === 1L).orderBy("branch", "move_type", "day").limit(1)
-    val updates = janKey.withColumn("avg_percentage", col("avg_percentage") + 7.0)
-      .unionByName(janKey.select(
-        lit("BX_NEW").as("branch"), col("move_type"), col("month"), col("day"),
-        lit(3.0).as("move_cnt"), lit(6.0).as("total_cnt"), lit(50.0).as("avg_percentage")))
-
-    val inPlace = java.nio.file.Files.createTempDirectory("graft_vt_ip").toString
-    Percentages.writePercentages(pct, inPlace)
-    Percentages.upsertPercentages(spark, updates, inPlace)
-    val expected = Percentages.readPercentages(spark, inPlace)
-
-    val t = freshTable()
-    Percentages.upsertPercentagesSnapshot(spark, pct, t)     // first run = plain write
-    Percentages.upsertPercentagesSnapshot(spark, updates, t) // merge commit
-    val got = t.read(spark)
-      .withColumn("month", col("month").cast("long"))
-      .select(expected.columns.map(col): _*)
-
-    assert(got.count() === expected.count())
-    assert(got.exceptAll(expected).count() === 0 && expected.exceptAll(got).count() === 0)
+  test("upsert replaces the rows whose key it carries and keeps the rest, partitioned or not") {
+    import spark.implicits._
+    for (partitionBy <- Seq(Nil, Seq("p"))) {
+      val t = freshTable()
+      // a never-committed table: a plain commit
+      val v0 = t.upsert(spark, Seq((1L, 0L, "a"), (2L, 1L, "b"), (3L, 0L, "c")).toDF("id", "p", "s"),
+        Seq("id"), partitionBy)
+      // replace id 2 (moving it to another partition) and insert id 4
+      val v1 = t.upsert(spark, Seq((2L, 0L, "b2"), (4L, 1L, "d")).toDF("id", "p", "s"),
+        Seq("id"), partitionBy)
+      assert((v0, v1) === ((0L, 1L)), partitionBy)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select(col("id"), col("p").cast("long"), col("s")).as[(Long, Long, String)].collect().toSeq.sorted
+      assert(rows(t.read(spark)) === Seq((1L, 0L, "a"), (2L, 0L, "b2"), (3L, 0L, "c"), (4L, 1L, "d")),
+        partitionBy)
+      // the base snapshot still reads as it was published
+      assert(rows(t.readVersion(spark, v0)) === Seq((1L, 0L, "a"), (2L, 1L, "b"), (3L, 0L, "c")),
+        partitionBy)
+      // a hive partition column reads back as int; the stored rows were
+      // cast to the updates' long to merge
+      val pType = t.read(spark).schema("p").dataType
+      assert(pType === (if (partitionBy.isEmpty) org.apache.spark.sql.types.LongType
+        else org.apache.spark.sql.types.IntegerType), partitionBy)
+      assert(t.manifest(v1).get.forall(_.contains("/p=")) === partitionBy.nonEmpty, partitionBy)
+    }
   }
 
   test("manifest: commit records its data files; reads ignore stray files in the dir") {

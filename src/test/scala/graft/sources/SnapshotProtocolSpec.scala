@@ -6,7 +6,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, concat, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
 import CrashPoint.{crashAfter, interleave, steps}
@@ -26,6 +26,10 @@ class SnapshotProtocolSpec extends AnyFunSuite {
     ids.map(i => (i, s"s$i")).toDF("id", "s")
   }
 
+  /** `ids` with a value no earlier batch gave them. */
+  private def updated(ids: Seq[Long]): DataFrame =
+    batch(ids).withColumn("s", concat(col("s"), lit("u")))
+
   private def rows(df: DataFrame): Seq[String] =
     df.select("id", "s").collect().map(_.toString).toSeq.sorted
 
@@ -43,6 +47,7 @@ class SnapshotProtocolSpec extends AnyFunSuite {
       t => t.commit(batch(100L until 110L), tag = Some("t1"), statsColumns = Seq("id"))),
     ("appendCommit", base,
       t => t.appendCommit(batch(20L until 25L), tag = Some("t1"), statsColumns = Seq("id"))),
+    ("upsert", base, t => t.upsert(spark, updated((5L until 15L) ++ (200L until 205L)), Seq("id"))),
     ("deleteWhere", base, t => t.deleteWhere(spark, col("id") === 3L)),
     ("compactFiles",
       t => { base(t); t.appendCommit(batch(20L until 25L), statsColumns = Seq("id")) },
@@ -143,15 +148,26 @@ class SnapshotProtocolSpec extends AnyFunSuite {
     assert(rows(t.read(spark)).size === 21)
   }
 
-  for (step <- steps.takeWhile(_ != "link")) {
-    test(s"two writers on one base, the second lands at $step: one record, the first gets the conflict") {
+  /** The first writer in the two-writer tests: how it is named, its
+    * write, and the rows and tags its retry publishes over the base plus
+    * the second writer's row 50.
+    */
+  private val firstWriters: Seq[(String, VersionedTable => Long, Seq[String], Set[String])] = Seq(
+    ("the first", t => t.appendCommit(batch(Seq(40L)), tag = Some("a")),
+      ((0L until 20L) ++ Seq(40L, 50L)).map(i => s"[$i,s$i]").sorted, Set("t0", "a", "b")),
+    ("the first upsert", t => t.upsert(spark, updated(Seq(5L, 40L)), Seq("id")),
+      (((0L until 20L).filter(_ != 5L) :+ 50L).map(i => s"[$i,s$i]") ++ Seq("[5,s5u]", "[40,s40u]")).sorted,
+      Set("t0", "b")))
+
+  for ((first, write, retried, retriedTags) <- firstWriters; step <- steps.takeWhile(_ != "link")) {
+    test(s"two writers on one base, the second lands at $step: one record, $first gets the conflict") {
       val root = freshRoot()
       val (a, b) = (VersionedTable(root), VersionedTable(root))
       base(a)
       var bVersion = -1L
       val e = intercept[CommitConflictException] {
         interleave(a, step) { bVersion = b.appendCommit(batch(Seq(50L)), tag = Some("b")) } {
-          a.appendCommit(batch(Seq(40L)), tag = Some("a"))
+          write(a)
         }
       }
       // exactly one record for v=1: the winner's
@@ -159,15 +175,17 @@ class SnapshotProtocolSpec extends AnyFunSuite {
       assert(names(Paths.get(root, "_log")) === Seq("0.json", "1.json"))
       assert(a.committedTags() === Set("t0", "b"))
       assert(rows(a.read(spark)) === ((0L until 20L) :+ 50L).map(i => s"[$i,s$i]").sorted)
-      // nothing the loser wrote is referenced, or left: it allocated v=1
-      // first, so the winner wrote v=1_1
-      assert(field(a, 1L, "dir") === Some("v=1_1"))
-      assert(!Files.exists(Paths.get(root, "v=1")))
+      // nothing the loser wrote is referenced, or left: when it had
+      // allocated v=1 first, the winner wrote v=1_1
+      val (won, lost) =
+        if (steps.indexOf(step) < steps.indexOf("allocate")) ("v=1", "v=1_1") else ("v=1_1", "v=1")
+      assert(field(a, 1L, "dir") === Some(won))
+      assert(!Files.exists(Paths.get(root, lost)))
       assertClean(a)
-      // the loser's retry on the new head succeeds and keeps both batches
-      assert(a.appendCommit(batch(Seq(40L)), tag = Some("a")) === 2L)
-      assert(rows(a.read(spark)) === ((0L until 20L) ++ Seq(40L, 50L)).map(i => s"[$i,s$i]").sorted)
-      assert(a.committedTags() === Set("t0", "a", "b"))
+      // the loser's retry on the new head succeeds and keeps both writes
+      assert(write(a) === 2L)
+      assert(rows(a.read(spark)) === retried)
+      assert(a.committedTags() === retriedTags)
     }
   }
 
