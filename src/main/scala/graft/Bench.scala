@@ -1,5 +1,7 @@
 package graft
+import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 object Bench {
@@ -11,16 +13,20 @@ object Bench {
     * `cores` its effective cores (process-CPU sec / wall sec — collapses
     * under host contention). `tail` is the quiesced re-run (−1 when the
     * query wasn't in the tail set). `compiles` / `compileMs` are the
-    * winning rep's codegen compiles and their compile time.
+    * winning rep's codegen compiles and their compile time; `barrierMs`
+    * its Spark job wall per [[Barrier]] name.
     */
   private final case class Timing(
       warm: Double, cold: Double, warmSlow: Double, cores: Double,
       gc: Double, reps: Int, warmSuite: Double, tail: Double,
-      coldCores: Double, coldGc: Double, compiles: Long, compileMs: Double)
-  /** One rep: wall sec, effective cores, GC fraction, and the codegen
-    * compiles (count, ms) it ran.
+      coldCores: Double, coldGc: Double, compiles: Long, compileMs: Double,
+      barrierMs: Map[String, Long])
+  /** One rep: wall sec, effective cores, GC fraction, the codegen
+    * compiles (count, ms) it ran, and its job wall per barrier name.
     */
-  private final case class Rep(wall: Double, cores: Double, gc: Double, compiles: Long, compileMs: Double)
+  private final case class Rep(
+      wall: Double, cores: Double, gc: Double, compiles: Long, compileMs: Double,
+      barrierMs: Map[String, Long])
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -92,7 +98,27 @@ object Bench {
       nameFilter.forall(_.exists(n.contains))
     }
     val fnOf = selected.toMap
+    // Barrier attribution: every job a Barrier submits carries its name
+    // in the Barrier.Property local property. The listener sums each such
+    // job's wall (start to end; AQE map-stage jobs may overlap) per name,
+    // and each rep drains the bus and takes the sums, outside its timing.
+    val jobBarrier = new ConcurrentHashMap[Int, (String, Long)]()
+    val barrierMs = scala.collection.mutable.Map.empty[String, Long]
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(Barrier.Property)))
+          .foreach(name => jobBarrier.put(e.jobId, (name, e.time)))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        Option(jobBarrier.remove(e.jobId)).foreach { case (name, t0) =>
+          barrierMs.synchronized(barrierMs(name) = barrierMs.getOrElse(name, 0L) + e.time - t0)
+        }
+    })
+    def takeBarrierMs(): Map[String, Long] = {
+      org.apache.spark.GraftBusBridge.drain(spark.sparkContext)
+      barrierMs.synchronized { val taken = barrierMs.toMap; barrierMs.clear(); taken }
+    }
     def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Rep = {
+      takeBarrierMs()
       val g0 = gcMillis()
       val c0 = procCpuSec()
       val n0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
@@ -103,9 +129,9 @@ object Bench {
       val cores = if (wall > 0) (procCpuSec() - c0) / wall else 0.0
       val gcFrac = if (wall > 0) ((gcMillis() - g0) / 1000.0) / wall else 0.0
       Rep(wall, cores, gcFrac, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - n0,
-        (CodeGenerator.compileTime - ns0) / 1e6)
+        (CodeGenerator.compileTime - ns0) / 1e6, takeBarrierMs())
     }
-    // Queries that materialize intermediates (localCheckpoint /
+    // Queries that materialize intermediates (Barrier /
     // persist) leave their RDDs cached forever; across a 60+-query
     // sweep those accumulate into memory pressure that slows the
     // late-alphabet queries by 2-3x (measured: x24 warm 4.5s in the
@@ -176,12 +202,13 @@ object Bench {
         // the contention we're defending against into the number)
         val best = reps.minBy(_.wall)
         name -> Timing(best.wall, cold, reps.map(_.wall).max, best.cores, best.gc, reps.length,
-          best.wall, -1.0, coldRep.cores, coldRep.gc, best.compiles, best.compileMs)
+          best.wall, -1.0, coldRep.cores, coldRep.gc, best.compiles, best.compileMs,
+          best.barrierMs)
       } catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
           failed ::= name
-          name -> Timing(-1.0, -1.0, -1.0, 0.0, 0.0, 0, -1.0, -1.0, 0.0, 0.0, 0L, 0.0)
+          name -> Timing(-1.0, -1.0, -1.0, 0.0, 0.0, 0, -1.0, -1.0, 0.0, 0.0, 0L, 0.0, Map.empty)
       } finally dropCached() // ALSO on failure: a query that dies after
       // materializing checkpoints would otherwise leak its RDDs into
       // every subsequent query's timings — the interference this
@@ -214,7 +241,7 @@ object Bench {
           val tailed = t.copy(reps = t.reps + 1, tail = r.wall)
           if (r.wall < t.warm)
             name -> tailed.copy(warm = r.wall, cores = r.cores, gc = r.gc,
-              compiles = r.compiles, compileMs = r.compileMs)
+              compiles = r.compiles, compileMs = r.compileMs, barrierMs = r.barrierMs)
           else name -> tailed
         } catch {
           case e: Throwable => // suite numbers stand; tail stays unmarked
@@ -223,33 +250,6 @@ object Bench {
         }
       case kv => kv
     }
-    // ---- x106 per-stage decomposition (round-11 verdict ask #4: the
-    // 3.4–4.8 s run-to-run spread was ATTRIBUTED to IO/shuffle variance
-    // but never MEASURED at the stage level in a committed artifact).
-    // Two quiesced reps of the operator's real checkpoint-bounded frames
-    // (Dedup.ppjoinStageTimings — the production lineage, not a replica)
-    // ship in the detail sidecar, so the spread decomposes into
-    // candidates / array_frame / verify / score_filter per round and a
-    // variance claim can point at the stage that moved.
-    val x106Stages: Option[String] =
-      if (!fnOf.contains("x106_ppjoin_neardups")) None
-      else try {
-        val reps = (1 to 2).map { _ =>
-          System.gc(); Thread.sleep(200)
-          dropCached()
-          val stages = graft.operators.Dedup.ppjoinStageTimings(
-            graft.sources.Tables.documents(spark, sfDir), threshold = 0.5)
-          dropCached()
-          stages.map { case (stage, sec, rows) =>
-            s""""$stage": {"sec": ${"%.3f".formatLocal(java.util.Locale.ROOT, sec)}, "rows": $rows}"""
-          }.mkString("{", ", ", "}")
-        }
-        Some(reps.mkString("[", ", ", "]"))
-      } catch {
-        case e: Exception =>
-          System.err.println(s"[bench] x106 stage timing failed: ${e.getMessage}")
-          None
-      }
     // ---- x53/x57 per-stage decomposition (round-12 verdict ask #5: the
     // curation rows are the bench ceiling and their 1.6x run-to-run
     // spread on UNCHANGED code was unattributed). Two quiesced reps per
@@ -401,12 +401,13 @@ object Bench {
     val detail = results
       .map { case (k, t) =>
         val tailStr = if (t.tail >= 0) ms(t.tail) else "null"
-        s"""    "$k": {"warm": ${ms(t.warm)}, "cold": ${ms(t.cold)}, "warm_slow": ${ms(t.warmSlow)}, "warm_suite": ${ms(t.warmSuite)}, "tail": $tailStr, "cores": ${ms(t.cores)}, "gc": ${ms(t.gc)}, "cold_cores": ${ms(t.coldCores)}, "cold_gc": ${ms(t.coldGc)}, "reps": ${t.reps}, "compiles": ${t.compiles}, "compile_ms": ${ms(t.compileMs)}, "suspect": ${isSuspect(t)}, "cold_suspect": ${isColdSuspect(t)}}"""
+        val barriers = t.barrierMs.toSeq.sorted
+          .map { case (b, v) => s""""$b": $v""" }.mkString("{", ", ", "}")
+        s"""    "$k": {"warm": ${ms(t.warm)}, "cold": ${ms(t.cold)}, "warm_slow": ${ms(t.warmSlow)}, "warm_suite": ${ms(t.warmSuite)}, "tail": $tailStr, "cores": ${ms(t.cores)}, "gc": ${ms(t.gc)}, "cold_cores": ${ms(t.coldCores)}, "cold_gc": ${ms(t.coldGc)}, "reps": ${t.reps}, "compiles": ${t.compiles}, "compile_ms": ${ms(t.compileMs)}, "barrier_ms": $barriers, "suspect": ${isSuspect(t)}, "cold_suspect": ${isColdSuspect(t)}}"""
       }
       .mkString(
         s"""{\n  "sf": "$sfDir",\n  "total_warm": ${ms(total)},\n  "total_cold": ${ms(coldTotal)},\n  "n": ${results.length},\n  "failed": $errs,\n""" +
           s"""  "cpu": {"our_cores": ${ms(ourCores)}, "sysload": ${ms(loadAvg)}, "external": ${ms(external)}, "steal_cores": ${ms(stealCores)}, "contended": $contended, "median_cores": ${ms(medianCores)}, "tail_n": ${tailSet.size}, "tail_shaved_sec": ${ms(tailShaved)}, "suspect_queries": ${suspects.map("\"" + _ + "\"").mkString("[", ",", "]")}, "cold_unadjudicated": $coldUnadjudicated, "cold_suspect_queries": ${coldSuspects.map("\"" + _ + "\"").mkString("[", ",", "]")}},\n""" +
-          x106Stages.map(s => s"""  "x106_stages": $s,\n""").getOrElse("") +
           x53Stages.map(s => s"""  "x53_stages": $s,\n""").getOrElse("") +
           x57Stages.map(s => s"""  "x57_stages": $s,\n""").getOrElse("") +
           dsirStages.map(s => s"""  "dsir_stages": $s,\n""").getOrElse("") +

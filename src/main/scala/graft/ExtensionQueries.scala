@@ -1819,7 +1819,7 @@ object ExtensionQueries {
       // consumers — barrier so the corpus folds once
       val regs = Sketches.hllRegistersHashed(
         toks, xxhash64(col("token")), Seq("source"), p = 9)
-        .localCheckpoint(false)
+        .transform(Barrier(_, "x111.regs"))
       val perSrc = Sketches.hllEstimateKeyed(regs, Seq("source"), p = 9)
         .select(col("source"), col("est"))
       val srcs = regs.select("source").distinct()

@@ -47,18 +47,15 @@ import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
   * that work in the returned frame's plan, which sees only the
   * post-materialization RDD scan. A QueryExecutionListener registered
   * for the audit run now captures EVERY Dataset action's QueryExecution
-  * (eager checkpoints, collects, writes; lazy `localCheckpoint(false)`
-  * barriers also fire the listener at RDD-build time). Round-11's
-  * suspected pre-AQE gap — lazy barriers audited from initial plans —
-  * was probed directly in round 12 and REFUTED: localCheckpoint(false)
-  * builds its RDD via toRdd, and AdaptiveSparkPlanExec finalizes every
-  * query stage inside doExecute, so the captured QueryExecution is
-  * already isFinalPlan=true at listener time (PlanAuditSpec pins this
-  * with a static-SMJ/AQE-broadcast divergence). The audit of each
-  * captured execution is additionally DEFERRED to after the owning
-  * query's main plan has executed — belt-and-braces so any event that
-  * ever IS captured pre-finalization still gets walked in its final
-  * adaptive form. All gates run per captured execution with their own
+  * (every [[Barrier]] — an eager checkpoint — collects, writes). A
+  * checkpoint builds its RDD via toRdd, and AdaptiveSparkPlanExec
+  * finalizes every query stage inside doExecute, so the captured
+  * QueryExecution is already isFinalPlan=true at listener time
+  * (PlanAuditSpec pins this with a static-SMJ/AQE-broadcast
+  * divergence). The audit of each captured execution is additionally
+  * DEFERRED to after the owning query's main plan has executed —
+  * belt-and-braces so any event that ever IS captured pre-finalization
+  * still gets walked in its final adaptive form. All gates run per captured execution with their own
   * allowance maps, and PLANS.md carries an inner-executions sub-table.
   * The listener bus is drained after each query (GraftBusBridge) so
   * attribution cannot bleed across queries.
@@ -405,22 +402,22 @@ object PlanAudit {
   /** Stages whose per-group top-k must keep its WindowGroupLimit. */
   private[graft] val StageRequiredWgl: Set[String] = Set("cap")
 
-  /** Allowances for INNER executions — the eager/lazy barrier plans the
+  /** Allowances for INNER executions — the barrier plans the
     * listener captures during query construction. Keyed by query name;
     * the ceiling applies PER captured execution (each barrier generation
     * / commit / collect is gated separately, so one iteration cannot
     * hide a regression inside another's allowance). Values pinned from
-    * the executed shapes, with the scale rationale per entry. Lazy-
-    * barrier captures carry FINAL adaptive plans (finalization happens
-    * inside toRdd — probed round 12; the audit additionally defers its
-    * walk to post-query as belt-and-braces), so the ceilings describe
+    * the executed shapes, with the scale rationale per entry. Barrier
+    * captures carry FINAL adaptive plans (finalization happens inside
+    * toRdd — probed round 12; the audit additionally defers its walk to
+    * post-query as belt-and-braces), so the ceilings describe
     * the runtime join choice: AQE demotions at fixture scale can only
     * bring counts UNDER a ceiling, never add a shape the gate misses.
     */
   private[graft] val InnerAllowedSmj: Map[String, Int] = Map(
     // the streamed corpus cycle's foreachBatch runs the x29
     // batch-vs-corpus inverted-index shape behind its in-batch
-    // localCheckpoint barriers — corpus-scale sides, the same class the
+    // barriers — corpus-scale sides, the same class the
     // main table allows s03 (AQE may demote to broadcast at fixture
     // scale; the pin is a ceiling per captured execution)
     "s03s_stream_corpus_cycle_streamed" -> 2)
@@ -470,14 +467,12 @@ object PlanAudit {
     //
     // DEFERRED audit (round-11 verdict ask #2): the listener captures the
     // QueryExecution itself and the walk runs after the owning query's
-    // main plan has executed. Probing showed the suspected pre-AQE gap
-    // does not actually exist — lazy localCheckpoint(false) finalizes its
-    // AQE stages inside toRdd, so events arrive isFinalPlan=true (see the
-    // class doc + PlanAuditSpec pin) — but deferring costs nothing and
-    // guards any capture that ever does arrive pre-finalization
+    // main plan has executed. A checkpoint finalizes its AQE stages
+    // inside toRdd, so events arrive isFinalPlan=true (see the class doc
+    // + PlanAuditSpec pin) — but deferring costs nothing and guards any
+    // capture that ever does arrive pre-finalization
     // (AdaptiveSparkPlanExec.executedPlan reflects finalized stages on
-    // re-read). A barrier the query path never materializes still audits
-    // as its initial plan — same coverage as before, never less.
+    // re-read).
     val pending =
       new java.util.concurrent.ConcurrentLinkedQueue[(String, String, org.apache.spark.sql.execution.QueryExecution)]()
     val inner = scala.collection.mutable.ListBuffer.empty[(String, String, Counts)]

@@ -18,6 +18,9 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => nameFilter.forall(_.exists(name.contains)) }
       .foreach { case (name, fn) =>
+      // stderr breadcrumb, as Bench prints: attributes any executor
+      // WARN/ERROR in the log to the query that was running
+      System.err.println(s"[verify] running $name")
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
+
 /** The forecaster: capability-equivalent restatement of the reference's
   * per-branch Prophet models (pretrain_models.py:18-33; inference at
   * main.py:230-236).
@@ -244,7 +246,7 @@ object SeasonalModel {
     // pass) and would otherwise re-derive from the fact scan each time
     val training = daily
       .filter(col("ds") <= lit(java.sql.Date.valueOf(cutoff)))
-      .localCheckpoint()
+      .transform(Barrier(_, "model.training"))
     val ts = timeScale(training)
     val rows: Dataset[FitRow] = training
       .select(
@@ -261,7 +263,7 @@ object SeasonalModel {
       .select(col("branch"), col("fit.coef").as("coef"), col("fit.n").as("n"))
       // bounded (one row per branch); consumed by the residual pass AND the
       // final join — materialize so the normal-equations shuffle runs once
-      .localCheckpoint()
+      .transform(Barrier(_, "model.fitted"))
 
     // second bounded pass: per-branch residual quantile on the log scale
     val resid = training

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
+
 /** End-to-end training-corpus curation: the single composed query a
   * 100 TB pretraining-data pipeline actually runs, chaining the
   * individually-verified operators into ONE lineage —
@@ -419,27 +421,27 @@ object Curation {
     val featNames =
       if (classifier.nonEmpty) QualityModel.DefaultFeatures else Seq.empty[String]
     val cap = capStage(docs, maxDocsPerSource, classifier.nonEmpty)
-    val capC = cap.localCheckpoint()
+    val capC = Barrier(cap, "curation.cap")
     val gates = gateStage(
       capC, minQuality, maxDupLineFrac, maxTopBigramFrac, featNames)
-    val gatesC = gates.localCheckpoint()
+    val gatesC = Barrier(gates, "curation.gates")
     val (clsStage, gatedC) = classifier match {
       case None => (Nil, gatesC)
       case Some((model, threshold)) =>
         val g = classifierStage(gatesC, model, threshold)
-        (Seq("classifier" -> g), g.localCheckpoint())
+        (Seq("classifier" -> g), Barrier(g, "curation.classifier"))
     }
     val exd = Dedup.dropExactDuplicates(gatedC)
-    val exdC = exd.localCheckpoint()
+    val exdC = Barrier(exd, "curation.exact_dedup")
     val pairs = pairStage(exdC, jaccardThreshold, minShared, maxShingleDf)
-    val pairsC = pairs.localCheckpoint()
+    val pairsC = Barrier(pairs, "curation.near_dup_pairs")
     val nd = Dedup.dropNearDuplicatesBy(exdC, pairsC, "quality_score")
-    val ndC = nd.localCheckpoint()
+    val ndC = Barrier(nd, "curation.near_dup_retention")
     val clean = ndC.join(
       cleanIdsStage(ndC, banned, decontamMinShared), Seq("doc_id"), "left_semi")
-    val cleanC = clean.localCheckpoint()
+    val cleanC = Barrier(clean, "curation.decontam")
     val resampled = resampleStage(cleanC, alpha)
-    val resampledC = resampled.localCheckpoint()
+    val resampledC = Barrier(resampled, "curation.resample")
     val pack = packStage(resampledC, seqLen, hexChars)
     Seq("cap" -> cap, "gates" -> gates) ++ clsStage ++ Seq(
       "exact_dedup" -> exd, "near_dup_pairs" -> pairs,

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
+
 /** Deduplication operators for the training-data pipeline: exact
   * (normalize + hash), MinHash-LSH banded near-dup, and SimHash.
   *
@@ -379,20 +381,22 @@ object Dedup {
     * frame — the unordered-count variant planned a second full sort),
     * the prefix-postings self-join (corpus-scale both sides — the x24
     * SMJ allowance class), one corpus×candidates semi-join to cut the
-    * array frame, then two candidate-bounded array joins. The three checkpoints are all
-    * PAIR-bounded: the candidate frame (so the self-join runs once),
-    * the candidate-doc array frame (so the corpus semi-join runs once,
-    * not once per verify side), and the scored frame (so the jaccard
+    * array frame, then two candidate-bounded array joins. The three
+    * barriers are all PAIR-bounded: the candidate frame `ppjoin.cand`
+    * (so the self-join runs once), the candidate-doc array frame
+    * `ppjoin.arrs` (so the corpus semi-join runs once, not once per
+    * verify side), and the scored frame `ppjoin.scored` (so the jaccard
     * filter sees a plain integer attribute — PushDownPredicate would
     * otherwise inline the array_intersect into a Filter, the audited
-    * HOF-in-Filter class). Never all-pairs.
+    * HOF-in-Filter class). Never all-pairs. Bench's `barrier_ms` row for
+    * x106 splits the operator's wall across the three names.
     */
   def ppjoinNearDups(
       docs: DataFrame,
       threshold: Double,
       n: Int = 3): DataFrame = {
-    val (_, _, scored) = ppjoinFrames(docs, threshold, n)
-    scored
+    val cand = ppjoinCand(docs, threshold, n)
+    ppjoinScored(cand, ppjoinArrs(docs, cand, n))
       .withColumn(
         "jaccard",
         col("n_inter").cast("double") / (col("n_a") + col("n_b") - col("n_inter")))
@@ -400,38 +404,11 @@ object Dedup {
       .select("doc_a", "doc_b", "jaccard")
   }
 
-  /** The three checkpoint-bounded frames of [[ppjoinNearDups]] —
-    * (candidate pairs, candidate-doc shingle arrays, scored pairs) — the
-    * REAL operator internals, exposed as PER-STAGE builders so the
-    * timing harness ([[ppjoinStageTimings]], Bench's x106_stages
-    * artifact) measures the production frames instead of a hand-kept
-    * replica that drifts.
-    *
-    * Why builders and not one function returning three frames: each
-    * frame ends in `localCheckpoint(false)`, and under AQE even a LAZY
-    * checkpoint executes its plan's intermediate query stages EAGERLY
-    * inside the construction call (AdaptiveSparkPlanExec materializes
-    * every exchange to re-plan; only the result stage defers) — so the
-    * expensive work of all three barriers lands at construction time,
-    * and a harness that times only the downstream forcing actions
-    * measures final-stage scraps (observed: stage walls summing to
-    * 1.5 s against a 4.3 s operator). Timing each BUILDER call plus its
-    * force together attributes the AQE-eager work to its own stage.
-    */
-  private[graft] def ppjoinFrames(
-      docs: DataFrame,
-      threshold: Double,
-      n: Int): (DataFrame, DataFrame, DataFrame) = {
-    val cand = ppjoinCand(docs, threshold, n)
-    val arrs = ppjoinArrs(docs, cand, n)
-    (cand, arrs, ppjoinScored(cand, arrs))
-  }
-
   /** Stage 1 of [[ppjoinNearDups]]: shingle + df + prefix + positional/
     * i-prefix self-join + pair groupBy → the pair-bounded candidate
     * barrier. See the scaladoc comments inline.
     */
-  private[graft] def ppjoinCand(
+  private def ppjoinCand(
       docs: DataFrame,
       threshold: Double,
       n: Int): DataFrame = {
@@ -449,7 +426,7 @@ object Dedup {
     // so Spark plans a single WindowExec over a single sort — the naive
     // unordered-count + ordered-rank pair planned TWO WindowExec nodes
     // with TWO full sorts of the corpus-scale shingle frame (found by the
-    // round-12 x106_stages decomposition: the candidate stage is the
+    // round-12 per-stage decomposition: the candidate stage is the
     // operator's floor, and one of its two sorts was pure waste)
     val wDoc = org.apache.spark.sql.expressions.Window
       .partitionBy("doc_id").orderBy(col("df"), col("shingle"))
@@ -511,7 +488,7 @@ object Dedup {
     // is materialized, which is the shuffle-bytes lever a 100 TB run
     // cares about even where fixture wall time is flat.
     //
-    // Measured at sf0.1 (TimeX106 staged the costs before each change;
+    // Measured at sf0.1 (staged per barrier before each change;
     // survivors pinned at 256 throughout by the brute-force spec):
     // p×p join, no positional filter: 310k pairs, 4.6 s isolated;
     // + positional filter: 125k pairs, ~4.1 s; + i-prefix: 125k pairs
@@ -523,8 +500,8 @@ object Dedup {
     // machinery floor itself: the df window replacing the groupBy+join
     // (one corpus shuffle fewer) and the fused len/rank window (one
     // corpus sort fewer) took the candidate stage 2.1 → ~1.55 s and the
-    // whole operator to ~3.0–3.4 s (BENCH_DETAIL's x106_stages tracks
-    // this per round).
+    // whole operator to ~3.0–3.4 s (BENCH_DETAIL's x106 `barrier_ms`
+    // tracks this per round).
     //
     // SUFFIX FILTER (Xiao §4.2) — measured and REJECTED (round 13): the
     // round-12 verdict conditioned it on the verify stage still leading
@@ -585,7 +562,7 @@ object Dedup {
         when(col("doc_p") < col("doc_i"), col("n_i")).otherwise(col("n_p")).as("n_b"))
       .groupBy("doc_a", "doc_b")
       .agg(first(col("n_a")).as("n_a"), first(col("n_b")).as("n_b"))
-      .localCheckpoint(false)
+      .transform(Barrier(_, "ppjoin.cand"))
     cand
   }
 
@@ -596,7 +573,7 @@ object Dedup {
     * verify joins read a small materialized frame — the unshared form
     * rebuilt shingleFrame per join side, two extra corpus scans.
     */
-  private[graft] def ppjoinArrs(
+  private def ppjoinArrs(
       docs: DataFrame,
       cand: DataFrame,
       n: Int): DataFrame = {
@@ -611,7 +588,7 @@ object Dedup {
       // sits in ~dozens of pairs, so the per-doc sort amortizes across
       // every pair it joins (SortedIntersectCountExpr's contract)
       .select(col("doc_id"), sort_array(col("shingle_arr")).as("shingle_arr"))
-      .localCheckpoint(false)
+      .transform(Barrier(_, "ppjoin.arrs"))
   }
 
   /** Stage 3 of [[ppjoinNearDups]]: exact |A∩B| — the pair-bounded frame
@@ -624,7 +601,7 @@ object Dedup {
     * the checkpoint makes the jaccard filter downstream a
     * plain-attribute predicate (HOF-in-Filter gate).
     */
-  private[graft] def ppjoinScored(cand: DataFrame, arrs: DataFrame): DataFrame =
+  private def ppjoinScored(cand: DataFrame, arrs: DataFrame): DataFrame =
     cand
       .join(arrs.select(col("doc_id").as("doc_a"), col("shingle_arr").as("arr_a")), Seq("doc_a"))
       .join(arrs.select(col("doc_id").as("doc_b"), col("shingle_arr").as("arr_b")), Seq("doc_b"))
@@ -632,48 +609,7 @@ object Dedup {
         col("doc_a"), col("doc_b"), col("n_a"), col("n_b"),
         graft.functions.SortedIntersectCountExpr
           .sortedIntersectCount(col("arr_a"), col("arr_b")).as("n_inter"))
-      .localCheckpoint(false)
-
-  /** Per-stage wall decomposition of [[ppjoinNearDups]] (the round-11
-    * verdict ask: the 3.4–4.8 s run-to-run spread on x106 was attributed
-    * to IO/shuffle variance by assertion, not measurement — this turns
-    * the attribution into a per-round committed artifact via Bench's
-    * x106_stages block). Each stage wall covers the BUILDER call plus
-    * the forcing count — under AQE the lazy checkpoint runs its
-    * exchanges eagerly inside the builder (see [[ppjoinFrames]]), so
-    * timing only the force would misattribute the work. Returns
-    * (stage, wall seconds, rows):
-    *   - `candidates`  — shingle + df + prefix + positional/i-prefix
-    *     self-join + pair groupBy (the corpus-scale half);
-    *   - `array_frame` — corpus semi-join down to candidate docs +
-    *     shingle-array build (reads the checkpointed cand);
-    *   - `verify`      — two pair-bounded array joins + array_intersect;
-    *   - `score_filter`— jaccard arithmetic + threshold filter (cheap;
-    *     nonzero only as a sanity floor).
-    * The stage frames are the SAME lazy localCheckpoints the operator
-    * ships, so the sum of the walls tracks the whole-operator wall to
-    * within the count() actions' overhead.
-    */
-  def ppjoinStageTimings(
-      docs: DataFrame,
-      threshold: Double,
-      n: Int = 3): Seq[(String, Double, Long)] = {
-    def staged(name: String, build: () => DataFrame): (String, Double, Long, DataFrame) = {
-      val t0 = System.nanoTime()
-      val df = build()
-      val rows = df.count()
-      (name, (System.nanoTime() - t0) / 1e9, rows, df)
-    }
-    val s1 = staged("candidates", () => ppjoinCand(docs, threshold, n))
-    val s2 = staged("array_frame", () => ppjoinArrs(docs, s1._4, n))
-    val s3 = staged("verify", () => ppjoinScored(s1._4, s2._4))
-    val s4 = staged("score_filter", () => s3._4
-      .withColumn(
-        "jaccard",
-        col("n_inter").cast("double") / (col("n_a") + col("n_b") - col("n_inter")))
-      .filter(col("jaccard") >= threshold))
-    Seq(s1, s2, s3, s4).map(s => (s._1, s._2, s._3))
-  }
+      .transform(Barrier(_, "ppjoin.scored"))
 
   /** Containment near-dups: pairs where the SMALLER document's shingle
     * set is largely inside the other's — |A∩B| / min(|A|, |B|), the
@@ -718,9 +654,9 @@ object Dedup {
     val byShingle = org.apache.spark.sql.expressions.Window.partitionBy("shingle")
     val sh = graft.sources.VersionedTable.materialize(
       TextOps.shingles(docs, n).withColumn("df", count(lit(1)).over(byShingle)),
-      materialize)
+      materialize, "pairs.shingles")
     val idx = sh.filter(col("df") <= maxShingleDf).select("shingle", "doc_id")
-    // localCheckpoint, not just a val: cands feeds BOTH the final join and
+    // a barrier, not just a val: cands feeds BOTH the final join and
     // hotInter, and column pruning specializes the two uses into
     // non-identical subtrees ReuseExchange cannot collapse — without the
     // materialization the whole candidate self-join + pair aggregation
@@ -732,7 +668,7 @@ object Dedup {
       .groupBy("doc_a", "doc_b")
       .agg(count(lit(1)).as("n_rare_shared"))
       .filter(col("n_rare_shared") >= minShared)
-      .localCheckpoint(false)
+      .transform(Barrier(_, "pairs.cand"))
     // intersection over the capped-out (hot) shingles only — exact
     // complement of the candidate join's rare-shared count
     val hotSh = sh.filter(col("df") > maxShingleDf)
@@ -791,9 +727,9 @@ object Dedup {
     val byShingle = org.apache.spark.sql.expressions.Window.partitionBy("shingle")
     val shC = graft.sources.VersionedTable.materialize(
       TextOps.shingles(corpus, n).withColumn("df", count(lit(1)).over(byShingle)),
-      materialize)
+      materialize, "against.corpus")
     jaccardAgainstCore(
-      TextOps.shingles(batch, n).localCheckpoint(), shC, threshold, minShared, maxShingleDf)
+      Barrier(TextOps.shingles(batch, n), "against.batch"), shC, threshold, minShared, maxShingleDf)
   }
 
   /** Fuzzy decontamination: every PROBE document scored for shingle-set
@@ -854,7 +790,7 @@ object Dedup {
     // three consumers (rare index, hot postings, per-doc counts)
     val shBench = TextOps.shingles(benchmark, n)
       .withColumn("df", count(lit(1)).over(byShingle))
-      .localCheckpoint()
+      .transform(Barrier(_, "decontam.bench"))
     val idxBench = shBench.filter(col("df") <= maxShingleDf)
     val hotBench = shBench.filter(col("df") > maxShingleDf)
     // probe pass 1 — the ONLY corpus-scale tokenize: exploded probe
@@ -877,7 +813,7 @@ object Dedup {
       .groupBy("batch_id", "corpus_id")
       .agg(count(lit(1)).as("n_rare_shared"))
       .filter(col("n_rare_shared") >= minShared)
-      .localCheckpoint() // pair-bounded: decontam HITS are rare by design
+      .transform(Barrier(_, "decontam.cand")) // pair-bounded: decontam HITS are rare by design
     // probe pass 2 — a pure SCAN, no tokenize: everything downstream
     // (hot-shingle complement, per-doc set sizes) concerns CANDIDATE
     // docs only, so the corpus streams through one broadcast semi-join
@@ -926,7 +862,7 @@ object Dedup {
         col("doc_id"), col("text"),
         size(TextOps.shingleArrayFromTokens(col("__toks"), n, distinct = true))
           .cast("long").as("n_b"))
-      .localCheckpoint()
+      .transform(Barrier(_, "decontam.docs"))
     val candSh = TextOps.shingles(candDocs, n)
       .select(col("doc_id").as("batch_id"), col("shingle"))
     // no hint here either: candSh is pair-bounded and hotBench scales
@@ -982,9 +918,9 @@ object Dedup {
     // per-doc counts) — checkpoint so the window runs once per batch
     val shC = postings
       .withColumn("df", count(lit(1)).over(byShingle))
-      .localCheckpoint()
+      .transform(Barrier(_, "postings.corpus"))
     jaccardAgainstCore(
-      TextOps.shingles(batch, n).localCheckpoint(), shC, threshold, minShared, maxShingleDf)
+      Barrier(TextOps.shingles(batch, n), "postings.batch"), shC, threshold, minShared, maxShingleDf)
   }
 
   /** Shared asymmetric inverted-index scorer: `shB`/`shC` are the batch
@@ -1005,7 +941,7 @@ object Dedup {
       .groupBy("batch_id", "corpus_id")
       .agg(count(lit(1)).as("n_rare_shared"))
       .filter(col("n_rare_shared") >= minShared)
-      .localCheckpoint()
+      .transform(Barrier(_, "against.cand"))
     val hotC = shC.filter(col("df") > maxShingleDf)
     // bound the batch-side re-expansion to hot shingles before fanning
     // out over candidate pairs
@@ -1194,7 +1130,7 @@ object Dedup {
     * graphs take the loop path unchanged; 0 disables the fast path.
     * Both paths return the identical (node, min-reachable-id) labeling.
     */
-  /** `durable`: iteration barriers default to `localCheckpoint` —
+  /** `durable`: iteration barriers default to [[graft.Barrier]] —
     * executor-local blocks, fastest, but an executor loss loses both the
     * blocks and the truncated lineage. Passing a
     * [[graft.sources.VersionedTable]] commits every barrier generation
@@ -1215,14 +1151,6 @@ object Dedup {
       maxIter: Int = 25,
       smallGraphMaxEdges: Long = 1L << 20,
       durable: Option[graft.sources.VersionedTable] = None): DataFrame = {
-    // barrier primitive shared by the edge frame and every labels
-    // generation: local blocks by default, snapshot commit when durable
-    def barrier(df: DataFrame): DataFrame = durable match {
-      case Some(vt) =>
-        val v = vt.commit(df)
-        vt.readVersion(df.sparkSession, v)
-      case None => df.localCheckpoint()
-    }
     val fwd = pairs.select(col(srcCol).as("u"), col(dstCol).as("v"))
     // the label-sum convergence test below is exact only for integral
     // ids (cast to decimal is lossless and sums cannot overflow 38
@@ -1264,7 +1192,7 @@ object Dedup {
       .unionByName(fwd.select(col("v").as("u"), col("u").as("v")))
       .distinct()
       .observe("cc_edge_count", count(lit(1)).as("n"))
-    val edges = barrier(obsEdges) // reused every iteration; bounded by 2|pairs|
+    val edges = graft.sources.VersionedTable.materialize(obsEdges, durable, "cc.edges") // reused every iteration; bounded by 2|pairs|
     val edgeCount =
       obsEdges.queryExecution.observedMetrics.get("cc_edge_count") match {
         case Some(r) if durable.isEmpty => r.getLong(0)
@@ -1298,7 +1226,7 @@ object Dedup {
         "cc_label_sum",
         count(lit(1)).as("n"),
         sum(col("label").cast("decimal(38,0)")).as("s"))
-      val ck = barrier(observed)
+      val ck = graft.sources.VersionedTable.materialize(observed, durable, "cc.labels")
       val (n, s) = observed.queryExecution.observedMetrics.get("cc_label_sum") match {
         // local mode only — see the durable-mode caveat on the edge count
         // (a commit leaves the accumulator unexecuted and it reads back
@@ -1448,7 +1376,7 @@ object Dedup {
     val base = docs
       .filter(col("text").isNotNull)
       .select(col("doc_id"), split(col("text"), " ", -1).as("ws"))
-      .localCheckpoint()
+      .transform(Barrier(_, "spandedup.base"))
     val grams = base
       .filter(size(col("ws")) >= k)
       .select(

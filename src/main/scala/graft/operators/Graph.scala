@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
+
 /** Iterative graph computation — PageRank (Brin & Page 1998) over an
   * undirected pair list, the centrality pass the label-propagation
   * components operator ([[Dedup.connectedComponents]]) doesn't give:
@@ -48,7 +50,7 @@ object Graph {
     * null-rejecting equi-condition silently discarded its
     * contributions — a silent skew of every rank, not an error.
     *
-    * `durable`: iteration barriers default to `localCheckpoint` —
+    * `durable`: iteration barriers default to [[graft.Barrier]] —
     * executor-local blocks, the fast single-job path, but NOT
     * fault-tolerant (a lost executor loses blocks AND the truncated
     * lineage, killing the job). Passing a [[graft.sources.VersionedTable]]
@@ -99,19 +101,15 @@ object Graph {
     // the fault-tolerance contract holds — and keeps its EXACT historical
     // barrier sequence (rank generations only; GraphSpec pins the version
     // count), which also means durable never takes the small-graph path.
-    def barrier(df: DataFrame): DataFrame = durable match {
-      case Some(vt) =>
-        val v = vt.commit(df)
-        vt.readVersion(df.sparkSession, v)
-      case None => df.localCheckpoint(true)
-    }
+    def barrier(df: DataFrame): DataFrame =
+      graft.sources.VersionedTable.materialize(df, durable, "pagerank.ranks")
     val edgesRaw = fwd
       .unionByName(fwd.select(col("v").as("u"), col("u").as("v"), col("w")))
     val (edges, edgeCount) = durable match {
       case Some(_) => (edgesRaw.persist(), -1L) // no dispatch on durable
       case None =>
         val obs = edgesRaw.observe("pr_edge_count", count(lit(1)).as("n"))
-        val ck = obs.localCheckpoint(true) // bounded by 2|pairs|
+        val ck = Barrier(obs, "pagerank.edges") // bounded by 2|pairs|
         val cnt = obs.queryExecution.observedMetrics.get("pr_edge_count") match {
           case Some(r) => r.getLong(0)
           case _ => ck.count() // future-Spark fallback, never wrong
@@ -250,19 +248,17 @@ object Graph {
     // expressions (the audited HOF-in-Filter class; the gate caught
     // this operator's first draft). The barrier is also the
     // multi-consumer fix: e feeds degrees, both orientation sides and
-    // the closing join — four consumers of one dedup shuffle. It is
-    // EAGER, materialized here on the calling thread: a lazy checkpoint
-    // is written by whichever job first finishes computing it, and with
-    // a broadcast and a shuffle of this query reading e at once, the
-    // broadcast thread's checkpoint write deadlocked against the DAG
-    // scheduler's cache-location lookup (each held the lock the other
-    // wanted: RDDCheckpointData's and the RDD's own).
+    // the closing join — four consumers of one dedup shuffle. Eager like
+    // every Barrier: a lazy checkpoint here, read by a broadcast and a
+    // shuffle of this query at once, deadlocked the broadcast thread's
+    // checkpoint write against the DAG scheduler's cache-location lookup
+    // (each held the lock the other wanted).
     val e = pairs
       .select(
         least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .distinct()
-      .localCheckpoint(true)
+      .transform(Barrier(_, "triangles.edges"))
       .filter(col("a") =!= col("b") && col("a").isNotNull && col("b").isNotNull)
     val und = e.unionByName(e.select(col("b").as("a"), col("a").as("b")))
     val deg = und.groupBy(col("a").as("node")).agg(count(lit(1)).as("deg"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
+
 /** Data Selection via Importance Resampling (DSIR, Xie et al. 2023,
   * "Data Selection for Language Models via Importance Resampling") —
   * the published recipe for picking the slice of a raw web corpus that
@@ -337,7 +339,7 @@ object Importance {
       v
     }
     val feats = timed("features") {
-      val f = taggedFeatures(raw, isTarget, numBuckets).localCheckpoint()
+      val f = Barrier(taggedFeatures(raw, isTarget, numBuckets), "dsir.features")
       (f.count(), f)
     }
     val ratio = timed("fit") {
@@ -361,7 +363,7 @@ object Importance {
             - log(col("t_tot") + lit(numBuckets.toDouble))
             - log(col("r_cnt") + lit(1.0))
             + log(col("r_tot") + lit(numBuckets.toDouble))).as("lr"))
-        .localCheckpoint()
+        .transform(Barrier(_, "dsir.fit"))
       (r.count(), r)
     }
     val scored = timed("score") {
@@ -371,7 +373,7 @@ object Importance {
         .agg(
           sum(col("cnt")).as("n_feats"),
           (CrossRound.ra(sum(col("cnt") * col("lr")), 4) + lit(0.0)).as("logw"))
-        .localCheckpoint()
+        .transform(Barrier(_, "dsir.score"))
       (sc.count(), sc)
     }
     timed("select") {

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
 import graft.sources.{Tables, VersionedTable}
 
 /** The precompute pipeline: Spark restatement of the reference's
@@ -130,7 +131,7 @@ object Percentages {
     * verification harness.
     */
   def percentagesSingleScan(historical: DataFrame): DataFrame = {
-    val mg  = moveGrouped(historical).localCheckpoint()
+    val mg  = Barrier(moveGrouped(historical), "pct.mg")
     val tg  = mg.groupBy(col("branch"), col("month"), col("day"))
       .agg(sum(col("move_cnt")).as("total_cnt"))
     val mts = mg.select("move_type").distinct()
@@ -156,7 +157,7 @@ object Percentages {
     * them nothing.
     */
   def percentagesCheckpointed(spark: SparkSession, dir: String): DataFrame =
-    percentages(spark, dir).localCheckpoint()
+    Barrier(percentages(spark, dir), "pct.dense")
 
   /** O31: the monthly average the serving fallback uses
     * (main.py:102-106) — materialized once instead of per-request SQL.
@@ -194,7 +195,7 @@ object Percentages {
     // months, and the incremental path must produce identical rows
     val mts = historical.select("move_type").distinct()
     val mg = moveGrouped(historical.filter(month(col("ds")).isin(months: _*)))
-      .localCheckpoint()
+      .transform(Barrier(_, "pct.refresh_mg"))
     val tg = mg
       .groupBy(col("branch"), col("month"), col("day"))
       .agg(sum(col("move_cnt")).as("total_cnt"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Barrier
+
 /** Table profiling — the data-quality report every ingest pipeline runs
   * before trusting a new drop: per column, null count, exact distinct
   * cardinality, and (for orderable numeric/temporal columns) min/max.
@@ -83,7 +85,7 @@ object Profile {
   def keySkewReport(df: DataFrame, key: String, topK: Int = 20): DataFrame = {
     require(topK >= 1, "topK must be positive")
     val counts = df.groupBy(col(key)).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(false)
+      .transform(Barrier(_, "skew.counts"))
     val totals = counts.agg(
       sum(col("cnt")).as("total"), count(lit(1)).as("n_keys"))
     counts.crossJoin(broadcast(totals))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
+
 /** Similarity search over an embedding column (`embeddings.embedding`,
   * array<float> — FIXTURES.md §2).
   *
@@ -1475,7 +1477,7 @@ object Similarity {
     // assignment as a table instead (VersionedTable sink pattern).
     val assigned = ivfAssign(emb, centroidsDF(emb.sparkSession, cents))
       .select(col("cell"), col("vec_id"), col("embedding"))
-      .localCheckpoint()
+      .transform(Barrier(_, "semdedup.assigned"))
     // pair work is sum of SQUARED cell sizes, so one degenerate cluster
     // (a mass of near-identical boilerplate — the common real-world
     // corpus pathology) turns quadratic. The opt-in cap hash-splits any
@@ -1548,7 +1550,7 @@ object Similarity {
     // sides) — same multi-consumer rule as semanticDedupWith's assignment
     val b = ivfAssign(batch, centroidsDF(batch.sparkSession, cents))
       .select(col("cell"), col("vec_id"), col("embedding"))
-      .localCheckpoint()
+      .transform(Barrier(_, "semdedup.batch"))
     val vsCorpus = broadcast(b)
       .join(
         corpusAssigned.select(col("cell"), col("embedding").as("c_emb")),

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
+
 /** Skew mitigation for joins whose key distribution is pathological
   * (SURVEY §7.6 / brief: "salting for skew, AQE for runtime re-plan").
   *
@@ -74,7 +76,7 @@ object Skew {
       .agg(count(lit(1)).as("__n"))
       .filter(col("__n") > hotThreshold)
       .select(keyCols: _*)
-      .localCheckpoint() // four consumers below; bounded by construction
+      .transform(Barrier(_, "skew.hotkeys")) // four consumers below; bounded by construction
     val bigHot = big.join(broadcast(hotKeys), keys, "left_semi")
     val bigCold = big.join(broadcast(hotKeys), keys, "left_anti")
     val smallHot = small.join(broadcast(hotKeys), keys, "left_semi")

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
+
 /** Deterministic dataset splitting for training pipelines: assign each row
   * to a named fold by hashing its key.
   *
@@ -221,7 +223,7 @@ object Splits {
     val toks = docs.select(col("source"), col("doc_id"),
       size(TextOps.tokens(col("text"))).cast("long").as("n_tokens"))
     val powed = toks.groupBy("source").agg(sum(col("n_tokens")).as("n"))
-      .localCheckpoint(false)
+      .transform(Barrier(_, "budget.sources"))
       .select(col("source"), pow(col("n").cast("double"), lit(alpha)).as("w"))
     val tot = powed.agg(sum(col("w")).as("tot"))
     val quotas = powed.crossJoin(broadcast(tot))

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
+
 /** Text-analysis operators for the large-scale training-data pipeline
   * (brief extension surface; substrate: the `documents` table —
   * FIXTURES.md §2). Everything here is per-row column math — embarrassingly
@@ -387,7 +389,7 @@ object TextOps {
       // output): without materialization, pruning specializes the two uses
       // into non-identical aggregates and the corpus is scanned twice
       // (audited: 2 scans lazy, 1 materialized — the Percentages trap)
-      .localCheckpoint()
+      .transform(Barrier(_, "sources.stats"))
     val total = bySource.agg(sum(col("n_docs")).as("corpus_docs"))
     bySource
       .crossJoin(broadcast(total))
@@ -514,7 +516,7 @@ object TextOps {
     val vocab = docs
       .select(col("source"), explode(tokens(col("text"))).as("token"))
       .distinct()
-      .localCheckpoint(false)
+      .transform(Barrier(_, "vocab.sources"))
     val sizes = vocab.groupBy("source").agg(count(lit(1)).as("n"))
     val a = vocab.select(col("source").as("source_a"), col("token"))
     val b = vocab.select(col("source").as("source_b"), col("token"))
@@ -617,7 +619,7 @@ object TextOps {
       .select(col("p.w1"), col("p.w2"))
       .groupBy("w1", "w2")
       .agg(count(lit(1)).as("c12"))
-      .localCheckpoint(false)
+      .transform(Barrier(_, "pmi.c12"))
     val cL = c12.groupBy("w1").agg(sum(col("c12")).as("cl"))
     val cR = c12.groupBy("w2").agg(sum(col("c12")).as("cr"))
     val n = c12.agg(sum(col("c12")).as("n"))
@@ -705,7 +707,7 @@ object TextOps {
         .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
         .groupBy("doc_id", "token")
         .agg(count(lit(1)).as("tf")),
-      materialize)
+      materialize, "tfidf.tf")
     val dfreq = tf.groupBy("token").agg(count(lit(1)).as("dfreq"))
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
     val scored = tf
@@ -1227,7 +1229,7 @@ object TextOps {
         .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
         .groupBy("doc_id", "token")
         .agg(count(lit(1)).as("tf")),
-      materialize)
+      materialize, "unigram.tf")
     val freq = tf.groupBy("token").agg(sum(col("tf")).as("freq"))
     val total = freq.agg(sum(col("freq")).as("total_tokens"))
     tf.join(freq, Seq("token"))
@@ -1393,7 +1395,7 @@ object TextOps {
     */
   def perplexityBuckets(docs: DataFrame, approx: Boolean = false): DataFrame = {
     // one row per doc, consumed twice (cut aggregate + bucket join)
-    val scored = unigramLogProb(docs).localCheckpoint()
+    val scored = Barrier(unigramLogProb(docs), "ppl.scored")
     val fn = if (approx) "approx_percentile" else "percentile"
     val cuts = scored.agg(
       expr(s"$fn(logprob, ${2.0 / 3})").as("head_cut"),

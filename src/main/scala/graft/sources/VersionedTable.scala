@@ -8,6 +8,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
 import org.json4s._
 import org.json4s.jackson.JsonMethods.{compact, parse, render}
 
+import graft.Barrier
+
 /** Snapshot-isolated parquet table: immutable data directories plus an
   * ordered log of immutable commit records, one per published version —
   * the Delta Lake log (Armbrust et al., PVLDB 13(12), 2020) restated on
@@ -1451,23 +1453,23 @@ object VersionedTable {
   /** Materialize a corpus-scale intermediate frame once for its multiple
     * consumers: into `sink` as a committed snapshot when given — the
     * 100 TB path (fault-tolerant, resumable, inspectable, survives the
-    * job) — else an in-memory `localCheckpoint` (the single-job path;
-    * executor-local blocks, lost with the job). Both return a frame whose
-    * downstream plans read materialized rows instead of recomputing the
-    * lineage. The table path re-reads through parquet, so physical
-    * partitioning from the producing plan is NOT carried over (a
-    * downstream join re-establishes it with one exchange); the
-    * checkpoint path preserves it.
+    * job) — else through [[graft.Barrier]] (the single-job path;
+    * executor-local blocks, lost with the job). Both run under the
+    * barrier name `name`, and both return a frame whose downstream plans
+    * read materialized rows instead of recomputing the lineage. The
+    * table path re-reads through parquet, so physical partitioning from
+    * the producing plan is NOT carried over (a downstream join
+    * re-establishes it with one exchange); the checkpoint path preserves
+    * it.
     */
-  def materialize(frame: DataFrame, sink: Option[VersionedTable]): DataFrame =
+  def materialize(frame: DataFrame, sink: Option[VersionedTable], name: String): DataFrame =
     sink match {
       // pin the read to the version just committed — read() re-resolves
       // latestVersion(), so a concurrent committer (or a re-evaluated
       // query lambda) between commit and read would silently swap in a
       // DIFFERENT snapshot than the one this frame produced
       case Some(vt) =>
-        val v = vt.commit(frame)
-        vt.readVersion(frame.sparkSession, v)
-      case None => frame.localCheckpoint(eager = false)
+        Barrier.named(frame, name)(vt.readVersion(frame.sparkSession, vt.commit(frame)))
+      case None => Barrier(frame, name)
     }
 }

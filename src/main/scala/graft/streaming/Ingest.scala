@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
+import graft.Barrier
 import graft.sources.{Tables, VersionedTable}
 
 /** Streaming ingest (SURVEY.md §2.7): the reference has no streaming path —
@@ -428,7 +429,7 @@ object Ingest {
           // running concurrent persisting jobs should isolate streams.
           val before = spark.sparkContext.getPersistentRDDs.keySet
           try {
-            val fresh = graft.operators.Dedup.dropExactDuplicates(batch.localCheckpoint())
+            val fresh = graft.operators.Dedup.dropExactDuplicates(Barrier(batch, "ingest.batch"))
             val prevVersion = corpus.latestVersion()
             // the index is usable only if its tag says it mirrors the
             // corpus version this batch dedups against
@@ -452,7 +453,7 @@ object Ingest {
                 fresh.join(dupIds, Seq("doc_id"), "left_anti")
             }
             // reused by the corpus commit AND the index append
-            val survivorsC = survivors.localCheckpoint()
+            val survivorsC = Barrier(survivors, "ingest.survivors")
             val newVersion = corpus.appendCommit(survivorsC, Some(tag))
             shingleIndex.foreach { idx =>
               val freshShingles = graft.operators.TextOps.shingles(survivorsC, 3)

@@ -133,20 +133,12 @@ class DedupSpec extends AnyFunSuite {
     assert(nulls.select(sortedIntersectCount(col("a"), col("b"))).collect().head.isNullAt(0))
   }
 
-  test("ppjoinStageTimings decomposes the operator: stage rows consistent, result preserved") {
+  test("ppjoinNearDups runs each of its three named barriers once; result count unchanged") {
     val c = corpus()
-    val stages = Dedup.ppjoinStageTimings(c, 0.5)
-    assert(stages.map(_._1) === Seq("candidates", "array_frame", "verify", "score_filter"))
-    val byName = stages.map(s => s._1 -> s._3).toMap
-    // verify scores every candidate pair; the filter can only shrink it
-    assert(byName("verify") === byName("candidates"))
-    assert(byName("score_filter") <= byName("verify"))
-    // the array frame holds one row per DISTINCT candidate doc — bounded
-    // by twice the pair count and at least one doc per surviving pair
-    assert(byName("array_frame") <= 2 * byName("candidates"))
-    // the staged path measures the SAME operator: final stage cardinality
-    // equals the shipped query's result
-    assert(byName("score_filter") === Dedup.ppjoinNearDups(c, 0.5).count())
+    val (pairs, barriers) = SparkJobs.barriers(spark)(Dedup.ppjoinNearDups(c, 0.5).count())
+    assert(barriers === Map("ppjoin.cand" -> 1, "ppjoin.arrs" -> 1, "ppjoin.scored" -> 1))
+    // the planted near-dup and exact-dup pairs (the brute-force spec above)
+    assert(pairs === 2L)
   }
 
   test("containmentNearDups: an embedded excerpt scores 1.0 where jaccard waves it through") {

@@ -64,7 +64,7 @@ class VersionedTableSpec extends AnyFunSuite {
   test("materialize is pinned to the snapshot it committed, not the latest pointer") {
     val t = freshTable()
     import spark.implicits._
-    val mat = VersionedTable.materialize(Seq((1L, "a"), (2L, "b")).toDF("id", "s"), Some(t))
+    val mat = VersionedTable.materialize(Seq((1L, "a"), (2L, "b")).toDF("id", "s"), Some(t), "spec.mat")
     // another committer bumps the pointer between materialize and the
     // downstream read — the materialized frame must keep serving ITS
     // snapshot (pre-fix, materialize re-resolved latestVersion and would
