@@ -11,16 +11,4 @@ object OracleSqlUtil {
     * decimal literal would go through DuckDB's DECIMAL type instead).
     */
   def dlit(x: Double): String = s"CAST('${x.toString}' AS DOUBLE)"
-
-  /** The cached fitted state, iff unambiguous — exactly one sf dir
-    * fitted this JVM. Verify forks one JVM per sf dir and runs queries
-    * BEFORE dumping oracles, so the map holds exactly one entry when an
-    * oracle renders; zero or several entries mean the oracle must be
-    * omitted (the driver then records a weaker rows-only check instead
-    * of a wrong compare).
-    */
-  def cachedOne[T](m: java.util.concurrent.ConcurrentHashMap[String, T]): Option[T] = {
-    val vs = m.values()
-    if (vs.size == 1) Some(vs.iterator().next()) else None
-  }
 }

@@ -37,16 +37,14 @@ object ServingQueries {
     * dir per JVM — the model-store serving posture, where inference reads
     * a stored coefficient table instead of re-fitting per request — and
     * (b) `oracleSql` can interpolate the exact coefficients into a DuckDB
-    * restatement of the PREDICTION arithmetic (the FittedQualityModels
-    * pattern; the fit itself — distributed normal equations + an approx
-    * residual quantile — is not SQL-restatable, but its output is).
+    * restatement of the PREDICTION arithmetic (the ExtensionQueries
+    * quality-model pattern; the fit itself — distributed normal
+    * equations + an approx residual quantile — is not SQL-restatable,
+    * but its output is).
     */
   case class SeasModel(
       branch: String, coef: Seq[Double], n: Long, residQ: Double,
       tStart: java.sql.Date, tDays: Double)
-
-  private val FittedSeasonal =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[SeasModel]]()
 
   /** Fit-once-per-dir, then serve the model table as a LocalRelation —
     * downstream broadcast joins become job-free driver copies (the
@@ -57,22 +55,20 @@ object ServingQueries {
     * `SeasModels`) like every other driver-side model: a FRESH JVM loads
     * the committed coefficient snapshot instead of refitting — the
     * reference's own posture (it pickles the fitted Prophet models,
-    * main.py:165-185). The in-JVM map stays as a same-session fast path
+    * main.py:165-185). Fixture keeps the fit as a same-session fast path
     * and as the coefficient source `oracleSql` interpolates from.
     */
   private def seasonalModelsFor(s: SparkSession, dir: String): DataFrame = {
-    val rows = FittedSeasonal.computeIfAbsent(dir, _ =>
-      graft.sources.ModelStore.loadOrFit(
-        s, "seasonal_fix", dir, graft.sources.ModelStore.SeasModels) {
-        val daily = Tables.forecastingDataAll(s, dir).withColumnRenamed("cnt", "y")
-        SeasonalModel
-          .fit(daily, FixtureModelSpec, LocalDate.parse(SparkEntry.FixtureTrainCutoff))
-          .collect().toSeq
-          .map(r => SeasModel(
-            r.getAs[String]("branch"), r.getSeq[Double](r.fieldIndex("coef")).toSeq,
-            r.getAs[Long]("n"), r.getAs[Double]("resid_q"),
-            r.getAs[java.sql.Date]("t_start"), r.getAs[Double]("t_days")))
-      })
+    val rows = Fixture.fitted(s, "seasonal_fix", dir, graft.sources.ModelStore.SeasModels) {
+      val daily = Tables.forecastingDataAll(s, dir).withColumnRenamed("cnt", "y")
+      SeasonalModel
+        .fit(daily, FixtureModelSpec, LocalDate.parse(SparkEntry.FixtureTrainCutoff))
+        .collect().toSeq
+        .map(r => SeasModel(
+          r.getAs[String]("branch"), r.getSeq[Double](r.fieldIndex("coef")).toSeq,
+          r.getAs[Long]("n"), r.getAs[Double]("resid_q"),
+          r.getAs[java.sql.Date]("t_start"), r.getAs[Double]("t_days")))
+    }
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(
       StructField("branch", StringType, nullable = false),
@@ -86,10 +82,6 @@ object ServingQueries {
       jrows.add(org.apache.spark.sql.Row(m.branch, m.coef, m.n, m.residQ, m.tStart, m.tDays)))
     s.createDataFrame(jrows, schema)
   }
-
-  /** The cached fit, iff unambiguous (the cachedQualityModel rule). */
-  private def cachedSeasonal: Option[Seq[SeasModel]] =
-    OracleSqlUtil.cachedOne(FittedSeasonal)
 
   val TrendsToday: LocalDate = LocalDate.parse("2024-01-10")
   val TrendsInput: LocalDate = LocalDate.parse("2024-01-15")
@@ -686,7 +678,7 @@ object ServingQueries {
          |SELECT CAST(COUNT(*) AS BIGINT) AS n_rows FROM pct""".stripMargin,
     "o32_trends" -> trendsOracle(""),
     "o32_trends_mt" -> trendsOracle(s" AND move_type = '$MoveType'"),
-  ) ++ cachedSeasonal.map(ms => Map(
+  ) ++ Fixture.only[Seq[SeasModel]]("seasonal_fix").map(ms => Map(
     // rendered only when the fit ran this JVM (Verify runs queries before
     // dumping oracles); otherwise f01/f02 fall back to rows-only
     "f01_forecast" -> f01Sql(ms),

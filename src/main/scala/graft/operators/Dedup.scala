@@ -248,7 +248,7 @@ object Dedup {
       // persist: both sides of the band self-join read this frame, and
       // lazily each side would re-run the ENTIRE upstream signature
       // pipeline (tokenize -> gram hashes -> minhash -> band hashes) over
-      // the corpus. Same cache-lifetime note as lshNearDupPairs.
+      // the corpus.
       .persist()
     val a = banded.select(
       col("band_id"), col("band_hash"),

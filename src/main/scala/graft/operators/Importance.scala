@@ -152,9 +152,6 @@ object Importance {
       .select(col("bucket"), col("cnt").as("r_cnt"))
     val targetCounts = bucketCounts(target, numBuckets)
       .select(col("bucket"), col("cnt").as("t_cnt"))
-    // ln((t+1)/(T+m)) − ln((r+1)/(R+m)), expanded to the SAME four-term
-    // form the oracle states so both engines evaluate identical ln calls.
-    //
     // The corpus totals R and T ride the SAME lineage as the per-bucket
     // counts: the two count tables tag-union and fold by bucket — on a
     // key each side holds UNIQUELY, groupBy-of-union IS the full outer
@@ -180,32 +177,63 @@ object Importance {
 
   /** The ≤`numBuckets`-row log-ratio table from the two count tables —
     * the union-fold + bounded-global-window-totals shape (see the
-    * lineage comment in [[importanceWeights]]); shared verbatim by the
-    * two-corpus and sliced paths so their expression trees stay
-    * bit-identical.
+    * lineage comment in [[importanceWeights]]). Its totals and `lr`
+    * expression are the ones [[slicedLogRatio]] uses, so the two paths'
+    * weights stay bit-identical.
     */
   private def logRatio(
-      rawCounts: DataFrame, targetCounts: DataFrame, numBuckets: Int): DataFrame = {
-    val wAll = org.apache.spark.sql.expressions.Window
-      .partitionBy().rowsBetween(
-        org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.unboundedFollowing)
-    rawCounts
+      rawCounts: DataFrame, targetCounts: DataFrame, numBuckets: Int): DataFrame =
+    withTotals(rawCounts
       .select(col("bucket"), col("r_cnt"), lit(null).cast("long").as("t_cnt"))
       .unionByName(targetCounts.select(
         col("bucket"), lit(null).cast("long").as("r_cnt"), col("t_cnt")))
       .groupBy("bucket")
-      .agg(sum(col("r_cnt")).as("r_cnt"), sum(col("t_cnt")).as("t_cnt"))
+      .agg(sum(col("r_cnt")).as("r_cnt"), sum(col("t_cnt")).as("t_cnt")))
+      .filter(col("r_cnt").isNotNull)
+      .select(col("bucket"), lr(numBuckets))
+
+  /** The sliced path's log-ratio table, from the tagged substrate: BOTH
+    * distributions from ONE bucket-grain aggregate. Target ⊆ raw means
+    * every target bucket is a raw bucket, so t_cnt is a conditional sum
+    * inside the raw fold — no union-fold needed (the two-frame path
+    * keeps it because a disjoint target can own buckets raw lacks), and,
+    * critically, no `filter(__tgt)` consumer exists for
+    * PushDownPredicate to push below the aggregate into the scan, which
+    * would re-specialize the subtree and silently break AQE exchange
+    * reuse — the round-15 IsNotNull lesson; a filtered-targetCounts form
+    * was plan-checked and showed exactly that second corpus pass.
+    * sum(when) leaves t_cnt NULL where no target doc touches the bucket
+    * — the same absent-side NULL the union-fold produces, consumed by
+    * the same coalesce.
+    */
+  private def slicedLogRatio(feats: DataFrame, numBuckets: Int): DataFrame =
+    withTotals(feats
+      .groupBy("bucket")
+      .agg(
+        sum(col("cnt")).as("r_cnt"),
+        sum(when(col("__tgt"), col("cnt"))).as("t_cnt")))
+      .select(col("bucket"), lr(numBuckets))
+
+  /** Corpus totals r_tot/t_tot as exact long sums over a bounded global
+    * window (≤ 2·numBuckets rows above the aggregates — the PSI/x44
+    * bounded-global-window class, PlanAudit-gated).
+    */
+  private def withTotals(counts: DataFrame): DataFrame = {
+    val wAll = Window.partitionBy()
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    counts
       .withColumn("r_tot", sum(col("r_cnt")).over(wAll))
       .withColumn("t_tot", coalesce(sum(col("t_cnt")).over(wAll), lit(0L)))
-      .filter(col("r_cnt").isNotNull)
-      .select(
-        col("bucket"),
-        (log(coalesce(col("t_cnt"), lit(0L)) + lit(1.0))
-          - log(col("t_tot") + lit(numBuckets.toDouble))
-          - log(col("r_cnt") + lit(1.0))
-          + log(col("r_tot") + lit(numBuckets.toDouble))).as("lr"))
   }
+
+  /** ln((t+1)/(T+m)) − ln((r+1)/(R+m)), expanded to the SAME four-term
+    * form the oracle states so both engines evaluate identical ln calls.
+    */
+  private def lr(numBuckets: Int): Column =
+    (log(coalesce(col("t_cnt"), lit(0L)) + lit(1.0))
+      - log(col("t_tot") + lit(numBuckets.toDouble))
+      - log(col("r_cnt") + lit(1.0))
+      + log(col("r_tot") + lit(numBuckets.toDouble))).as("lr")
 
   /** Per-doc scoring: broadcast the bounded log-ratio table onto the
     * feature substrate, fold to doc grain. Shared by both paths.
@@ -239,52 +267,14 @@ object Importance {
   def importanceWeightsSliced(
       raw: DataFrame, isTarget: Column, numBuckets: Int): DataFrame = {
     val feats = taggedFeatures(raw, isTarget, numBuckets)
-    // BOTH distributions from ONE bucket-grain aggregate: target ⊆ raw
-    // means every target bucket is a raw bucket, so t_cnt is a
-    // conditional sum inside the raw fold — no union-fold needed (the
-    // two-frame path keeps it because a disjoint target can own buckets
-    // raw lacks), and, critically, no `filter(__tgt)` consumer exists
-    // for PushDownPredicate to push below the aggregate into the scan,
-    // which would re-specialize the subtree and silently break AQE
-    // exchange reuse — the round-15 IsNotNull lesson; a filtered-
-    // targetCounts form of this function was plan-checked and showed
-    // exactly that second corpus pass. sum(when) leaves t_cnt NULL
-    // where no target doc touches the bucket — the same absent-side
-    // NULL the union-fold produced, consumed by the same coalesce.
-    // Totals are the same exact long sums over the same bounded
-    // global window (≤ numBuckets rows, the PlanAudit-gated class).
-    val wAll = org.apache.spark.sql.expressions.Window
-      .partitionBy().rowsBetween(
-        org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.unboundedFollowing)
-    val ratio = feats
-      .groupBy("bucket")
-      .agg(
-        sum(col("cnt")).as("r_cnt"),
-        sum(when(col("__tgt"), col("cnt"))).as("t_cnt"))
-      .withColumn("r_tot", sum(col("r_cnt")).over(wAll))
-      .withColumn("t_tot", coalesce(sum(col("t_cnt")).over(wAll), lit(0L)))
-      .select(
-        col("bucket"),
-        (log(coalesce(col("t_cnt"), lit(0L)) + lit(1.0))
-          - log(col("t_tot") + lit(numBuckets.toDouble))
-          - log(col("r_cnt") + lit(1.0))
-          + log(col("r_tot") + lit(numBuckets.toDouble))).as("lr"))
-    scoreDocs(feats.select("doc_id", "bucket", "cnt"), ratio)
+    scoreDocs(feats.select("doc_id", "bucket", "cnt"), slicedLogRatio(feats, numBuckets))
   }
 
   /** [[selectTopK]] over the sliced path — one corpus feature pass. */
   def selectTopKSliced(
       raw: DataFrame, isTarget: Column, numBuckets: Int, k: Int): DataFrame = {
     require(k > 0, s"k must be positive: $k")
-    val w = importanceWeightsSliced(raw, isTarget, numBuckets)
-      .withColumn(
-        "rank",
-        row_number().over(Window.orderBy(col("logw").desc, col("doc_id"))).cast("long"))
-      .filter(col("rank") <= k)
-    raw
-      .join(broadcast(w), Seq("doc_id"))
-      .select(col("rank"), col("doc_id"), col("source"), col("lang"), col("n_feats"), col("logw"))
+    topK(raw, importanceWeightsSliced(raw, isTarget, numBuckets), k)
   }
 
   /** The selection step: the `k` most target-like raw documents by
@@ -294,7 +284,11 @@ object Importance {
     */
   def selectTopK(raw: DataFrame, target: DataFrame, numBuckets: Int, k: Int): DataFrame = {
     require(k > 0, s"k must be positive: $k")
-    val w = importanceWeights(raw, target, numBuckets)
+    topK(raw, importanceWeights(raw, target, numBuckets), k)
+  }
+
+  private def topK(raw: DataFrame, weights: DataFrame, k: Int): DataFrame = {
+    val w = weights
       .withColumn(
         "rank",
         row_number().over(Window.orderBy(col("logw").desc, col("doc_id"))).cast("long"))
@@ -307,88 +301,47 @@ object Importance {
   /** Per-stage wall/row attribution for the DSIR pair — the x106/x53
     * stage-harness treatment applied to x133/x134 (round-13 ask #6: the
     * pair entered the bench top-5 with its cost attributed to the shared
-    * tokenize substrate by ARGUMENT, not measurement). Materializes the
-    * pipeline's frames in lineage order behind localCheckpoint
-    * boundaries, so each wall is the INCREMENTAL cost of that stage over
-    * its predecessors' materialized state:
-    *
-    *   - `features`: the TAGGED per-(doc, bucket) substrate over the raw
-    *     corpus (the round-16 sliced shape x133/x134 ship) — in the
-    *     shipped query this is the one exchange REUSED between fit and
-    *     score, so its wall is the tokenize+explode+fold cost every text
-    *     query shares;
-    *   - `fit`: the one conditional bucket-grain aggregate producing BOTH
-    *     distributions plus the ≤`numBuckets`-row log-ratio table (the
-    *     round-15 harness paid the target slice's own feature scan here;
-    *     the sliced shape has none);
-    *   - `score`: the broadcast scoring join + doc-grain fold;
-    *   - `select`: the WindowGroupLimit top-k + broadcast corpus rejoin.
-    *
-    * A timing/CI tool, not the serving path (the checkpoint boundaries
-    * exist to make walls attributable; the shipped query keeps its lazy
-    * one-DAG shape). Caller owns cache cleanup between reps — Bench's
-    * dropCached does it.
+    * tokenize substrate by ARGUMENT, not measurement). Runs
+    * [[dsirStaged]] and times each stage, so each wall is the
+    * INCREMENTAL cost of that stage over its predecessors' materialized
+    * state. Caller owns cache cleanup between reps — Bench's dropCached
+    * does it.
     */
   def dsirStageTimings(
       raw: DataFrame, isTarget: Column, numBuckets: Int, k: Int): Seq[(String, Double, Long)] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[(String, Double, Long)]
-    def timed[T](name: String)(body: => (Long, T)): T = {
+    dsirStaged(raw, isTarget, numBuckets, k) { (name, build) =>
       val t0 = System.nanoTime()
-      val (rows, v) = body
-      out += ((name, (System.nanoTime() - t0) / 1e9, rows))
-      v
-    }
-    val feats = timed("features") {
-      val f = Barrier(taggedFeatures(raw, isTarget, numBuckets), "dsir.features")
-      (f.count(), f)
-    }
-    val ratio = timed("fit") {
-      // the shipped sliced shape (see importanceWeightsSliced): one
-      // conditional aggregate + bounded-global-window totals, over the
-      // checkpointed tagged substrate
-      val wAll = org.apache.spark.sql.expressions.Window
-        .partitionBy().rowsBetween(
-          org.apache.spark.sql.expressions.Window.unboundedPreceding,
-          org.apache.spark.sql.expressions.Window.unboundedFollowing)
-      val r = feats
-        .groupBy("bucket")
-        .agg(
-          sum(col("cnt")).as("r_cnt"),
-          sum(when(col("__tgt"), col("cnt"))).as("t_cnt"))
-        .withColumn("r_tot", sum(col("r_cnt")).over(wAll))
-        .withColumn("t_tot", coalesce(sum(col("t_cnt")).over(wAll), lit(0L)))
-        .select(
-          col("bucket"),
-          (log(coalesce(col("t_cnt"), lit(0L)) + lit(1.0))
-            - log(col("t_tot") + lit(numBuckets.toDouble))
-            - log(col("r_cnt") + lit(1.0))
-            + log(col("r_tot") + lit(numBuckets.toDouble))).as("lr"))
-        .transform(Barrier(_, "dsir.fit"))
-      (r.count(), r)
-    }
-    val scored = timed("score") {
-      val sc = feats
-        .join(broadcast(ratio), Seq("bucket"))
-        .groupBy("doc_id")
-        .agg(
-          sum(col("cnt")).as("n_feats"),
-          (CrossRound.ra(sum(col("cnt") * col("lr")), 4) + lit(0.0)).as("logw"))
-        .transform(Barrier(_, "dsir.score"))
-      (sc.count(), sc)
-    }
-    timed("select") {
-      val w = scored
-        .withColumn(
-          "rank",
-          row_number().over(Window.orderBy(col("logw").desc, col("doc_id"))).cast("long"))
-        .filter(col("rank") <= k)
-      val sel = raw
-        .join(broadcast(w), Seq("doc_id"))
-        .select(
-          col("rank"), col("doc_id"), col("source"), col("lang"),
-          col("n_feats"), col("logw"))
-      (sel.count(), ())
+      val df = build()
+      out += ((name, (System.nanoTime() - t0) / 1e9, df.count()))
+      df
     }
     out.toSeq
+  }
+
+  /** [[selectTopKSliced]] built from the same pieces with a `dsir.*`
+    * [[Barrier]] after each stage but the last; `stage(name, build)` runs
+    * every stage in lineage order and returns its frame:
+    *
+    *   - `features`: the TAGGED per-(doc, bucket) substrate over the raw
+    *     corpus — in the shipped query this is the one exchange REUSED
+    *     between fit and score, so its wall is the tokenize+explode+fold
+    *     cost every text query shares;
+    *   - `fit`: the one conditional bucket-grain aggregate producing BOTH
+    *     distributions plus the ≤`numBuckets`-row log-ratio table;
+    *   - `score`: the broadcast scoring join + doc-grain fold;
+    *   - `select`: the WindowGroupLimit top-k + broadcast corpus rejoin.
+    *
+    * A timing/CI tool, not the serving path (the barriers exist to make
+    * walls attributable; the shipped query keeps its lazy one-DAG shape).
+    */
+  private[graft] def dsirStaged(raw: DataFrame, isTarget: Column, numBuckets: Int, k: Int)(
+      stage: (String, () => DataFrame) => DataFrame): DataFrame = {
+    val feats = stage("features",
+      () => Barrier(taggedFeatures(raw, isTarget, numBuckets), "dsir.features"))
+    val ratio = stage("fit", () => Barrier(slicedLogRatio(feats, numBuckets), "dsir.fit"))
+    val scored = stage("score", () =>
+      Barrier(scoreDocs(feats.select("doc_id", "bucket", "cnt"), ratio), "dsir.score"))
+    stage("select", () => topK(raw, scored, k))
   }
 }

@@ -1587,13 +1587,14 @@ object Similarity {
     // id) rows, and each embedding is re-attached once afterwards (two
     // equi-joins on vec_id, each shuffling the vector table once instead
     // of per-collision)
-    // persist: both sides of the self-join read this frame, and lazily
+    // barrier: both sides of the self-join read this frame, and lazily
     // each side would recompute the T x bits signature dots over the
-    // whole corpus — the cache halves the signature work and the id-only
-    // rows are small (3 longs/row x T). Same cache-lifetime note as the
-    // PQ paths (ivfPqTopK).
-    val bucketedIds = bucketize(emb, planes)
-      .select("table_id", "bucket", "vec_id").persist()
+    // whole corpus. An eager barrier computes them once; a lazy persist()
+    // did not, because AQE submits both sides' map stages at once and
+    // both computed the uncached partition. The id-only rows are small
+    // (3 longs/row x T).
+    val bucketedIds = Barrier(
+      bucketize(emb, planes).select("table_id", "bucket", "vec_id"), "lsh.buckets")
     val pairs = bucketedIds.toDF("table_id", "bucket", "vec_a")
       .join(bucketedIds.toDF("table_id", "bucket", "vec_b"), Seq("table_id", "bucket"))
       .filter(col("vec_a") < col("vec_b"))

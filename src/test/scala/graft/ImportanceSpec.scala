@@ -179,6 +179,24 @@ class ImportanceSpec extends AnyFunSuite {
     assert(slicedN === twoN)
   }
 
+  test("the staged harness selects exactly selectTopKSliced's rows, one barrier per stage") {
+    val docs = docsDf
+    val names = scala.collection.mutable.ArrayBuffer.empty[String]
+    val (staged, barriers) = SparkJobs.barriers(spark)(
+      Importance.dsirStaged(docs, col("lang") === "en", Buckets, 3) { (name, build) =>
+        names += name
+        build()
+      }.orderBy("rank").collect().map(_.toSeq).toSeq)
+    val shipped = Importance.selectTopKSliced(docs, col("lang") === "en", Buckets, 3)
+      .orderBy("rank").collect().map(_.toSeq).toSeq
+    assert(staged.size === 3)
+    assert(staged === shipped)
+    assert(names.toSeq === Seq("features", "fit", "score", "select"))
+    assert(barriers.keySet === Set("dsir.features", "dsir.fit", "dsir.score"))
+    val timings = Importance.dsirStageTimings(docs, col("lang") === "en", Buckets, 3)
+    assert(timings.map(t => (t._1, t._3)).last === (("select", 3L)))
+  }
+
   test("weights are parallelism-invariant (the ra pre-round collapses sum-order drift)") {
     val docs = docsDf
     def run(parts: Int) = Importance.importanceWeights(

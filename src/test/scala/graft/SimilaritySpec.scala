@@ -216,6 +216,13 @@ class SimilaritySpec extends AnyFunSuite {
     pairs.unpersist()
   }
 
+  test("LSH near-dup pairs compute the bucket signatures once, in one named barrier") {
+    val (n, barriers) = SparkJobs.barriers(spark)(
+      Similarity.lshNearDupPairs(corpus(), 0.9, tables = 4, bits = 8, dim = Dim).count())
+    assert(n >= 18L)
+    assert(barriers === Map("lsh.buckets" -> 1))
+  }
+
   test("native dot product matches the higher-order-function formulation bitwise") {
     val emb = corpus().limit(20)
     val pairs = emb.toDF("ia", "ea").crossJoin(emb.toDF("ib", "eb"))
