@@ -250,20 +250,25 @@ object Bench {
         }
       case kv => kv
     }
-    // ---- x53/x57 per-stage decomposition (round-12 verdict ask #5: the
-    // curation rows are the bench ceiling and their 1.6x run-to-run
-    // spread on UNCHANGED code was unattributed). Two quiesced reps per
-    // variant of the serving pipeline's own persist-boundary frames
-    // (Curation.pipelineStageTimings — incremental walls over the real
-    // caches, not a lineage-cut replica), shipped in the detail sidecar
-    // so a spread claim can point at the stage that moved.
-    def stageReps(q: String, run: () => Seq[(String, Double, Long)]): Option[String] =
-      if (!fnOf.contains(q)) None
+    // ---- x133/x134 per-stage decomposition (round-13 verdict ask #6:
+    // the DSIR pair sits in the bench top-5 and its cost was attributed
+    // to the shared tokenize substrate by argument, not measurement).
+    // Two quiesced reps of features / fit / score / select walls
+    // (Importance.dsirStageTimings — incremental over checkpointed
+    // frames, mirroring the shipped plan's reused feature exchange),
+    // shipped in the detail sidecar so future movement on either query
+    // points at the stage that moved.
+    val dsirStages =
+      if (!fnOf.contains("x134_dsir_select")) None
       else try {
         val reps = (1 to 2).map { _ =>
           System.gc(); Thread.sleep(200)
           dropCached()
-          val stages = run()
+          val docs = graft.sources.Tables.documents(spark, sfDir)
+          val stages = graft.operators.Importance.dsirStageTimings(
+            docs,
+            org.apache.spark.sql.functions.col("lang") === "en",
+            numBuckets = 256, k = 100)
           dropCached()
           stages.map { case (stage, sec, rows) =>
             s""""$stage": {"sec": ${"%.3f".formatLocal(java.util.Locale.ROOT, sec)}, "rows": $rows}"""
@@ -272,34 +277,9 @@ object Bench {
         Some(reps.mkString("[", ", ", "]"))
       } catch {
         case e: Exception =>
-          System.err.println(s"[bench] $q stage timing failed: ${e.getMessage}")
+          System.err.println(s"[bench] x134_dsir_select stage timing failed: ${e.getMessage}")
           None
       }
-    val x53Stages = stageReps("x53_curation_pipeline", () => {
-      val docs = graft.sources.Tables.documents(spark, sfDir)
-      graft.operators.Curation.pipelineStageTimings(
-        docs, banned = docs.filter(org.apache.spark.sql.functions.col("doc_id") < 50))
-    })
-    val x57Stages = stageReps("x57_curation_classified", () => {
-      val docs = graft.sources.Tables.documents(spark, sfDir)
-      graft.operators.Curation.pipelineStageTimings(
-        docs, banned = docs.filter(org.apache.spark.sql.functions.col("doc_id") < 50),
-        classifier = Some((ExtensionQueries.qualityModelFor(spark, sfDir), 0.5)))
-    })
-    // ---- x133/x134 per-stage decomposition (round-13 verdict ask #6:
-    // the DSIR pair sits in the bench top-5 and its cost was attributed
-    // to the shared tokenize substrate by argument, not measurement).
-    // Two quiesced reps of features / fit / score / select walls
-    // (Importance.dsirStageTimings — incremental over checkpointed
-    // frames, mirroring the shipped plan's reused feature exchange), so
-    // future movement on either query points at the stage that moved.
-    val dsirStages = stageReps("x134_dsir_select", () => {
-      val docs = graft.sources.Tables.documents(spark, sfDir)
-      graft.operators.Importance.dsirStageTimings(
-        docs,
-        org.apache.spark.sql.functions.col("lang") === "en",
-        numBuckets = 256, k = 100)
-    })
     // The driver keeps only the LAST ~2000 chars of stdout and parses the
     // JSON line out of that tail. Full-precision doubles for 60+ queries
     // push the line past the buffer and the parse silently fails (rounds
@@ -408,8 +388,6 @@ object Bench {
       .mkString(
         s"""{\n  "sf": "$sfDir",\n  "total_warm": ${ms(total)},\n  "total_cold": ${ms(coldTotal)},\n  "n": ${results.length},\n  "failed": $errs,\n""" +
           s"""  "cpu": {"our_cores": ${ms(ourCores)}, "sysload": ${ms(loadAvg)}, "external": ${ms(external)}, "steal_cores": ${ms(stealCores)}, "contended": $contended, "median_cores": ${ms(medianCores)}, "tail_n": ${tailSet.size}, "tail_shaved_sec": ${ms(tailShaved)}, "suspect_queries": ${suspects.map("\"" + _ + "\"").mkString("[", ",", "]")}, "cold_unadjudicated": $coldUnadjudicated, "cold_suspect_queries": ${coldSuspects.map("\"" + _ + "\"").mkString("[", ",", "]")}},\n""" +
-          x53Stages.map(s => s"""  "x53_stages": $s,\n""").getOrElse("") +
-          x57Stages.map(s => s"""  "x57_stages": $s,\n""").getOrElse("") +
           dsirStages.map(s => s"""  "dsir_stages": $s,\n""").getOrElse("") +
           s"""  "queries": {\n""",
         ",\n",

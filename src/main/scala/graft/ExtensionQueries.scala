@@ -367,10 +367,10 @@ object ExtensionQueries {
       s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     val vt = Fixture.once("x61", dir) {
       val t = graft.sources.VersionedTable(Fixture.scratch("x61") + "/corpus")
-      t.commit(Similarity.assignCells(
-        Tables.embeddings(s, dir).select("vec_id", "embedding")
-          .filter(!x61IsBatch(col("vec_id"))),
-        kmeansFor(s, dir)))
+      val corpus = Tables.embeddings(s, dir).select("vec_id", "embedding")
+        .filter(!x61IsBatch(col("vec_id")))
+      val cents = kmeansFor(s, dir)
+      Barrier.named(corpus, "semdedup.corpus")(t.commit(Similarity.assignCells(corpus, cents)))
       t
     }
     vt.read(s)
@@ -1320,8 +1320,9 @@ object ExtensionQueries {
     // retention -> benchmark decontamination -> temperature resample ->
     // sequence packing. Every stage is individually oracle-pinned
     // (x33/x03/x25/x01/x24/x22/x36/x40); this entry pins the COMPOSITION
-    // against one chained-CTE DuckDB query — shared lineage, one audited
-    // plan, no hidden barriers.
+    // against one chained-CTE DuckDB query — shared lineage, its three
+    // boundaries named barriers (curation.cap, curation.exact_dedup,
+    // curation.clean_ids) that PlanAudit gates under those names.
     "x53_curation_pipeline" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       Curation.pipeline(docs, banned = docs.filter(col("doc_id") < 50))

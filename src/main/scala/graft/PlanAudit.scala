@@ -1,13 +1,20 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{ElementAt, HigherOrderFunction}
-import org.apache.spark.sql.execution.{CollectLimitExec, FileSourceScanExec, FilterExec, GlobalLimitExec, SparkPlan, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.{CollectLimitExec, FileSourceScanExec, FilterExec, GlobalLimitExec, QueryExecution, SQLExecution, SparkPlan, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec, SortMergeJoinExec}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
+import org.apache.spark.sql.graftshim.ExecutionEnd
 
 /** Physical-plan audit over the whole query surface. Counts parquet scans,
   * join strategies, cartesian products, Filters whose condition embeds a
@@ -45,9 +52,11 @@ import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
   * pageRank's checkpointed iterations, connectedComponents' label loop,
   * BPE's merge loop, VersionedTable commits, model fits — never surface
   * that work in the returned frame's plan, which sees only the
-  * post-materialization RDD scan. A QueryExecutionListener registered
-  * for the audit run now captures EVERY Dataset action's QueryExecution
-  * (every [[Barrier]] — an eager checkpoint — collects, writes). A
+  * post-materialization RDD scan. A SparkListener registered around each
+  * query captures EVERY Dataset action's QueryExecution from its
+  * `SparkListenerSQLExecutionEnd` (every [[Barrier]] — an eager
+  * checkpoint — collects, writes) and the [[Barrier]] name its jobs
+  * carried (`spark.sql.execution.id` pairs a job with its execution). A
   * checkpoint builds its RDD via toRdd, and AdaptiveSparkPlanExec
   * finalizes every query stage inside doExecute, so the captured
   * QueryExecution is already isFinalPlan=true at listener time
@@ -55,10 +64,18 @@ import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
   * divergence). The audit of each captured execution is additionally
   * DEFERRED to after the owning query's main plan has executed —
   * belt-and-braces so any event that ever IS captured pre-finalization
-  * still gets walked in its final adaptive form. All gates run per captured execution with their own
-  * allowance maps, and PLANS.md carries an inner-executions sub-table.
-  * The listener bus is drained after each query (GraftBusBridge) so
-  * attribution cannot bleed across queries.
+  * still gets walked in its final adaptive form. PLANS.md carries an
+  * inner-executions sub-table, one row per (query, barrier, action).
+  *
+  * ONE set of tables, keyed by name: [[AllowedSmj]], [[AllowedBnlj]] and
+  * [[RequiredWindowGroupLimit]] hold a query name for a query's final
+  * plan and a barrier name for an inner execution, and [[gate]] applies
+  * the same rules to both. An inner execution is gated under the barrier
+  * its jobs ran for, so a barrier's allowance holds wherever it runs —
+  * the curation chain's `curation.*` barriers, say, in x53 and x57 alike;
+  * one whose jobs carried no barrier name gets allowance 0. The listener
+  * bus is drained after each query (GraftBusBridge) so attribution
+  * cannot bleed across queries.
   *
   * Usage: sbt "runMain graft.PlanAudit [sfDir]"
   */
@@ -170,7 +187,10 @@ object PlanAudit {
     * a corpus-scale table with ITSELF. No side is bounded at 100 TB, so a
     * shuffle join is the correct plan and forcing broadcast at fixture
     * scale would audit-pass a plan that cannot run at target scale. Any
-    * count above the allowance still fails the gate.
+    * count above the allowance still fails the gate. Keyed by query name
+    * (a final plan) or barrier name (an inner execution; the ceiling
+    * applies PER captured execution, so one iteration cannot hide a
+    * regression inside another's allowance).
     */
   private val AllowedSmj: Map[String, Int] = Map(
     "x24_jaccard_neardups" -> 2,
@@ -221,7 +241,20 @@ object PlanAudit {
     // the x29 batch-vs-corpus shape over the %10 benchmark split (the
     // corpus side is never bounded; the benchmark postings may
     // broadcast at fixture scale — ceiling)
-    "x127_fuzzy_decontam" -> 2)
+    "x127_fuzzy_decontam" -> 2,
+    // ---- barriers
+    // the streamed corpus cycle's survivors (s03s): the x29
+    // batch-vs-corpus inverted-index shape and the batch's anti-join
+    // against its duplicates — corpus-scale sides, the class the table
+    // allows x29 and s03 (AQE may demote to broadcast at fixture scale;
+    // a ceiling)
+    "ingest.survivors" -> 2,
+    // the curation chain's decontamination ids: the near-dup retention's
+    // anti-join (corpus frame × its per-doc loser set) and the
+    // decontam shingle join are each corpus-scale on both sides at
+    // 100 TB — one shuffle join apiece (AQE may broadcast at fixture
+    // scale; a ceiling)
+    "curation.clean_ids" -> 2)
 
   /** BroadcastNestedLoopJoins that are INTENTIONAL, pinned at their
     * audited counts. Two legitimate classes only:
@@ -234,7 +267,7 @@ object PlanAudit {
     * Anywhere else — or any count ABOVE the pin — a BNLJ means a join
     * condition accidentally became non-equi: Spark demotes a broadcastable
     * non-equi join to BNLJ, not CartesianProduct, so the cartesian gate
-    * alone cannot see this class.
+    * alone cannot see this class. Keyed like [[AllowedSmj]].
     */
   private val AllowedBnlj: Map[String, Int] = Map(
     "f02_forecast_serving" -> 3, "o15_null_validation" -> 1,
@@ -310,12 +343,32 @@ object PlanAudit {
     "x134_dsir_select" -> 2,
     // class (a) again: the resample stage's mixWeights normalizer — the
     // only BNLJ the composed curation chain's FINAL plan may contain
-    // (upstream stages sit behind persist boundaries and are audited via
-    // their standalone queries x33/x03/x25/x01/x24/x22)
+    // (upstream stages sit behind the curation.* barriers, gated under
+    // their own names)
     "x53_curation_pipeline" -> 1,
     // identical composed chain with the classifier gate (one extra
     // map-only projection — no new join shapes)
-    "x57_curation_classified" -> 1)
+    "x57_curation_classified" -> 1,
+    // ---- barriers
+    // class (b): ivfAssign's corpus × broadcast(centroids) exhaustive
+    // argmax (the shape the table allows x14/x30/x41) behind semdedup's
+    // assignment barriers (x34, x61's batch) and x61's committed corpus
+    "semdedup.assigned" -> 1,
+    "semdedup.batch" -> 1,
+    "semdedup.corpus" -> 1,
+    // class (a): unigramLogProb's one-row (N, V) stats crossJoin
+    "ppl.scored" -> 1,
+    // class (b): the dense percentages frame's bounded |move types|
+    // cross, materialized once per serving assembly query
+    // (o12/o24/o36/o42/o43/f02)
+    "pct.dense" -> 1,
+    // x125c's two bounded class-(b) crosses: the probe→cell routing
+    // collect (|probes| × |cells| centroid argmax, the x14 shape) and the
+    // index-build commit (the ivfAssign argmax); the SERVED plan itself
+    // has no cross — the cell equi-join replacing x125b's exhaustive BNLJ
+    // is the operator's point
+    "ivfbin.route" -> 1,
+    "ivfbin.index" -> 1)
 
   /** Queries whose top-k is REQUIRED to compile to WindowGroupLimitExec:
     * every ANN query (and the rank-capped text queries) bounds its
@@ -325,7 +378,8 @@ object PlanAudit {
     * else pins that plan: a refactor that breaks the filter-over-window
     * pattern (renaming the rank column, filtering after a projection the
     * optimizer can't see through) silently reverts to
-    * sort-every-candidate-per-probe. Pinned from the executed plans.
+    * sort-every-candidate-per-probe. Pinned from the executed plans;
+    * keyed like [[AllowedSmj]].
     */
   private val RequiredWindowGroupLimit: Set[String] = Set(
     "x09_topk_cosine", "x10_ann_lsh", "x14_ivf_topk", "x21_tfidf_topterms",
@@ -340,7 +394,9 @@ object PlanAudit {
     // filter-over-row_number — losing the rewrite re-sorts every
     // corpus row per probe; same for the committed-index layouts
     // (exhaustive and IVF-routed)
-    "x125_binary_ann", "x125b_binary_ann_indexed", "x125c_binary_ann_ivf")
+    "x125_binary_ann", "x125b_binary_ann_indexed", "x125c_binary_ann_ivf",
+    // the curation chain's per-source cap (TextOps.capPerSource)
+    "curation.cap")
   // NOT pinned: x101's vocabulary rank cap. Its window is GLOBAL (no
   // partition key), and for that shape the optimizer fires a strictly
   // better rewrite than WindowGroupLimit: LimitPushDown turns the
@@ -351,9 +407,7 @@ object PlanAudit {
   // TakeOrderedAndProject/aggregate boundary, so losing the rewrite
   // (full-vocab single-partition window) goes red here.
 
-  /** The gate itself, factored so the per-stage audit (and its spec) can
-    * run the same rules with stage-level allowances.
-    */
+  /** The gate's rules under explicit allowances. */
   def violations(
       name: String,
       c: Counts,
@@ -385,195 +439,91 @@ object PlanAudit {
     bad
   }
 
-  /** Per-stage allowances for the composed curation pipeline's
-    * lineage-cut stage audit (Curation.auditStages). near-dup SMJ:
-    * corpus-frame joined with its own per-doc aggregates — both sides
-    * corpus-scale at 100 TB, same class as the x24 allowance (AQE may
-    * still demote to broadcast at fixture scale; the pin is a ceiling).
-    * gates carries NO allowance anymore: the repetition signals moved
-    * into the cap projection (per-row modal-bigram fold), so the stage
-    * is a plain-attribute filter — a join reappearing there is a
-    * regression. resample BNLJ 1: the 1-row mixWeights normalizer
-    * crossJoin.
+  /** The gate under `name`'s allowances: a query name for a query's
+    * final plan, a barrier name for an inner execution. A name no table
+    * holds gets allowance 0.
     */
-  private[graft] val StageAllowedSmj: Map[String, Int] =
-    Map("near_dup_pairs" -> 2, "near_dup_retention" -> 1, "decontam" -> 1)
-  private[graft] val StageAllowedBnlj: Map[String, Int] = Map("resample" -> 1)
-  /** Stages whose per-group top-k must keep its WindowGroupLimit. */
-  private[graft] val StageRequiredWgl: Set[String] = Set("cap")
+  def gate(name: String, c: Counts): List[String] =
+    violations(
+      name, c, AllowedSmj.getOrElse(name, 0), AllowedBnlj.getOrElse(name, 0),
+      RequiredWindowGroupLimit.contains(name))
 
-  /** Allowances for INNER executions — the barrier plans the
-    * listener captures during query construction. Keyed by query name;
-    * the ceiling applies PER captured execution (each barrier generation
-    * / commit / collect is gated separately, so one iteration cannot
-    * hide a regression inside another's allowance). Values pinned from
-    * the executed shapes, with the scale rationale per entry. Barrier
-    * captures carry FINAL adaptive plans (finalization happens inside
-    * toRdd — probed round 12; the audit additionally defers its walk to
-    * post-query as belt-and-braces), so the ceilings describe
-    * the runtime join choice: AQE demotions at fixture scale can only
-    * bring counts UNDER a ceiling, never add a shape the gate misses.
+  /** One captured inner execution: the [[Barrier]] name its jobs carried
+    * (None when none did), its action (`localCheckpoint`, `collect`,
+    * `command`, …) and its audited plan.
     */
-  private[graft] val InnerAllowedSmj: Map[String, Int] = Map(
-    // the streamed corpus cycle's foreachBatch runs the x29
-    // batch-vs-corpus inverted-index shape behind its in-batch
-    // barriers — corpus-scale sides, the same class the
-    // main table allows s03 (AQE may demote to broadcast at fixture
-    // scale; the pin is a ceiling per captured execution)
-    "s03s_stream_corpus_cycle_streamed" -> 2)
-  private[graft] val InnerAllowedBnlj: Map[String, Int] = Map(
-    // semdedup's materialized cell assignment: ivfAssign's
-    // corpus × broadcast(centroids) exhaustive argmax (class (b), the
-    // same shape the main table allows for x14/x30/x41) executes behind
-    // the assignment barrier — x61 additionally commits it (command)
-    "x34_semantic_dedup" -> 1,
-    "x61_incremental_semdedup" -> 1,
-    // the ppl-bucket scorer materializes unigramLogProb, whose one-row
-    // (N, V) stats crossJoin (class (a)) sits inside the barrier
-    "x44_ppl_buckets" -> 1,
-    // the stage-rebuild pass materializes every curation stage
-    // lineage-cut; the resample stage's one-row mixWeights normalizer
-    // (class (a)) rides its barrier
-    "x53/stages" -> 1,
-    // round 16: the serving assembly queries materialize the dense
-    // percentages frame once per query (percentagesCheckpointed), so the
-    // |move types|-row dense cross (class (b) — the same bounded BNLJ
-    // the main table allowed for these queries before the barrier moved
-    // it inside) now executes behind that localCheckpoint
-    "o12_forecast_no_move_type" -> 1,
-    "o24_fallback_chain" -> 1,
-    "o36_forecast_summary" -> 1,
-    "o42_forecast_daily" -> 1,
-    "o43_comments" -> 1,
-    "f02_forecast_serving" -> 1,
-    // x125c's two bounded class-(b) crosses both execute as INNER
-    // plans: the probe→cell routing collect (|probes| × |cells|
-    // centroid argmax, the x14 shape) and the index-build commit
-    // (ivfAssign's corpus × broadcast(centroids) argmax, the x61
-    // command shape); the SERVED plan itself has no cross — the cell
-    // equi-join replacing x125b's exhaustive BNLJ is the operator's
-    // point
-    "x125c_binary_ann_ivf" -> 1)
+  final case class Inner(barrier: Option[String], action: String, counts: Counts) {
+    /** The name it is gated under; an unnamed one matches no table. */
+    def name: String = barrier.getOrElse(s"(unnamed $action)")
+  }
+
+  /** `body`'s result and every Dataset action that finished while it ran,
+    * each audited after `body` returns — so in its final adaptive form
+    * even when `body` executes the owning query's plan last.
+    */
+  def innerExecutions[T](spark: SparkSession)(body: => T): (T, Seq[Inner]) = {
+    val sc = spark.sparkContext
+    val barrierOf = new ConcurrentHashMap[Long, String]()
+    val ended = new ConcurrentLinkedQueue[(Long, String, QueryExecution)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        for (p <- Option(e.properties); name <- Option(p.getProperty(Barrier.Property));
+             id <- Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+          barrierOf.putIfAbsent(id.toLong, name)
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case end: SparkListenerSQLExecutionEnd =>
+          ExecutionEnd.succeeded(end).foreach { case (action, qe) =>
+            ended.add((end.executionId, action, qe))
+          }
+        case _ =>
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.GraftBusBridge.drain(sc)
+      (out, ended.asScala.toSeq.map { case (id, action, qe) =>
+        Inner(Option(barrierOf.get(id)), action, audit(qe.executedPlan))
+      })
+    } finally sc.removeSparkListener(listener)
+  }
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val spark = GraftSession.getOrCreate(s"local[8]")
     var bad = List.empty[String]
-
-    // ---- inner-execution capture (see class scaladoc): every Dataset
-    // action fired during query construction lands here, attributed to
-    // the query under audit; the bus drain after each query makes the
-    // attribution exact.
-    //
-    // DEFERRED audit (round-11 verdict ask #2): the listener captures the
-    // QueryExecution itself and the walk runs after the owning query's
-    // main plan has executed. A checkpoint finalizes its AQE stages
-    // inside toRdd, so events arrive isFinalPlan=true (see the class doc
-    // + PlanAuditSpec pin) — but deferring costs nothing and guards any
-    // capture that ever does arrive pre-finalization
-    // (AdaptiveSparkPlanExec.executedPlan reflects finalized stages on
-    // re-read).
-    val pending =
-      new java.util.concurrent.ConcurrentLinkedQueue[(String, String, org.apache.spark.sql.execution.QueryExecution)]()
-    val inner = scala.collection.mutable.ListBuffer.empty[(String, String, Counts)]
-    @volatile var current = "(setup)"
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(
-          funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit =
-        pending.add((current, funcName, qe))
-      override def onFailure(
-          funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    def drain(): Unit = {
-      try org.apache.spark.GraftBusBridge.drain(spark.sparkContext)
-      catch { case e: Exception => System.err.println(s"[plan-audit] bus drain: $e") }
-      // audit the captured executions NOW (post-materialization, final
-      // adaptive plans) and release the QE references — holding 160
-      // queries' worth of QueryExecutions would pin their plans in memory
-      var next = pending.poll()
-      while (next != null) {
-        val (q, act, qe) = next
-        try inner += ((q, act, audit(qe.executedPlan)))
-        catch {
-          case e: Throwable =>
-            System.err.println(s"[plan-audit] inner-audit error on $q/$act: $e")
-        }
-        next = pending.poll()
-      }
-    }
+    val inner = scala.collection.mutable.ListBuffer.empty[(String, Inner)]
 
     println("| query | parquet scans | broadcast joins | sort-merge joins | cartesian | HOF-in-filter | BNLJ | window group limits | unbounded global windows |")
     println("|---|---|---|---|---|---|---|---|---|")
-    def auditRow(name: String, df: DataFrame, smj: Int, bnlj: Int, wgl: Boolean): Unit = {
-      val c = auditExecuted(df)
-      println(s"| $name | ${c.scans} | ${c.bcastJoins} | ${c.smj} | ${c.cartesian} | ${c.hofFilters} | ${c.bnlj} | ${c.windowGroupLimits} | ${c.unboundedGlobalWindows} |")
-      bad :::= violations(name, c, smj, bnlj, wgl)
-    }
+    def row(c: Counts): String =
+      s"${c.scans} | ${c.bcastJoins} | ${c.smj} | ${c.cartesian} | ${c.hofFilters} | " +
+        s"${c.bnlj} | ${c.windowGroupLimits} | ${c.unboundedGlobalWindows} |"
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      current = name
-      auditRow(
-        name, fn(spark, dir),
-        AllowedSmj.getOrElse(name, 0), AllowedBnlj.getOrElse(name, 0),
-        RequiredWindowGroupLimit.contains(name))
-      drain()
-    }
-    // Per-stage audit of the composed curation pipeline: each stage
-    // rebuilt lineage-cut (Curation.auditStages) so the stage's own
-    // operators are visible — the composed x53/x57 rows above audit only
-    // the final plan behind the persist boundaries. Drop every cache the
-    // query loop left first: x53/x57's persisted frames share analyzed
-    // plans with the stage frames, and the cacheManager would otherwise
-    // substitute InMemoryTableScans for the very operators this audit
-    // exists to see (stage 1 audited as a bare cache read, hiding its
-    // window — caught when the WGL pin fired on a cached plan).
-    current = "x53/stages"
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    spark.sharedState.cacheManager.clearCache()
-    val docs = graft.sources.Tables.documents(spark, dir)
-    graft.operators.Curation
-      .auditStages(docs, banned = docs.filter(org.apache.spark.sql.functions.col("doc_id") < 50))
-      .foreach { case (stage, df) =>
-        current = s"x53/$stage"
-        auditRow(
-          s"x53/$stage", df,
-          StageAllowedSmj.getOrElse(stage, 0), StageAllowedBnlj.getOrElse(stage, 0),
-          StageRequiredWgl.contains(stage))
-        drain()
+      val (c, execs) = innerExecutions(spark)(auditExecuted(fn(spark, dir)))
+      println(s"| $name | ${row(c)}")
+      bad :::= gate(name, c)
+      execs.foreach { i =>
+        inner += name -> i
+        bad :::= gate(i.name, i.counts).map(v => s"$name: $v")
       }
-    drain()
+    }
 
-    // ---- inner-executions sub-table + gates. One row per (query,
-    // action-kind) with execution count and PER-EXECUTION MAX of each
-    // counter — the loop shapes the main table structurally cannot see.
-    val byQuery = inner.toList.groupBy(t => (t._1, t._2)).toSeq.sortBy(q => (q._1._1, q._1._2))
+    // ---- inner-executions sub-table: one row per (query, barrier,
+    // action) with execution count and PER-EXECUTION MAX of each counter
+    // — the loop shapes the main table structurally cannot see.
     println()
-    println("| inner executions (query / action) | execs | max scans | max bcast | max smj | max cartesian | max HOF | max BNLJ | max unbounded global windows |")
-    println("|---|---|---|---|---|---|---|---|---|")
-    byQuery.foreach { case ((q, act), execs) =>
-      val cs = execs.map(_._3)
-      println(s"| $q / $act | ${cs.size} | ${cs.map(_.scans).max} | ${cs.map(_.bcastJoins).max} | " +
-        s"${cs.map(_.smj).max} | ${cs.map(_.cartesian).max} | ${cs.map(_.hofFilters).max} | " +
-        s"${cs.map(_.bnlj).max} | ${cs.map(_.unboundedGlobalWindows).max} |")
-    }
-    inner.foreach { case (q, act, c) =>
-      val tag = s"$q[inner:$act]"
-      if (c.cartesian > 0) bad ::= s"$tag: cartesian product in an internal execution"
-      if (c.hofFilters > 0)
-        bad ::= s"$tag: higher-order function inside a Filter condition (internal execution)"
-      if (c.smj > InnerAllowedSmj.getOrElse(q, 0))
-        bad ::= s"$tag: sort-merge join above the inner allowance " +
-          s"(${c.smj} > ${InnerAllowedSmj.getOrElse(q, 0)})"
-      if (c.bnlj > InnerAllowedBnlj.getOrElse(q, 0))
-        bad ::= s"$tag: BroadcastNestedLoopJoin above the inner allowance " +
-          s"(${c.bnlj} > ${InnerAllowedBnlj.getOrElse(q, 0)})"
-      if (c.unboundedGlobalWindows > 0)
-        bad ::= s"$tag: single-partition window over a non-aggregated input (internal execution)"
-    }
+    println("| inner executions (query / barrier / action) | execs | max scans | max bcast | max smj | max cartesian | max HOF | max BNLJ | max window group limits | max unbounded global windows |")
+    println("|---|---|---|---|---|---|---|---|---|---|")
+    inner.toList.groupBy { case (q, i) => (q, i.barrier.getOrElse("(none)"), i.action) }
+      .toSeq.sortBy(_._1).foreach { case ((q, b, act), execs) =>
+        val cs = execs.map(_._2.counts)
+        val max = Counts(
+          cs.map(_.scans).max, cs.map(_.bcastJoins).max, cs.map(_.smj).max,
+          cs.map(_.cartesian).max, cs.map(_.hofFilters).max, cs.map(_.bnlj).max,
+          cs.map(_.windowGroupLimits).max, cs.map(_.unboundedGlobalWindows).max)
+        println(s"| $q / $b / $act | ${cs.size} | ${row(max)}")
+      }
     spark.stop()
     bad.foreach(b => System.err.println(s"[plan-audit] REGRESSION: $b"))
     if (bad.nonEmpty) sys.exit(1)

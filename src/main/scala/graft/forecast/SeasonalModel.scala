@@ -81,12 +81,17 @@ object SeasonalModel {
     TimeScale(lo, math.max(1.0, java.time.temporal.ChronoUnit.DAYS.between(lo, hi).toDouble))
   }
 
+  /** [[featureCol]] over a fit's time scale, as literals. */
+  def featureCol(ds: Column, spec: Spec, ts: TimeScale): Column =
+    featureCol(ds, spec, lit(java.sql.Date.valueOf(ts.start)), lit(ts.days))
+
   /** The feature vector as ONE array column — pure column math, evaluated
     * by codegen, no UDF. Order: [1, t, yearly sin/cos.., weekly sin/cos..,
-    * hinges..].
+    * hinges..]. The time scale is columns: literals in [[fit]], the model
+    * table's `t_start`/`t_days` in [[predict]].
     */
-  def featureCol(ds: Column, spec: Spec, ts: TimeScale): Column = {
-    val t = datediff(ds, lit(java.sql.Date.valueOf(ts.start))).cast("double") / ts.days
+  def featureCol(ds: Column, spec: Spec, tStart: Column, tDays: Column): Column = {
+    val t = datediff(ds, tStart).cast("double") / tDays
     // absolute day count drives the seasonal phase (epoch-anchored like
     // Prophet's timestamp-based Fourier features)
     val absDays = datediff(ds, lit(java.sql.Date.valueOf(LocalDate.EPOCH))).cast("double")
@@ -288,25 +293,9 @@ object SeasonalModel {
     */
   def predict(models: DataFrame, days: DataFrame, spec: Spec = Spec()): DataFrame = {
     val joined = days.join(broadcast(models), Seq("branch"))
-    // rebuild the time scale from the model table columns (constant per fit)
+    // the time scale from the model table columns (constant per fit)
     val withFeat = joined.withColumn(
-      "x", {
-        // featureCol with columnar t_start/t_days: inline the same structure
-        val t = datediff(col("ds"), col("t_start")).cast("double") / col("t_days")
-        val absDays =
-          datediff(col("ds"), lit(java.sql.Date.valueOf(LocalDate.EPOCH))).cast("double")
-        val twoPi = 2.0 * math.Pi
-        val yearly = (1 to spec.yearlyOrder).flatMap { k =>
-          val arg = absDays * (twoPi * k / 365.25)
-          Seq(sin(arg), cos(arg))
-        }
-        val weekly = (1 to spec.weeklyOrder).flatMap { k =>
-          val arg = absDays * (twoPi * k / 7.0)
-          Seq(sin(arg), cos(arg))
-        }
-        val hinges = spec.changepoints.map(c => greatest(t - lit(c), lit(0.0)))
-        array(Seq(lit(1.0), t) ++ yearly ++ weekly ++ hinges: _*)
-      })
+      "x", featureCol(col("ds"), spec, col("t_start"), col("t_days")))
     withFeat
       .withColumn("pred_log", dot(col("x"), col("coef")))
       .select(

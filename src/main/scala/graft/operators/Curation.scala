@@ -38,48 +38,34 @@ import graft.Barrier
   * one content-hash aggregate (2-3), the df-capped ONE-shuffle shingle
   * index (4 — pair work is bounded by the df cap, never all-pairs), a
   * semi-join against the banned shingle set (5), a broadcast weight join
-  * + explode (6), and one per-shard running-sum window (7). Every
-  * multi-consumer intermediate is a lazy `persist()` (cache boundary, no
-  * eager job barrier — the localCheckpoint-vs-persist note in
-  * [[Similarity.ivfPqTopK]] applies): the surviving-doc frames are
-  * corpus-shaped, and without the boundary each downstream stage would
-  * re-run the whole upstream chain.
+  * + explode (6), and one per-shard running-sum window (7). The three
+  * multi-consumer intermediates are named [[graft.Barrier]]s —
+  * `curation.cap`, `curation.exact_dedup`, `curation.clean_ids` — eager
+  * checkpoints, not caches: each downstream stage reads materialized rows
+  * instead of re-running the upstream chain, each boundary's jobs carry
+  * its name (Bench's `barrier_ms`), and PlanAudit gates each boundary's
+  * plan under that name.
   */
 object Curation {
 
   /** A pipeline invocation: the output frame plus a cleanup hook
-    * releasing every frame the run cached — the named persist boundaries
-    * AND the operators' internal localCheckpoints (shingle candidate
-    * frames, CC labels), which a snapshot-diff of the context's
-    * persistent RDDs catches without each operator having to export its
-    * internals. Call [[cleanup]] once the terminal action on [[output]]
-    * (write, collect) completes and the frame is no longer needed: a
-    * long-lived session invoking the pipeline repeatedly — the actual
-    * serving shape — would otherwise accumulate cached corpus-scale RDDs
-    * until eviction pressure. After cleanup, do NOT re-execute
-    * [[output]]: lineage-truncated internal checkpoints (the CC labels)
-    * have nothing to recompute from once their blocks are dropped —
-    * run the pipeline again instead.
+    * releasing every RDD the run checkpointed — its three named barriers
+    * AND the operators' internal ones (shingle candidate frames, CC
+    * labels), which a snapshot-diff of the context's persistent RDDs
+    * catches without each operator having to export its internals. Call
+    * [[cleanup]] once the terminal action on [[output]] (write, collect)
+    * completes and the frame is no longer needed: a long-lived session
+    * invoking the pipeline repeatedly — the actual serving shape — would
+    * otherwise accumulate checkpointed corpus-scale RDDs until eviction
+    * pressure. After cleanup, do NOT re-execute [[output]]: its
+    * lineage-truncated checkpoints have nothing to recompute from once
+    * their blocks are dropped — run the pipeline again instead.
     */
-  /** `stages` exposes the run's OWN named persist boundaries in lineage
-    * order (cap, exd, nd, clean_ids) so a timing/debug harness can
-    * materialize them incrementally and attribute cost to exactly the
-    * barriers the shipped pipeline pays — no hand-copied restatement of
-    * the chain to drift out of sync (the round-8 TimePipeline finding).
-    */
-  final case class PipelineRun(
-      output: DataFrame,
-      cleanup: () => Unit,
-      stages: Seq[(String, DataFrame)] = Nil)
+  final case class PipelineRun(output: DataFrame, cleanup: () => Unit)
 
   // -------------------------------------------------------------------
-  // Stage builders — ONE definition per stage, shared by the serving
-  // chain ([[pipelineRun]], persist boundaries) and the audit chain
-  // ([[auditStages]], lineage-cut checkpoints). Folding these closed the
-  // last hand-synchronized copy in the tree (round-8 VERDICT defect 3):
-  // the two chains can no longer drift; CurationSpec's row-identity pin
-  // remains as the regression gate for the WIRING (boundary placement),
-  // which is all that still differs.
+  // Stage builders — ONE definition per stage; [[pipelineRun]] wires
+  // them into the one chain, with a named barrier at each boundary.
   // -------------------------------------------------------------------
 
   /** Stage 1: per-source cap with quality score — and, on the classifier
@@ -102,7 +88,7 @@ object Curation {
     // and a downstream Filter would be pushed THROUGH it with the HOF
     // fold inlined into the filter condition — the audited 22x trap,
     // caught by the per-stage gate the moment it was tried. Computing
-    // them here puts them behind the SAME persist boundary as
+    // them here puts them behind the SAME barrier as
     // quality_score, so the gate filters plain attributes — and the
     // doc_id join + two corpus exchanges the old aggregate-based stats
     // needed are gone entirely.
@@ -174,7 +160,7 @@ object Curation {
       .select(col("doc_a"), col("doc_b"))
 
   /** Stage 5a: surviving (non-contaminated) doc ids — decontam-bounded,
-    * the cheap frame the serving chain persists instead of the corpus.
+    * the cheap frame the chain checkpoints instead of the corpus.
     */
   private def cleanIdsStage(
       nd: DataFrame, banned: DataFrame, decontamMinShared: Int): DataFrame =
@@ -267,40 +253,33 @@ object Curation {
       hexChars: Int = 1,
       classifier: Option[(QualityModel.LogReg, Double)] = None): PipelineRun = {
 
-    // snapshot for the cleanup diff: anything persisted from here on —
-    // named boundary or operator-internal checkpoint — belongs to this run
+    // snapshot for the cleanup diff: anything checkpointed from here on —
+    // named boundary or operator-internal barrier — belongs to this run
     val sc = docs.sparkSession.sparkContext
     val preIds = sc.getPersistentRDDs.keySet
 
     // 1. per-source cap, with quality_score — and, on the classifier
     // path, the model's five feature columns — computed IN this
-    // projection: the persist boundary below then makes every downstream
-    // threshold (stage 2's gates AND stage 2.5's sigmoid) a
-    // plain-attribute filter over InMemoryRelation leaves. Filtering on
-    // a lazily-computed score/feature column instead lets
-    // PushDownPredicate inline the formula — whose stopword terms are
-    // ArrayFilter HOFs — into the pushed Filter, re-evaluating the
-    // tokenization per row on top of the projection's own copy (the
-    // plan-audit HOF rule; caught by the round-8 per-stage audit the
-    // moment the persist blind spot was lifted). Features for ALL capped
-    // docs instead of just gate-passers is one cheap projection pass
-    // over rows this stage caches anyway — a round-8 session finding
-    // replacing the earlier classifier-path filt.persist(), which was a
-    // SECOND corpus-shaped materialization serving only as this same
-    // inlining barrier (x57 pays one corpus cache, like x53). persist:
-    // repetition and the gate below both consume this frame.
+    // projection: the barrier then makes every downstream threshold
+    // (stage 2's gates AND stage 2.5's sigmoid) a plain-attribute filter
+    // over a checkpointed scan. Filtering on a lazily-computed
+    // score/feature column instead lets PushDownPredicate inline the
+    // formula — whose stopword terms are ArrayFilter HOFs — into the
+    // pushed Filter, re-evaluating the tokenization per row on top of the
+    // projection's own copy (the plan-audit HOF rule, which gates this
+    // barrier's consumers under `curation.exact_dedup`). Features for ALL
+    // capped docs instead of just gate-passers is one cheap projection
+    // pass over rows this stage materializes anyway (x57 pays one
+    // corpus-shaped materialization, like x53). The gate and the
+    // repetition signals both consume this frame.
     val featNames =
       if (classifier.nonEmpty) QualityModel.DefaultFeatures else Seq.empty[String]
-
-    // 1. cap + scores/features, persisted: repetition and the gate both
-    // consume this frame, and the boundary is the HOF-inlining barrier
-    // (see capStage).
-    val capped = capStage(docs, maxDocsPerSource, classifier.nonEmpty).persist()
+    val capped = Barrier(capStage(docs, maxDocsPerSource, classifier.nonEmpty), "curation.cap")
 
     // 2. gates. quality_score stays attached — the near-dup retention
     // (stage 4) ranks components by it; exact dedup is the single
-    // consumer either way, and `exd`'s own cache boundary stops
-    // re-execution, so no persist here (round-7 x53 barrier finding).
+    // consumer either way, and `exd`'s own barrier stops re-execution,
+    // so no boundary here (round-7 x53 barrier finding).
     val filt = gateStage(
       capped, minQuality, maxDupLineFrac, maxTopBigramFrac, featNames)
 
@@ -311,141 +290,47 @@ object Curation {
       case Some((model, threshold)) => classifierStage(filt, model, threshold)
     }
 
-    // 3. exact dedup (smallest doc_id per content hash survives)
-    val exd = Dedup.dropExactDuplicates(gated).persist()
+    // 3. exact dedup (smallest doc_id per content hash survives). The
+    // near-dup pair stage's own barriers read this frame at construction
+    // time, so making it eager moves no work earlier.
+    val exd = Barrier(Dedup.dropExactDuplicates(gated), "curation.exact_dedup")
 
     // 4. near-dup pairs over the SURVIVING set, then quality-aware
     // retention: the component argmax keeps the cleanest member. NO
-    // persist on `nd` (round-9 job-count cut): nd = anti-join of CACHED
-    // exd against the pair-bounded loser set, whose own inputs (the CC
-    // label checkpoint, the candidate checkpoint) are already
-    // materialized — so nd's two consumers each re-run one cheap
-    // broadcast anti-join over cached blocks instead of the pipeline
-    // paying a THIRD corpus-shaped cache materialization pass.
+    // barrier on `nd` (round-9 job-count cut): nd = anti-join of
+    // checkpointed exd against the pair-bounded loser set, whose own
+    // inputs (the CC label checkpoint, the candidate checkpoint) are
+    // already materialized — so nd's two consumers each re-run one cheap
+    // broadcast anti-join over materialized blocks instead of the
+    // pipeline paying a THIRD corpus-shaped materialization pass.
     val pairs = pairStage(exd, jaccardThreshold, minShared, maxShingleDf)
     val nd = Dedup.dropNearDuplicatesBy(exd, pairs, "quality_score")
 
-    // 5. benchmark decontamination. Persist the ID LIST, not the joined
-    // corpus frame: the list is decontam-bounded (doc_ids only), so the
-    // two downstream consumers re-run just a broadcast semi join over
-    // cached `nd` instead of materializing a second corpus-shaped cache
+    // 5. benchmark decontamination. Checkpoint the ID LIST, not the
+    // joined corpus frame: the list is decontam-bounded (doc_ids only),
+    // so the two downstream consumers re-run just a broadcast semi join
+    // over `nd` instead of materializing a second corpus-shaped frame
     // (round-7 x53 barrier finding).
-    val cleanIds = cleanIdsStage(nd, banned, decontamMinShared).persist()
+    val cleanIds = Barrier(cleanIdsStage(nd, banned, decontamMinShared), "curation.clean_ids")
     val clean = nd.join(cleanIds, Seq("doc_id"), "left_semi")
 
     // 6-7. resample, then pack.
     val packed = packStage(resampleStage(clean, alpha), seqLen, hexChars)
 
-    val named = Seq(capped, exd, cleanIds)
     // one-shot latch: the snapshot diff is computed at the FIRST cleanup
     // and never again — a second call must be a no-op, not a re-diff that
-    // would sweep up whatever the session cached since (the diff is a
-    // time-window heuristic, so the run's terminal action should not
-    // overlap other persisting work in the same session; concurrent
+    // would sweep up whatever the session checkpointed since (the diff is
+    // a time-window heuristic, so the run's terminal action should not
+    // overlap other checkpointing work in the same session; concurrent
     // pipelines belong in separate sessions, the streaming module's
     // isolation rule)
     val done = new java.util.concurrent.atomic.AtomicBoolean(false)
     PipelineRun(
       output = packed,
-      stages = Seq(
-        "cap" -> capped, "exact_dedup" -> exd,
-        "near_dup_retention" -> nd, "clean_ids" -> cleanIds),
       cleanup = () => if (done.compareAndSet(false, true)) {
-        // DataFrame.unpersist for the named boundaries (also clears their
-        // cacheManager plan entries, so a later identical plan does not
-        // rebuild a half-dropped cache) ...
-        named.foreach(_.unpersist())
-        // ... then the snapshot diff for operator-internal checkpoints,
-        // which never register with the cacheManager
         sc.getPersistentRDDs.foreach { case (id, rdd) =>
           if (!preIds.contains(id)) rdd.unpersist()
         }
       })
-  }
-
-  /** Per-stage wall/row attribution of the SERVING pipeline — the
-    * x106-stage-harness treatment applied to x53/x57 (round-12 verdict
-    * ask #5: the curation rows are the bench ceiling and their
-    * run-to-run spread on unchanged code was unattributed). Runs
-    * [[pipelineRun]] and materializes its frames in lineage order, so
-    * each wall is the INCREMENTAL cost of that stage over its
-    * predecessors' already-filled caches — exactly the barriers the
-    * shipped query pays, not a rebuilt replica (the auditStages chain
-    * is deliberately different: lineage-cut copies for plan isolation).
-    * `near_dup_retention`'s wall therefore contains the pair machinery
-    * (nd is unpersisted by design — the round-9 job-count cut) and
-    * `output` contains the resample+pack tail plus nd's cheap anti-join
-    * re-run. A timing/CI tool, not the serving path.
-    */
-  def pipelineStageTimings(
-      docs: DataFrame,
-      banned: DataFrame,
-      classifier: Option[(QualityModel.LogReg, Double)] = None): Seq[(String, Double, Long)] = {
-    val run = pipelineRun(docs, banned, classifier = classifier)
-    try {
-      (run.stages :+ ("output" -> run.output)).map { case (name, df) =>
-        val t0 = System.nanoTime()
-        val rows = df.count()
-        (name, (System.nanoTime() - t0) / 1e9, rows)
-      }
-    } finally run.cleanup()
-  }
-
-  /** Stage-isolated frames for per-stage plan auditing (closes the x53
-    * blind spot PlanAudit documents: the composed pipeline's persist
-    * boundaries hide every stage behind an InMemoryTableScan, so a
-    * regression INSIDE a stage never reached the gate). Each stage here
-    * is rebuilt on a lineage-CUT (`localCheckpoint`) copy of its
-    * predecessor, so each returned frame's plan contains exactly that
-    * stage's own operators over an opaque RDD scan. Builds eagerly (one
-    * materialization per stage) — an audit/CI tool, not the serving
-    * path; parameters mirror [[pipelineRun]].
-    */
-  def auditStages(
-      docs: DataFrame,
-      banned: DataFrame,
-      maxDocsPerSource: Int = 20,
-      minQuality: Double = 0.65,
-      maxDupLineFrac: Double = 0.2,
-      maxTopBigramFrac: Double = 0.1,
-      jaccardThreshold: Double = 0.5,
-      minShared: Int = 2,
-      maxShingleDf: Int = 100,
-      decontamMinShared: Int = 10,
-      alpha: Double = 0.7,
-      seqLen: Int = 512,
-      hexChars: Int = 1,
-      classifier: Option[(QualityModel.LogReg, Double)] = None): Seq[(String, DataFrame)] = {
-    // the SAME stage builders as pipelineRun — only the boundary kind
-    // differs (persist there, lineage-cut checkpoint here)
-    val featNames =
-      if (classifier.nonEmpty) QualityModel.DefaultFeatures else Seq.empty[String]
-    val cap = capStage(docs, maxDocsPerSource, classifier.nonEmpty)
-    val capC = Barrier(cap, "curation.cap")
-    val gates = gateStage(
-      capC, minQuality, maxDupLineFrac, maxTopBigramFrac, featNames)
-    val gatesC = Barrier(gates, "curation.gates")
-    val (clsStage, gatedC) = classifier match {
-      case None => (Nil, gatesC)
-      case Some((model, threshold)) =>
-        val g = classifierStage(gatesC, model, threshold)
-        (Seq("classifier" -> g), Barrier(g, "curation.classifier"))
-    }
-    val exd = Dedup.dropExactDuplicates(gatedC)
-    val exdC = Barrier(exd, "curation.exact_dedup")
-    val pairs = pairStage(exdC, jaccardThreshold, minShared, maxShingleDf)
-    val pairsC = Barrier(pairs, "curation.near_dup_pairs")
-    val nd = Dedup.dropNearDuplicatesBy(exdC, pairsC, "quality_score")
-    val ndC = Barrier(nd, "curation.near_dup_retention")
-    val clean = ndC.join(
-      cleanIdsStage(ndC, banned, decontamMinShared), Seq("doc_id"), "left_semi")
-    val cleanC = Barrier(clean, "curation.decontam")
-    val resampled = resampleStage(cleanC, alpha)
-    val resampledC = Barrier(resampled, "curation.resample")
-    val pack = packStage(resampledC, seqLen, hexChars)
-    Seq("cap" -> cap, "gates" -> gates) ++ clsStage ++ Seq(
-      "exact_dedup" -> exd, "near_dup_pairs" -> pairs,
-      "near_dup_retention" -> nd, "decontam" -> clean,
-      "resample" -> resampled, "pack" -> pack)
   }
 }

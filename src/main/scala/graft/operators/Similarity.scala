@@ -1053,9 +1053,9 @@ object Similarity {
       .select(col("cell"), col("vec_id"), signBits("embedding").as("bits"), col("embedding"))
     // one file per cell-range: repartitionByRange gives each output file
     // a tight [min,max] on cell, which is exactly what pruneFilesIn eats
-    sink.commit(
+    Barrier.named(corpus, "ivfbin.index")(sink.commit(
       assigned.repartitionByRange(cents.length, col("cell"), col("vec_id")),
-      statsColumns = Seq("cell"))
+      statsColumns = Seq("cell")))
   }
 
   /** Binary ANN served from a [[buildBinaryIvfIndex]] snapshot with IVF
@@ -1085,10 +1085,12 @@ object Similarity {
     val spark = probes.sparkSession
     val packedProbes = probes.select(
       col("q_id"), col("q_emb"), signBits("q_emb").as("q_bits"))
-    val routing = nearestCells(
-        probes.select(col("q_id"), col("q_emb")), centroidsDF(spark, cents), nprobe)
-      .select(col("q_id"), col("cell"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val routing = Barrier.named(probes, "ivfbin.route") {
+      nearestCells(
+          probes.select(col("q_id"), col("q_emb")), centroidsDF(spark, cents), nprobe)
+        .select(col("q_id"), col("cell"))
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+    }
     val cellSet = routing.map(_._2).distinct.sorted.toSeq
     import spark.implicits._
     val routed = routing.toSeq.toDF("q_id", "cell")

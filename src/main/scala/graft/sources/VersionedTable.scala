@@ -68,9 +68,11 @@ import graft.Barrier
   * whether its batch still applies). The check is on the base: a write
   * that reads the table publishes on the version it read ([[upsert]] and
   * the maintenance commits), so a commit landing between its read and its
-  * link is a conflict, never silently overwritten. [[commit]] and
-  * [[appendCommit]] take the head when they start, so a caller that built
-  * `df` from an older snapshot itself is not told. POSIX and HDFS provide the
+  * link is a conflict, never silently overwritten. [[appendCommit]]
+  * publishes on the version its caller passes (`on`), so a caller that
+  * built `df` from a version it read is told too. [[commit]], and an
+  * [[appendCommit]] given no version, take the head when they start, so
+  * a caller that built `df` from an older snapshot itself is not told. POSIX and HDFS provide the
   * put-if-absent primitive; an object store needs its own (a conditional
   * put, or a catalog compare-and-swap) — only the link step moves.
   * A record that cannot be parsed is a corrupt table, and every read and
@@ -255,6 +257,12 @@ final class VersionedTable(val root: String) {
     *             can replay its last batch after a crash) tags each
     *             commit with its batch id and skips when the published
     *             tag already matches.
+    * @param on   the version the append builds on and publishes on
+    *             (None: a never-committed table). A caller that derived
+    *             `df` from a version it read passes that version, and a
+    *             commit landing since is a [[CommitConflictException]]
+    *             instead of rows carried in unchecked; the default is the
+    *             head when the call starts.
     */
   def appendCommit(
       df: DataFrame,
@@ -262,8 +270,9 @@ final class VersionedTable(val root: String) {
       statsColumns: Seq[String] = Nil,
       bloomColumns: Seq[String] = Nil,
       bloomBits: Int = DefaultBloomBits,
-      allowEvolution: Boolean = false): Long = {
-    val prevSnap = base().map(published)
+      allowEvolution: Boolean = false,
+      on: Option[Long] = base()): Long = {
+    val prevSnap = on.map(published)
     val prev = prevSnap.map(_.files).getOrElse(Nil)
     // hive partition keys derived from the previous manifest's own paths
     // (empty for unpartitioned chains); the batch writes under the same

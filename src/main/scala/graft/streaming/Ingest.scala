@@ -370,7 +370,9 @@ object Ingest {
     *      inverted index, so cost is batch-x-corpus-candidates, never
     *      corpus self-pairs;
     *   3. append the survivors: O(batch) bytes written, corpus files
-    *      carried by manifest reference.
+    *      carried by manifest reference, published on the version step 2
+    *      read — a commit by another writer in between fails the batch
+    *      with a conflict, and the replay dedups against the new head.
     *
     * Duplicate-vs-self WITHIN a batch beyond exact (two near-dup docs in
     * one batch, neither in the corpus) is intentionally left to the next
@@ -454,7 +456,10 @@ object Ingest {
             }
             // reused by the corpus commit AND the index append
             val survivorsC = Barrier(survivors, "ingest.survivors")
-            val newVersion = corpus.appendCommit(survivorsC, Some(tag))
+            // published on the version the survivors were deduped
+            // against: a commit landing since is a conflict that fails
+            // the batch, and the replay dedups it against the new head
+            val newVersion = corpus.appendCommit(survivorsC, Some(tag), on = prevVersion)
             shingleIndex.foreach { idx =>
               val freshShingles = graft.operators.TextOps.shingles(survivorsC, 3)
               if (prevVersion.isEmpty)

@@ -2,11 +2,11 @@ package org.apache.spark
 
 /** Access shim for `private[spark]` test helpers the plan audit needs —
   * the same package-placement technique Spark's own test utilities use
-  * (e.g. `org.apache.spark.sql.test`). Used ONLY by [[graft.PlanAudit]]:
-  * QueryExecutionListener events are delivered asynchronously on the
-  * shared listener bus, so the audit must drain the bus after each query
-  * before attributing captured executions to it — without this, a slow
-  * delivery could attribute one query's internal execution to the next.
+  * (e.g. `org.apache.spark.sql.test`). Listener events are delivered
+  * asynchronously on the shared listener bus, so [[graft.PlanAudit]] and
+  * [[graft.Bench]] drain the bus after each query before attributing
+  * captured executions and jobs to it — without this, a slow delivery
+  * could attribute one query's internal execution to the next.
   */
 object GraftBusBridge {
   /** Block until every queued listener event has been delivered. */

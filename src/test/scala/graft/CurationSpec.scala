@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -188,25 +190,28 @@ class CurationSpec extends AnyFunSuite {
     sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
   }
 
-  test("auditStages mirrors the shipped pipeline: final stage row-identical, classifier on and off") {
-    // the audit harness restates the chain on lineage-cut copies — this
-    // pin makes the restatement structurally falsifiable: any drift
-    // between auditStages and pipeline() (the round-8 TimePipeline class
-    // of bug) shows up as a row diff here
-    def rows(df: DataFrame) =
-      df.collect().map(r => r.toSeq.map(v => String.valueOf(v)).mkString("|")).sorted.toSeq
+  test("pipelineRun runs each of its three named barriers once, classifier on and off") {
     val banned = corpus().filter(col("doc_id") <= 2)
     val model = graft.operators.QualityModel.fit(
       graft.operators.QualityModel.qualityFeatures(corpus())
         .join(TextOps.qualityScore(corpus()), Seq("doc_id"))
         .withColumn("label", (col("quality_score") >= 0.65).cast("int")))
     for (cls <- Seq(None, Some((model, 0.5)))) {
-      val full = rows(Curation.pipeline(
-        corpus(), banned, maxDocsPerSource = 100, decontamMinShared = 5, classifier = cls))
-      val staged = Curation.auditStages(
+      val (_, barriers) = SparkJobs.barriers(spark)(Curation.pipeline(
         corpus(), banned, maxDocsPerSource = 100, decontamMinShared = 5, classifier = cls)
-      assert(rows(staged.last._2) === full, s"classifier=$cls")
+        .count())
+      assert(
+        barriers.filter(_._1.startsWith("curation.")) ===
+          Map("curation.cap" -> 1, "curation.exact_dedup" -> 1, "curation.clean_ids" -> 1),
+        s"classifier=$cls: $barriers")
     }
+    // the boundaries are barriers, never lazy caches (code, not comments)
+    val src = Paths.get("src/main/scala/graft/operators/Curation.scala")
+    assert(Files.isRegularFile(src), s"run from the project root: ${src.toAbsolutePath}")
+    val code = new String(Files.readAllBytes(src), "UTF-8")
+      .replaceAll("(?s)/\\*.*?\\*/", "")
+      .replaceAll("//[^\n]*", "")
+    assert("""\bpersist\(""".r.findFirstIn(code).isEmpty)
   }
 
   test("opt-in classifier stage drops model-rejected docs and nothing else changes") {

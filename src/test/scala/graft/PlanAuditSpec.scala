@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Dedup
+import graft.operators.{Curation, Dedup}
 import graft.sources.Tables
 
 /** The audit must flag the real optimizer behavior that produced two 22x
@@ -55,17 +55,17 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("per-stage gate: a stage regressed to a cartesian or excess BNLJ fails") {
-    // a stage whose join degenerated to a cartesian product must trip the
-    // same violations() the main per-query gate runs
+    // a barrier whose join degenerated to a cartesian product must trip
+    // the same gate the main per-query audit runs, under its own name
     val burst = PlanAudit.auditExecuted(
       docs.limit(20).crossJoin(docs.limit(20).select(col("doc_id").as("other"))))
     assert(
-      PlanAudit.violations("x53/gates", burst, allowedSmj = 2, allowedBnlj = 0, requireWgl = false)
+      PlanAudit.gate("curation.exact_dedup", burst)
         .exists(v => v.contains("cartesian") || v.contains("BroadcastNestedLoopJoin")),
       s"regressed stage not flagged: $burst")
     // and a clean equi-join shape passes
     val ok = PlanAudit.auditExecuted(docs.join(broadcast(docs.select("doc_id").limit(5)), Seq("doc_id")))
-    assert(PlanAudit.violations("x53/gates", ok, 2, 0, requireWgl = false).isEmpty)
+    assert(PlanAudit.gate("curation.exact_dedup", ok).isEmpty)
   }
 
   test("global-window gate: unbounded single-partition windows flag; aggregate-bounded pass") {
@@ -154,20 +154,25 @@ class PlanAuditSpec extends AnyFunSuite {
     }
   }
 
-  test("curation stage audit: every lineage-cut stage sits inside its pinned allowances") {
-    val stages = graft.operators.Curation.auditStages(
-      docs, banned = docs.filter(col("doc_id") < 50))
-    assert(stages.map(_._1) === Seq(
-      "cap", "gates", "exact_dedup", "near_dup_pairs",
-      "near_dup_retention", "decontam", "resample", "pack"))
-    stages.foreach { case (stage, df) =>
-      val c = PlanAudit.auditExecuted(df)
-      val v = PlanAudit.violations(
-        s"x53/$stage", c,
-        PlanAudit.StageAllowedSmj.getOrElse(stage, 0),
-        PlanAudit.StageAllowedBnlj.getOrElse(stage, 0),
-        PlanAudit.StageRequiredWgl.contains(stage))
-      assert(v.isEmpty, s"stage $stage violates its pin: $v ($c)")
+  test("every x53 inner execution passes the gate under its barrier name's allowance") {
+    val (_, execs) = PlanAudit.innerExecutions(spark)(PlanAudit.auditExecuted(
+      Curation.pipeline(docs, banned = docs.filter(col("doc_id") < 50))))
+    val names = execs.flatMap(_.barrier).toSet
+    assert(Set("curation.cap", "curation.exact_dedup", "curation.clean_ids").subsetOf(names), names)
+    execs.foreach { i =>
+      assert(PlanAudit.gate(i.name, i.counts).isEmpty, s"${i.name} (${i.action}): ${i.counts}")
     }
+    // the cap barrier's plan is where the per-source top-k's group limit lives
+    assert(execs.filter(_.barrier.contains("curation.cap")).map(_.counts.windowGroupLimits).min > 0)
+  }
+
+  test("a RequiredWindowGroupLimit name without a WindowGroupLimitExec is a violation") {
+    val (_, execs) = PlanAudit.innerExecutions(spark)(
+      Barrier(docs.select("doc_id", "source"), "curation.cap"))
+    val cap = execs.filter(_.barrier.contains("curation.cap"))
+    assert(cap.map(_.action) === Seq("localCheckpoint"))
+    assert(cap.head.counts.windowGroupLimits === 0)
+    assert(PlanAudit.gate(cap.head.name, cap.head.counts)
+      .exists(_.startsWith("curation.cap: top-k lost its WindowGroupLimit")))
   }
 }

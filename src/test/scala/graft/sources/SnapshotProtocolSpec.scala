@@ -189,6 +189,28 @@ class SnapshotProtocolSpec extends AnyFunSuite {
     }
   }
 
+  test("two writers, the second lands before the first's append on the version it read: conflict") {
+    val root = freshRoot()
+    val (a, b) = (VersionedTable(root), VersionedTable(root))
+    base(a)
+    // a reads v0 and derives its batch from it; b's commit lands first
+    val read = a.latestVersion()
+    assert(b.appendCommit(batch(Seq(50L)), tag = Some("b")) === 1L)
+    val e = intercept[CommitConflictException] {
+      a.appendCommit(batch(Seq(40L)), tag = Some("a"), on = read)
+    }
+    assert(e.version === 1L)
+    assert(names(Paths.get(root, "_log")) === Seq("0.json", "1.json"))
+    assert(a.committedTags() === Set("t0", "b"))
+    assert(rows(a.read(spark)) === ((0L until 20L) :+ 50L).map(i => s"[$i,s$i]").sorted)
+    assertClean(a)
+    // re-derived on the new head, the append lands over both writes
+    assert(a.appendCommit(batch(Seq(40L)), tag = Some("a"), on = a.latestVersion()) === 2L)
+    assert(rows(a.read(spark)) === ((0L until 20L) ++ Seq(40L, 50L)).map(i => s"[$i,s$i]").sorted)
+    // an append given no version takes the head when it starts, as before
+    assert(b.appendCommit(batch(Seq(60L))) === 3L)
+  }
+
   test("4 writers x 10 appends retrying on conflict: every batch lands once, versions contiguous") {
     val root = freshRoot()
     base(VersionedTable(root))
