@@ -1,5 +1,6 @@
 package graft
 
+import java.util.UUID
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 import scala.jdk.CollectionConverters._
@@ -12,6 +13,7 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec, SortMergeJoinExec}
+import org.apache.spark.sql.execution.streaming.runtime.IncrementalExecution
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 import org.apache.spark.sql.graftshim.ExecutionEnd
@@ -418,7 +420,7 @@ object PlanAudit {
     if (c.cartesian > 0) bad ::= s"$name: cartesian product"
     if (c.bnlj > allowedBnlj)
       bad ::= s"$name: BroadcastNestedLoopJoin above allowance " +
-        "(a join condition likely became non-equi — only the documented " +
+        "(a join condition likely became non-equi; only the documented " +
         "exhaustive ADC/brute-force baselines may BNLJ)"
     if (c.smj > allowedSmj)
       bad ::= s"$name: sort-merge join (expected broadcast at this scale)"
@@ -428,13 +430,13 @@ object PlanAudit {
         "the rank shuffle is back to sorting every candidate per probe)"
     if (c.hofFilters > 0)
       bad ::= s"$name: higher-order function inside a Filter condition " +
-        "(pushed-down filter re-evaluates an inlined array expression per element — " +
+        "(pushed-down filter re-evaluates an inlined array expression per element; " +
         "guard inside the projection with when/otherwise instead; " +
         "this class caused 22x regressions twice: TextOps r1, winnowFingerprints r2)"
     if (c.unboundedGlobalWindows > 0)
       bad ::= s"$name: single-partition window over a non-aggregated input " +
         "(a global WindowExec must sit above an aggregation/TakeOrdered/limit " +
-        "boundary or corpus-cardinality rows land on ONE partition — the " +
+        "boundary or corpus-cardinality rows land on ONE partition: the " +
         "Vocab.rankVocab / Sketches.histQuantiles contract)"
     bad
   }
@@ -450,9 +452,10 @@ object PlanAudit {
 
   /** One captured inner execution: the [[Barrier]] name its jobs carried
     * (None when none did), its action (`localCheckpoint`, `collect`,
-    * `command`, …) and its audited plan.
+    * `command`, …), its audited plan and, for a streaming micro-batch, the
+    * run of the streaming query it belongs to.
     */
-  final case class Inner(barrier: Option[String], action: String, counts: Counts) {
+  final case class Inner(barrier: Option[String], action: String, counts: Counts, streamRun: Option[UUID] = None) {
     /** The name it is gated under; an unnamed one matches no table. */
     def name: String = barrier.getOrElse(s"(unnamed $action)")
   }
@@ -483,7 +486,11 @@ object PlanAudit {
       val out = body
       org.apache.spark.GraftBusBridge.drain(sc)
       (out, ended.asScala.toSeq.map { case (id, action, qe) =>
-        Inner(Option(barrierOf.get(id)), action, audit(qe.executedPlan))
+        val run = qe match {
+          case batch: IncrementalExecution => Some(batch.runId)
+          case _ => None
+        }
+        Inner(Option(barrierOf.get(id)), action, audit(qe.executedPlan), run)
       })
     } finally sc.removeSparkListener(listener)
   }
@@ -511,19 +518,24 @@ object PlanAudit {
 
     // ---- inner-executions sub-table: one row per (query, barrier,
     // action) with execution count and PER-EXECUTION MAX of each counter
-    // — the loop shapes the main table structurally cannot see.
+    // — the loop shapes the main table structurally cannot see. A
+    // streaming query's micro-batches form their own row, counted in runs
+    // of the query: how many micro-batches a run takes depends on trigger
+    // timing, so only the run count repeats exactly.
     println()
     println("| inner executions (query / barrier / action) | execs | max scans | max bcast | max smj | max cartesian | max HOF | max BNLJ | max window group limits | max unbounded global windows |")
     println("|---|---|---|---|---|---|---|---|---|---|")
-    inner.toList.groupBy { case (q, i) => (q, i.barrier.getOrElse("(none)"), i.action) }
-      .toSeq.sortBy(_._1).foreach { case ((q, b, act), execs) =>
-        val cs = execs.map(_._2.counts)
-        val max = Counts(
-          cs.map(_.scans).max, cs.map(_.bcastJoins).max, cs.map(_.smj).max,
-          cs.map(_.cartesian).max, cs.map(_.hofFilters).max, cs.map(_.bnlj).max,
-          cs.map(_.windowGroupLimits).max, cs.map(_.unboundedGlobalWindows).max)
-        println(s"| $q / $b / $act | ${cs.size} | ${row(max)}")
-      }
+    inner.toList.groupBy { case (q, i) =>
+      (q, i.barrier.getOrElse("(none)"), if (i.streamRun.isEmpty) i.action else s"${i.action} (micro-batch runs)")
+    }.toSeq.sortBy(_._1).foreach { case ((q, b, act), execs) =>
+      val cs = execs.map(_._2.counts)
+      val runs = execs.flatMap(_._2.streamRun).distinct
+      val max = Counts(
+        cs.map(_.scans).max, cs.map(_.bcastJoins).max, cs.map(_.smj).max,
+        cs.map(_.cartesian).max, cs.map(_.hofFilters).max, cs.map(_.bnlj).max,
+        cs.map(_.windowGroupLimits).max, cs.map(_.unboundedGlobalWindows).max)
+      println(s"| $q / $b / $act | ${if (runs.isEmpty) cs.size else runs.size} | ${row(max)}")
+    }
     spark.stop()
     bad.foreach(b => System.err.println(s"[plan-audit] REGRESSION: $b"))
     if (bad.nonEmpty) sys.exit(1)

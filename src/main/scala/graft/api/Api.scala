@@ -64,9 +64,14 @@ object Api {
     *     built from driver rows, predicted over the window (the per-day
     *     `SeasonalModel.predict` join included), folds into one local
     *     relation at optimization ([[graft.LocalFold]]);
-    *   - with a move type, one collect of the branch's percentage rows for
-    *     that type in the (at most three) months the input date and the
-    *     window touch — `pct` partitioned by `month` prunes to those files;
+    *   - with a move type, the branch's percentage rows for that type in
+    *     the (at most three) months the input date and the window touch.
+    *     When `pct` is a snapshot read (`VersionedTable.readVersion`, under
+    *     renames and integral widening casts), they come from
+    *     [[SliceIndex]], the driver index of the snapshot's data files,
+    *     with no Spark job; the month predicate prunes the files as it
+    *     prunes a scan. Any other `pct` (a checkpointed or computed frame)
+    *     is queried for them, one job;
     *   - only when that slice is empty, a `limit(1)` probe for the move
     *     type anywhere in `pct` (main.py:204-209: unknown => None).
     * The fallback chain and the summary's aggregates run on the driver
@@ -74,7 +79,7 @@ object Api {
     * [[Forecast.summaryColumns]], the same definitions the set-oriented
     * oracle queries use, resolved once per session ([[Formulas]]) and
     * evaluated on the driver for this request's rows: the request plans
-    * no query beyond its two reads. Both results are local-relation
+    * no query beyond its reads. Both results are local-relation
     * Datasets: collecting them runs no Spark job. An unknown branch
     * returns two empty Datasets.
     */
@@ -106,14 +111,16 @@ object Api {
     val lookup: Option[(String, LocalDate => Double)] = input.move_type.flatMap { mt =>
       val (start, end) = Forecast.windowClamp(inputDate, today)
       val months = Seq(inputDate, start, end).map(_.getMonthValue.toLong).distinct
-      val slice = pct
+      val slice = SliceIndex.slice(spark, pct, input.branch, mt, months).getOrElse(pct
         .filter(col("branch") === input.branch && col("move_type") === mt &&
           col("month").isin(months: _*) && col("avg_percentage").isNotNull)
         .select(col("month").cast("int"), col("day").cast("int"), col("avg_percentage"))
-        .collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
+        .collect().toSeq
+        .map(r => (r.getInt(0), r.getInt(1), r.getDouble(2))))
+        // one order whichever path read it: the month averages sum in it
+        .sorted(Ordering.Tuple3(Ordering.Int, Ordering.Int, Ordering.Double.TotalOrdering))
       if (slice.isEmpty && pct.filter(col("move_type") === mt).limit(1).collect().isEmpty) None
-      else Some(mt -> Forecast.fallbackPctLocal(slice.toSeq))
+      else Some(mt -> Forecast.fallbackPctLocal(slice))
     }
     val inputPct = lookup.fold(Forecast.NoMoveTypePct)(_._2(inputDate))
     val looked = days.toSeq.map { r =>

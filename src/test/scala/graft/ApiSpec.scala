@@ -13,7 +13,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.api.{Api, DailyForecast, ForecastInput, ForecastSummary}
+import graft.api.{Api, DailyForecast, ForecastInput, ForecastSummary, SliceIndex}
 import graft.forecast.SeasonalModel
 import graft.operators.{CrossRound, Forecast, Percentages}
 import graft.sources.{Tables, VersionedTable}
@@ -105,31 +105,42 @@ class ApiSpec extends AnyFunSuite {
   def pctAt(table: VersionedTable, v: Long): DataFrame =
     table.readVersion(spark, v).withColumn("month", col("month").cast("long"))
 
-  def answer(table: VersionedTable, v: Long, input: ForecastInput = request): (Seq[String], Seq[String]) = {
-    val (daily, summary) = Api.forecast(spark, input, localModel, pctAt(table, v), ServingQueries.Today)
+  def answer(table: VersionedTable, v: Long, input: ForecastInput = request): (Seq[String], Seq[String]) =
+    answerFrom(pctAt(table, v), input)
+
+  def answerFrom(pct: DataFrame, input: ForecastInput = request): (Seq[String], Seq[String]) = {
+    val (daily, summary) = Api.forecast(spark, input, localModel, pct, ServingQueries.Today)
     (daily.collect().map(_.toString).sorted.toSeq, summary.collect().map(_.toString).toSeq)
   }
 
   /** The Spark jobs `body` submits from this thread. */
   def jobsIn[T](body: => T): (T, Int) = SparkJobs.in(spark)(body)
 
-  test("one request with a move type runs at most 4 Spark jobs; collecting its results runs none") {
+  test("a warm known-type request runs no Spark job; an unknown type runs only the probe") {
     val table = newTable()
     val pct = pctAt(table, 0L)
-    Seq(request, request.copy(move_type = Some("NoSuchType"))).foreach { input =>
+    val unknown = "NoSuchType"
+    Seq(request, request.copy(move_type = Some(unknown))).foreach { input =>
       answer(table, 0L, input) // warm
       val ((daily, summary), callJobs) = jobsIn(Api.forecast(spark, input, localModel, pct, ServingQueries.Today))
       val (_, collectJobs) = jobsIn((daily.collect(), summary.collect()))
       assert(daily.collect().nonEmpty && summary.collect().length === 1, input)
-      assert(callJobs > 0, "the probe must see the request's reads")
-      assert(callJobs + collectJobs <= 4, s"$input ran $callJobs + $collectJobs jobs")
       assert(collectJobs === 0, s"$input: collecting the results ran $collectJobs jobs")
+      // the slice comes from the snapshot's file index: only the
+      // unknown-type probe (main.py:204-209) still queries `pct`
+      val (_, probeJobs) = jobsIn(pct.filter(col("move_type") === unknown).limit(1).collect())
+      val want = if (input.move_type.contains(unknown)) probeJobs else 0
+      assert(callJobs === want, s"$input ran $callJobs jobs")
     }
   }
 
   test("a reader pinned to a snapshot sees it whole while an upsert publishes the next one") {
+    // the quiet answers come from the query path, the racing ones from the
+    // file index: a v1 answer equal to the v1 query's never came from a v0
+    // file's entry
     val table = newTable()
-    val quiet0 = answer(table, 0L)
+    def byQuery(v: Long) = answerFrom(pctAt(table, v).filter(lit(true)))
+    val quiet0 = byQuery(0L)
     val updates = Percentages.percentages(spark, sf)
       .withColumn("avg_percentage", lit(100.0) - col("avg_percentage"))
     val seen = Seq.newBuilder[(Long, (Seq[String], Seq[String]))]
@@ -141,8 +152,9 @@ class ApiSpec extends AnyFunSuite {
     }
     val published = Await.result(writer, 5.minutes)
     assert(published === 1L)
-    val quiet1 = answer(table, 1L)
+    val quiet1 = byQuery(1L)
     assert(quiet1 !== quiet0, "the upsert must change the answer, or this spec proves nothing")
+    seen += 1L -> answer(table, 1L)
     seen.result().foreach { case (v, got) =>
       assert(got === (if (v == 0L) quiet0 else quiet1), s"read at version $v")
     }
@@ -240,6 +252,45 @@ class ApiSpec extends AnyFunSuite {
     assert(bad.isEmpty, s"${bad.size} mismatching cases, first:\n${bad.take(3).mkString("\n")}")
   }
 
+  // -------------------- differential: file index vs query --------------
+  // The cases above against committed snapshots of the sf0.01 percentages,
+  // answered from the snapshots' file index and from the query over them:
+  // `filter(lit(true))` is no shape the index serves, so that frame takes
+  // the query.
+
+  lazy val snapshots: Seq[(String, DataFrame)] = {
+    val root = Files.createTempDirectory("api-index")
+    val chain = VersionedTable(root.resolve("chain").toString)
+    Percentages.upsertPercentagesSnapshot(spark, pct01, chain)
+    // v1 rewrites January and February and drops every fourth day's
+    // percentage there, so the null filter and the month fallback meet it
+    Percentages.upsertPercentagesSnapshot(spark, pct01.filter(col("month") <= 2).withColumn("avg_percentage",
+      when(col("day") % 4 === 0, lit(null).cast("double")).otherwise(lit(100.0) - col("avg_percentage"))), chain)
+    val unpartitioned = VersionedTable(root.resolve("unpartitioned").toString)
+    unpartitioned.upsert(spark, pct01, Seq("branch", "move_type", "month", "day"))
+    Seq(
+      "partitioned v0, month widened" -> chain.readVersion(spark, 0L).withColumn("month", col("month").cast("long")),
+      "partitioned v1" -> chain.readVersion(spark, 1L),
+      "unpartitioned" -> unpartitioned.readVersion(spark, 0L))
+  }
+
+  test("the snapshot file index answers every case as the query over the snapshot does") {
+    for ((name, indexed) <- snapshots) {
+      val queried = indexed.filter(lit(true))
+      assert(SliceIndex.slice(spark, indexed, branches.head, moveTypes.head, Seq(1L)).isDefined, name)
+      assert(SliceIndex.slice(spark, queried, branches.head, moveTypes.head, Seq(1L)).isEmpty, name)
+      val bad = cases.flatMap { c =>
+        def respond(pct: DataFrame) = {
+          val (daily, summary) = Api.forecast(spark, ForecastInput(c.date.toString, c.branch, c.moveType), flat, pct, today)
+          (daily.collect().toSeq.sortBy(_.ds.getTime), summary.collect().toSeq)
+        }
+        val (got, want) = (respond(indexed), respond(queried))
+        if (got == want) None else Some(s"$c:\n  index $got\n  query $want")
+      }
+      assert(bad.isEmpty, s"$name: ${bad.size} mismatching cases, first:\n${bad.take(3).mkString("\n")}")
+    }
+  }
+
   test("the cases hit every fallback level: day, month and default") {
     val keys = pct01.select(col("branch"), col("move_type"), col("month").cast("int"), col("day").cast("int"))
       .as[(String, String, Int, Int)].collect()
@@ -257,11 +308,11 @@ class ApiSpec extends AnyFunSuite {
     assert(levels.toSet === Set("day", "month", "default"))
   }
 
-  test("a warm request — head version, snapshot read, forecast, collect — runs at most 1 Spark job") {
+  test("a warm request: head version, snapshot read, forecast and collect run no Spark job") {
     // the benchmark's request shape: the per-day model predicted over the
     // requested branch's window, the percentages read from the head snapshot;
-    // the model is local, so its collect folds on the driver (LocalFold) and
-    // the percentage slice is the one job
+    // the model is local, so its collect folds on the driver (LocalFold), and
+    // the percentage slice comes from the snapshot's file index
     val table = newTable()
     def call(): (Array[DailyForecast], Array[ForecastSummary]) = {
       val date = LocalDate.parse(request.date)
@@ -277,7 +328,7 @@ class ApiSpec extends AnyFunSuite {
     call() // warm
     val ((daily, summary), jobs) = jobsIn(call())
     assert(daily.nonEmpty && daily.forall(_.comment_class != "no_move_type") && summary.length === 1)
-    assert(jobs <= 1, s"a warm request ran $jobs jobs")
+    assert(jobs === 0, s"a warm request ran $jobs jobs")
   }
 
   test("concurrent requests answer as they do one at a time, on the same four prepared formulas") {

@@ -68,6 +68,15 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(PlanAudit.gate("curation.exact_dedup", ok).isEmpty)
   }
 
+  test("every violation message is ASCII, so any console encoding prints it") {
+    val all = PlanAudit.Counts(
+      scans = 1, bcastJoins = 0, smj = 1, cartesian = 1, hofFilters = 1, bnlj = 1,
+      windowGroupLimits = 0, unboundedGlobalWindows = 1)
+    val messages = PlanAudit.violations("q", all, 0, 0, requireWgl = true)
+    assert(messages.size === 6, messages)
+    messages.foreach(m => assert(m.forall(_ < 128), m))
+  }
+
   test("global-window gate: unbounded single-partition windows flag; aggregate-bounded pass") {
     import org.apache.spark.sql.expressions.Window
     // a global window directly over corpus rows — the regression the
